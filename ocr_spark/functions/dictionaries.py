@@ -89,86 +89,139 @@ SPELLING_PATTERNS: list[tuple[re.Pattern, str]] = [
 # below is an original re-expression of those published substitution rules.
 # ---------------------------------------------------------------------------
 
-_MONTHS = r"(januari|februari|maret|april|mei|juni|juli|agustus|september|oktober|november|desember)"
-
-#: (pattern, replacement-template) pairs, applied in order, IGNORECASE.
-CURRENCY_RULES: list[tuple[re.Pattern, str]] = [
-    (re.compile(p, re.IGNORECASE), r)
-    for p, r in [
-        # Rp.XXX.-- / Rp.XXX,-- -> "Rp XXX,-"
-        (r"Rp\.?\s*(\d+(?:[.,]\d+)*)\s*[-.,]+\s*[-]+", r"Rp \1,-"),
-        # Rp.XXX / RpXXX -> "Rp XXX"
-        (r"Rp\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1"),
-        # OCR misreads of the currency marker: Ru. / Rpy
-        (r"Ru\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1"),
-        (r"R[Pp]y\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1"),
-        # Orphan amount where the marker was lost to noise: "..277" -> "Rp 277"
-        (r"(^|\s)[.:]+(\d+(?:[.,]\d+)*)(?=\s|$|[-.,])", r"\1Rp \2"),
-        # Year repair, month context: "september 962" -> "september 1962"
-        (_MONTHS + r"\s*[,.]*\s*([98]\d{2})(?!\d)", r"\1 1\2"),
-        # "97l" -> "1971" (trailing l/I/1 read as the last digit)
-        (_MONTHS + r"\s*[,.]*\s*([98]\d)[lI1](?!\d)", r"\1 1\g<2>1"),
-        # "ll Maret" -> "11 Maret"
-        (r"\b([lI]{2})\s+" + _MONTHS, r"11 \2"),
-        # Split year "19 71" -> "1971", month context only
-        (_MONTHS + r"\s*[,.]*\s*(19|20)\s+(\d{2})(?!\d)", r"\1 \2\3"),
-        # Specific amount misread
-        (r"25\s*[,.]\s*[zZ]00", r"25.100"),
-        # Spelled-number repairs
-        (r"\b[Pp][lI1][hbn]\b", r"puluh"),
-        (r"\b(ke\s*lima|kelima)\s+(ribu|ratus)", r"lima \2"),
-        (r"\bs[o0a]ratus\b", r"seratus"),
-        # Specific name repairs
-        (r"\b[Kk]asm\s*[.,]\s*nem\b", r"Kasminem"),
-        (r"\b[Ss]ukati[l1I]\b", r"Sukati"),
-        (r"\b[Mm]aineh\b", r"Mainah"),
-    ]
-]
-
 _DIGIT_LOOKALIKES = str.maketrans("lOoIzZsSb", "100122556")
 _HAS_LOOKALIKE = re.compile(r"[lOoIzZsS]")
-_HAS_DIGIT = re.compile(r"\d")
+#: Unicode ``\d`` (any decimal digit, not just 0-9)
+HAS_DIGIT = re.compile(r"\d")
 
 
-def fix_digit_lookalikes(num: str) -> str:
-    """Translate letter-digit lookalikes inside a mixed letters+digits run
-    (post-``Rp`` amounts): l/I->1, O/o->0, z/Z->2, s/S->5, b->6."""
-    if _HAS_LOOKALIKE.search(num) and _HAS_DIGIT.search(num):
+def fix_digit_lookalikes(m: re.Match) -> str:
+    """Translate letter-digit lookalikes inside a matched mixed
+    letters+digits run (post-``Rp`` amounts): l/I->1, O/o->0, z/Z->2,
+    s/S->5, b->6."""
+    num = m.group(0)
+    if _HAS_LOOKALIKE.search(num) and HAS_DIGIT.search(num):
         return num.translate(_DIGIT_LOOKALIKES)
     return num
 
 
-#: Amount runs following "Rp " / "Rp." that may contain lookalike letters.
-AMOUNT_AFTER_RP: list[re.Pattern] = [
-    re.compile(r"(?<=Rp\s)[lOoIzZsS0-9.,]+"),
-    re.compile(r"(?<=Rp\.)[lOoIzZsS0-9.,]+"),
-]
-
-def fix_year_lookalikes(year: str) -> str:
-    """g->9, l->1, O->0 inside a 4-char year-shaped token."""
-    return year.replace("g", "9").replace("l", "1").replace("O", "0")
+def fix_year_lookalikes(m: re.Match) -> str:
+    """g->9, l->1, O->0 inside a matched 4-char year-shaped token."""
+    return m.group(0).replace("g", "9").replace("l", "1").replace("O", "0")
 
 
-#: Year-shaped tokens possibly containing lookalike letters.
-YEAR_TOKENS: list[re.Pattern] = [
-    re.compile(r"\b1[9g][0-9lOog]{2}\b"),
-    re.compile(r"\b20[0-9lOo]{2}\b"),
-]
+#: ``probe(text, low, digit)``: ``text`` is the current text, ``low`` its
+#: ``textops._probe_fold`` and ``digit`` whether it holds a Unicode ``\d``.
+Probe = Callable[[str, str, bool], bool]
+Replacement = str | Callable[[re.Match], str]
 
-#: exact necessary-condition probe for the whole currency stage: the
-#: alternation of every currency/year pattern (per-branch inline flags
-#: preserve each pattern's case sensitivity). combined.search() is None
-#: ⟺ no individual pattern matches anywhere — one C scan replaces ~20.
-CURRENCY_PROBE = re.compile(
-    "|".join(
-        (f"(?i:{p.pattern})" if p.flags & re.IGNORECASE else f"(?:{p.pattern})")
-        for p in (
-            [pat for pat, _ in CURRENCY_RULES]
-            + list(AMOUNT_AFTER_RP)
-            + list(YEAR_TOKENS)
-        )
-    )
+
+class CurrencyRule:
+    r"""One currency/number rule and the probe that gates its regex scan.
+
+    The probe is a necessary condition: it may pass text the pattern does
+    not match, but never fails text it does. It tests literals the pattern
+    cannot match without:
+
+    - ``\d`` in a pattern is Unicode, so ``digit`` comes from a ``\d``
+      search, not from ASCII digits;
+    - an IGNORECASE pattern matches every sre case variant of its ASCII
+      letters (the Kelvin sign for k, ſ for s, ı and İ for i), which
+      ``_probe_fold`` maps back to ASCII, so its literals are tested on
+      ``low``;
+    - a case-sensitive pattern's literals are tested on ``text`` as is.
+    """
+
+    __slots__ = ("pattern", "repl", "probe")
+
+    def __init__(self, pattern: str, repl: Replacement, probe: Probe, flags=re.IGNORECASE):
+        self.pattern = re.compile(pattern, flags)
+        self.repl = repl
+        self.probe = probe
+
+
+MONTH_NAMES = (
+    "januari", "februari", "maret", "april", "mei", "juni", "juli",
+    "agustus", "september", "oktober", "november", "desember",
 )
+_MONTHS = "(" + "|".join(MONTH_NAMES) + ")"
+
+
+def _has_month(low: str) -> bool:
+    return any(m in low for m in MONTH_NAMES)
+
+
+#: the pattern of the p1h rule below, lowered: IGNORECASE folds the rule's
+#: classes onto these letters, which ``low`` already holds in lowercase
+_P1H_LOW = re.compile(r"p[li1][hbn]")
+
+
+def _rp(text: str, low: str, digit: bool) -> bool:
+    return digit and "rp" in low
+
+
+def _month_year(text: str, low: str, digit: bool) -> bool:
+    return digit and _has_month(low)
+
+
+#: Rules in application order (the order is part of the output contract).
+#: IGNORECASE unless ``flags=0``; a template or callable replacement.
+CURRENCY_RULES: list[CurrencyRule] = [
+    # Rp.XXX.-- / Rp.XXX,-- -> "Rp XXX,-"
+    CurrencyRule(r"Rp\.?\s*(\d+(?:[.,]\d+)*)\s*[-.,]+\s*[-]+", r"Rp \1,-", _rp),
+    # Rp.XXX / RpXXX -> "Rp XXX"
+    CurrencyRule(r"Rp\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1", _rp),
+    # OCR misreads of the currency marker: Ru. / Rpy
+    CurrencyRule(r"Ru\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1", lambda t, low, d: d and "ru" in low),
+    CurrencyRule(r"R[Pp]y\.?\s*(\d+(?:[.,]\d+)*)", r"Rp \1", lambda t, low, d: d and "rpy" in low),
+    # Orphan amount where the marker was lost to noise: "..277" -> "Rp 277"
+    CurrencyRule(
+        r"(^|\s)[.:]+(\d+(?:[.,]\d+)*)(?=\s|$|[-.,])",
+        r"\1Rp \2",
+        lambda t, low, d: d and ("." in t or ":" in t),
+    ),
+    # Year repair, month context: "september 962" -> "september 1962"
+    CurrencyRule(_MONTHS + r"\s*[,.]*\s*([98]\d{2})(?!\d)", r"\1 1\2", _month_year),
+    # "97l" -> "1971" (trailing l/I/1 read as the last digit)
+    CurrencyRule(_MONTHS + r"\s*[,.]*\s*([98]\d)[lI1](?!\d)", r"\1 1\g<2>1", _month_year),
+    # "ll Maret" -> "11 Maret" (the only month rule that needs no digit)
+    CurrencyRule(r"\b([lI]{2})\s+" + _MONTHS, r"11 \2", lambda t, low, d: _has_month(low)),
+    # Split year "19 71" -> "1971", month context only
+    CurrencyRule(_MONTHS + r"\s*[,.]*\s*(19|20)\s+(\d{2})(?!\d)", r"\1 \2\3", _month_year),
+    # Specific amount misread
+    CurrencyRule(r"25\s*[,.]\s*[zZ]00", r"25.100", lambda t, low, d: "25" in t and "00" in t),
+    # Spelled-number repairs
+    CurrencyRule(
+        r"\b[Pp][lI1][hbn]\b", r"puluh", lambda t, low, d: _P1H_LOW.search(low) is not None
+    ),
+    CurrencyRule(
+        r"\b(ke\s*lima|kelima)\s+(ribu|ratus)",
+        r"lima \2",
+        lambda t, low, d: "lima" in low and ("ribu" in low or "ratus" in low),
+    ),
+    CurrencyRule(r"\bs[o0a]ratus\b", r"seratus", lambda t, low, d: "ratus" in low),
+    # Specific name repairs
+    CurrencyRule(
+        r"\b[Kk]asm\s*[.,]\s*nem\b", r"Kasminem", lambda t, low, d: "kasm" in low and "nem" in low
+    ),
+    CurrencyRule(r"\b[Ss]ukati[l1I]\b", r"Sukati", lambda t, low, d: "sukati" in low),
+    CurrencyRule(r"\b[Mm]aineh\b", r"Mainah", lambda t, low, d: "maineh" in low),
+    # Lookalike letters in the amount after "Rp " / "Rp." (case-sensitive)
+    CurrencyRule(
+        r"(?<=Rp\s)[lOoIzZsS0-9.,]+", fix_digit_lookalikes, lambda t, low, d: "Rp" in t, flags=0
+    ),
+    CurrencyRule(
+        r"(?<=Rp\.)[lOoIzZsS0-9.,]+", fix_digit_lookalikes, lambda t, low, d: "Rp." in t, flags=0
+    ),
+    # Year-shaped tokens with lookalike letters (case-sensitive)
+    CurrencyRule(
+        r"\b1[9g][0-9lOog]{2}\b",
+        fix_year_lookalikes,
+        lambda t, low, d: "19" in t or "1g" in t,
+        flags=0,
+    ),
+    CurrencyRule(r"\b20[0-9lOo]{2}\b", fix_year_lookalikes, lambda t, low, d: "20" in t, flags=0),
+]
 
 # ---------------------------------------------------------------------------
 # Tokenizer / validator patterns shared by the text operators.
@@ -196,5 +249,3 @@ SYMBOL_SPLIT = re.compile(r"([^\w\-\']+)")
 WORD_CORE = re.compile(r"^[\w\-\']+$")
 #: >=3-letter runs, the unit of scoring and unknown-word tracking.
 LETTER_RUN = re.compile(r"[a-zA-Z]{3,}")
-
-Replacement = str | Callable[[re.Match], str]

@@ -139,21 +139,25 @@ def _preserve_case_phrase(matched: str, replacement: str) -> str:
 
 #: re.IGNORECASE folds by CPython sre's equivalence table, which pairs
 #: these non-ASCII letters with ASCII ones that str.lower() does NOT
-#: produce (LONG S U+017F ↔ s, DOTLESS I U+0131 ↔ i; Kelvin/Angstrom
-#: already lowercase to k/å). Substring probes over lowered text must
-#: apply the same fold or they under-approximate what an IGNORECASE
-#: regex can match — differential fuzz found both misses ('ſj', 'ſic').
+#: produce (LONG S U+017F ↔ s, DOTLESS I U+0131 ↔ i). The Kelvin sign
+#: U+212A already lowercases to k; DOTTED CAPITAL I U+0130 lowercases to
+#: i + COMBINING DOT ABOVE U+0307, collapsed to i below.
 _SRE_EXTRA_FOLDS = str.maketrans({"ſ": "s", "ı": "i"})
 
 
 def _probe_fold(s: str) -> str:
-    """Lowercase plus the sre equivalence folds — the EXACT necessary-
-    condition haystack for probing ASCII substrings of IGNORECASE rules.
-    The translate only runs when a fold character is present (two C
-    scans), so the ASCII-dominant hot path pays nothing."""
+    """Lowercase plus the sre equivalence folds: a haystack in which every
+    ASCII literal an IGNORECASE rule matches in ``s`` occurs as a substring.
+    A necessary condition only — the folds may also join substrings the
+    rule would not match (a real i + U+0307 collapses to i too). ASCII
+    text, the hot path, returns after one lower() and an O(1) check."""
     low = s.lower()
+    if low.isascii():
+        return low
     if "ſ" in low or "ı" in low:
-        return low.translate(_SRE_EXTRA_FOLDS)
+        low = low.translate(_SRE_EXTRA_FOLDS)
+    if "\u0307" in low:
+        low = low.replace("i\u0307", "i")
     return low
 
 
@@ -424,21 +428,18 @@ def normalize_currency(
     if not text:
         return text, spans or []
     spans = spans if spans is not None else []
-    # one combined C-scan probe: skip the whole rule chain when no
-    # currency/year pattern occurs anywhere (exact, not approximate —
-    # validated against per-pattern search over corpus + goldens)
-    if D.CURRENCY_PROBE.search(text) is None:
-        return text, spans
-    for pattern, template in D.CURRENCY_RULES:
-        text, spans, _ = _sub_tracked(pattern, template, text, spans, kind="currency")
-    for pattern in D.AMOUNT_AFTER_RP:
-        text, spans, _ = _sub_tracked(
-            pattern, lambda m: D.fix_digit_lookalikes(m.group(0)), text, spans, kind="currency"
-        )
-    for pattern in D.YEAR_TOKENS:
-        text, spans, _ = _sub_tracked(
-            pattern, lambda m: D.fix_year_lookalikes(m.group(0)), text, spans, kind="currency"
-        )
+    # each rule's regex scan runs only when its probe passes (see
+    # D.CurrencyRule); the probe haystacks change only when a rule fires
+    low = None
+    for rule in D.CURRENCY_RULES:
+        if low is None:
+            low = _probe_fold(text)
+            digit = D.HAS_DIGIT.search(text) is not None
+        if not rule.probe(text, low, digit):
+            continue
+        text, spans, fired = _sub_tracked(rule.pattern, rule.repl, text, spans, kind="currency")
+        if fired:
+            low = None
     return text, spans
 
 

@@ -15,6 +15,7 @@ kernels are per-value).
 """
 from __future__ import annotations
 
+from itertools import repeat
 from typing import Iterator
 
 import pandas as pd
@@ -62,76 +63,6 @@ EXTRACT_SCHEMA = StructType(
 )
 
 
-def _row_to_record(out: dict) -> dict:
-    out["spans"] = [
-        {"start": s, "end": e, "kind": k} for (s, e, k) in out["spans"]
-    ]
-    return out
-
-
-#: column order must match EXTRACT_SCHEMA
-_OUT_COLS = (
-    "extracted_text",
-    "normalized_text",
-    "dictionary_corrections",
-    "spelling_changes",
-    "quality",
-    "unknown_words",
-    "spans",
-)
-
-
-def make_extract_udf(
-    use_dictionary: bool = True,
-    use_spelling: bool = True,
-    fuzzy: bool = False,
-    extra_kamus: frozenset | None = None,
-):
-    """Build the fused extraction UDF for a given flag combination.
-
-    Flags are closure-captured (constant per job), so Catalyst sees a plain
-    deterministic scalar UDF of one string column. ``extra_kamus`` is the
-    epoch snapshot of approved learned words (SURVEY.md §7.4): vocab-sized,
-    so closure capture ships it once per task via the serialized UDF — the
-    same cost profile as an explicit broadcast variable. The batch result is
-    assembled column-wise (dict-of-lists) — ``DataFrame.from_records`` over
-    per-row dicts costs ~15% of the whole UDF at steady state.
-    """
-
-    @pandas_udf(EXTRACT_SCHEMA)
-    def extract(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # import inside the worker: rule tables compile once per process
-        from ocr_spark.functions.textops import extract_turn
-
-        for texts in batches:
-            cols: dict[str, list] = {name: [] for name in _OUT_COLS}
-            for t in texts:
-                out = extract_turn(
-                    t if isinstance(t, str) else None,
-                    use_dictionary=use_dictionary,
-                    use_spelling=use_spelling,
-                    fuzzy=fuzzy,
-                    extra_kamus=extra_kamus,
-                )
-                cols["extracted_text"].append(out["extracted_text"])
-                cols["normalized_text"].append(out["normalized_text"])
-                cols["dictionary_corrections"].append(
-                    out["dictionary_corrections"]
-                )
-                cols["spelling_changes"].append(out["spelling_changes"])
-                cols["quality"].append(out["quality"])
-                cols["unknown_words"].append(out["unknown_words"])
-                cols["spans"].append(
-                    [
-                        {"start": s, "end": e, "kind": k}
-                        for (s, e, k) in out["spans"]
-                    ]
-                )
-            yield pd.DataFrame(cols, columns=list(_OUT_COLS))
-
-    return extract
-
-
 #: fused boilerplate-strip + extraction output (block counters + content
 #: spans, then the full extraction struct fields)
 CONTENT_EXTRACT_SCHEMA = StructType(
@@ -156,95 +87,66 @@ CONTENT_EXTRACT_SCHEMA = StructType(
     + list(EXTRACT_SCHEMA.fields)
 )
 
-_CONTENT_EXTRACT_COLS = tuple(f.name for f in CONTENT_EXTRACT_SCHEMA.fields)
 
-
-def make_content_extract_udf(
+def make_extract_udf(
     use_dictionary: bool = True,
     use_spelling: bool = True,
     fuzzy: bool = False,
     extra_kamus: frozenset | None = None,
+    content: bool = False,
 ):
-    """Fused block-classification + extraction UDF: strip boilerplate and
-    run the correction/scoring core on the extracted main content in ONE
-    JVM↔Python crossing. The unfused composition (strip_boilerplate →
-    extract_turns) pays the Arrow exchange twice and round-trips the
-    intermediate content_text through the JVM; fusing halves the
-    Python-exchange cost of the production path."""
+    """Build the fused extraction UDF for a given flag combination.
 
-    @pandas_udf(CONTENT_EXTRACT_SCHEMA)
-    def run(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    Called on one string column it runs ``extract_turn`` per text; called
+    on (text, confidences array<double>) it also scores the per-line OCR
+    confidences (reference ocr_service.py:554). With ``content`` it first
+    strips boilerplate (``extract_main_content``) and runs the core on the
+    main content, returning CONTENT_EXTRACT_SCHEMA: strip and extraction
+    in ONE JVM↔Python crossing, so the intermediate content_text never
+    round-trips through the JVM.
+
+    Flags are closure-captured (constant per job), so Catalyst sees a plain
+    deterministic scalar UDF. ``extra_kamus`` is the epoch snapshot of
+    approved learned words (SURVEY.md §7.4): vocab-sized, so closure
+    capture ships it once per task via the serialized UDF — the same cost
+    profile as an explicit broadcast variable. The batch result is
+    assembled column-wise (dict-of-lists) — ``DataFrame.from_records``
+    over per-row dicts costs ~15% of the whole UDF at steady state.
+    """
+    schema = CONTENT_EXTRACT_SCHEMA if content else EXTRACT_SCHEMA
+    names = schema.fieldNames()
+
+    @pandas_udf(schema)
+    def extract(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        # import inside the worker: rule tables compile once per process
         from ocr_spark.functions.blocks import extract_main_content
         from ocr_spark.functions.textops import extract_turn
 
-        for texts in batches:
-            cols: dict[str, list] = {name: [] for name in _CONTENT_EXTRACT_COLS}
-            for t in texts:
-                c = extract_main_content(t if isinstance(t, str) else None)
-                cols["content_text"].append(c["content_text"])
-                cols["content_spans"].append(
-                    [{"start": s, "end": e} for s, e in c["content_spans"]]
-                )
-                for k in (
-                    "n_blocks",
-                    "n_content_blocks",
-                    "n_boilerplate_blocks",
-                    "content_words",
-                ):
-                    cols[k].append(c[k])
-                x = extract_turn(
-                    c["content_text"],
+        for batch in batches:
+            # two input columns arrive as a tuple of series
+            texts, confs = batch if isinstance(batch, tuple) else (batch, repeat(None))
+            cols: dict[str, list] = {name: [] for name in names}
+            for t, c in zip(texts, confs):
+                t = t if isinstance(t, str) else None
+                if content:
+                    block = extract_main_content(t)
+                    t = block["content_text"]
+                out = extract_turn(
+                    t,
                     use_dictionary=use_dictionary,
                     use_spelling=use_spelling,
+                    confidences=list(c) if c is not None and len(c) else None,
                     fuzzy=fuzzy,
                     extra_kamus=extra_kamus,
                 )
-                for k in _OUT_COLS:
-                    if k == "spans":
-                        cols[k].append(
-                            [
-                                {"start": s, "end": e, "kind": kind}
-                                for (s, e, kind) in x[k]
-                            ]
-                        )
-                    else:
-                        cols[k].append(x[k])
-            yield pd.DataFrame(cols, columns=list(_CONTENT_EXTRACT_COLS))
-
-    return run
-
-
-def make_extract_udf_with_confidence(
-    use_dictionary: bool = True,
-    use_spelling: bool = True,
-    fuzzy: bool = False,
-    extra_kamus: frozenset | None = None,
-):
-    """Variant taking (text, confidences array<double>) — for sources that
-    carry per-line OCR confidences (reference ocr_service.py:554)."""
-
-    @pandas_udf(EXTRACT_SCHEMA)
-    def extract(
-        batches: Iterator[tuple[pd.Series, pd.Series]]
-    ) -> Iterator[pd.DataFrame]:
-        from ocr_spark.functions.textops import extract_turn
-
-        for texts, confs in batches:
-            records = []
-            for t, c in zip(texts, confs):
-                conf_list = list(c) if c is not None and len(c) else None
-                records.append(
-                    _row_to_record(
-                        extract_turn(
-                            t if isinstance(t, str) else None,
-                            use_dictionary=use_dictionary,
-                            use_spelling=use_spelling,
-                            confidences=conf_list,
-                            fuzzy=fuzzy,
-                            extra_kamus=extra_kamus,
-                        )
-                    )
-                )
-            yield pd.DataFrame.from_records(records)
+                out["spans"] = [{"start": s, "end": e, "kind": k} for s, e, k in out["spans"]]
+                if content:
+                    out.update(block)
+                    out["content_spans"] = [
+                        {"start": s, "end": e} for s, e in block["content_spans"]
+                    ]
+                for name in names:
+                    cols[name].append(out[name])
+            yield pd.DataFrame(cols, columns=names)
 
     return extract

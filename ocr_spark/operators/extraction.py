@@ -85,9 +85,7 @@ def extract_content_turns(
     instead of twice (the intermediate content_text never returns to the
     JVM). Narrow, no shuffle; equals strip_boilerplate→extract_turns
     column-for-column (tested)."""
-    from ocr_spark.functions.udfs import make_content_extract_udf
-
-    udf = make_content_extract_udf(use_dictionary, use_spelling, fuzzy, extra_kamus)
+    udf = make_extract_udf(use_dictionary, use_spelling, fuzzy, extra_kamus, content=True)
     out = df.withColumn("_cx", udf(F.col(text_col)))
     for name in CONTENT_EXTRACT_COLUMNS:
         out = out.withColumn(name, F.col(f"_cx.{name}"))

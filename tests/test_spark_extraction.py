@@ -47,6 +47,28 @@ def test_udf_equality(spark, golden_df):
         assert sorted(row["unknown_words"]) == exp["unknown_words"], name
 
 
+def test_udf_with_confidences_equals_golden(spark):
+    """The same builder called on (text, confidences) scores the per-line
+    OCR confidences."""
+    from ocr_spark.functions.udfs import make_extract_udf
+
+    cases = [
+        fx for fx in FIXTURES
+        if fx["use_dictionary"] and fx["use_spelling"] and fx["confidences"]
+    ]
+    df = spark.createDataFrame(
+        [(fx["name"], fx["input"], fx["confidences"]) for fx in cases],
+        "name string, text string, confs array<double>",
+    )
+    udf = make_extract_udf()
+    got = {r["name"]: r["x"] for r in df.select("name", udf("text", "confs").alias("x")).collect()}
+    assert len(got) == len(cases)
+    for fx in cases:
+        row, exp = got[fx["name"]], fx["expected"]
+        assert row["normalized_text"] == exp["normalized_text"], fx["name"]
+        assert row["quality"].asDict() == exp["quality"], fx["name"]
+
+
 def test_flag_combinations(spark):
     df = spark.createDataFrame(
         [("Djelan Krmet 63 jang baik Rp.277.--",)], "text string"
