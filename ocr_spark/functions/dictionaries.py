@@ -52,14 +52,44 @@ def _multiword_pattern(key: str) -> re.Pattern:
     return re.compile(re.escape(key).replace(r"\ ", " ").replace(" ", r"\s+"), re.IGNORECASE)
 
 
+def trie_pattern(words) -> str:
+    """A regex matching exactly the strings in ``words``, factored as a trie.
+
+    Shared prefixes become one literal and the alternatives after them a
+    non-capturing group with branches in sorted order, so at each character
+    sre tries at most the one branch that starts with it, where a flat
+    alternation would try every word. The pattern string depends only on
+    the set of words, not on their order. A word that is a prefix of
+    another makes the rest optional; an empty word makes the whole pattern
+    match the empty string, so a ``search`` then passes every text.
+    """
+    trie: dict = {}
+    for word in words:
+        node = trie
+        for ch in word:
+            node = node.setdefault(ch, {})
+        node[""] = {}  # end-of-word marker
+
+    def emit(node: dict) -> str:
+        branches = [re.escape(ch) + emit(node[ch]) for ch in sorted(node) if ch]
+        if not branches:
+            return ""
+        if "" in node:
+            return "(?:" + "|".join(branches) + ")?"
+        return branches[0] if len(branches) == 1 else "(?:" + "|".join(branches) + ")"
+
+    return emit(trie) if trie else "(?!)"
+
+
 class MultiWordRule:
     """One precompiled multi-word correction rule.
 
     ``probe`` is the longest space-free chunk of the key, lowercased: a rule
-    can only match a string whose lowercase form contains that chunk (the
-    pattern's non-whitespace parts are literal). ``str.find`` on the probe is
-    ~100x cheaper than a regex scan, so the hot loop does 277 finds and only
-    runs the regex for probable hits.
+    can only match a string whose ``_probe_fold`` contains that chunk (the
+    pattern's non-whitespace parts are literal and IGNORECASE folds them to
+    what ``_probe_fold`` produces). ``MULTI_WORD_PROBE`` below scans for all
+    probes at once; a rule's own probe is tested only when that scan finds
+    one, and its regex runs only when its probe is present.
     """
 
     __slots__ = ("key", "replacement", "pattern", "probe")
@@ -77,6 +107,11 @@ MULTI_WORD_RULES: list[MultiWordRule] = [
     MultiWordRule(k, MULTI_WORD_MAP[k])
     for k in sorted(MULTI_WORD_MAP.keys(), key=len, reverse=True)
 ]
+
+#: Finds a rule probe in a ``_probe_fold`` text: a necessary condition for
+#: any multi-word rule to match, since each rule needs its own probe there.
+#: Passes every text if some rule has an empty probe.
+MULTI_WORD_PROBE: re.Pattern = re.compile(trie_pattern({r.probe for r in MULTI_WORD_RULES}))
 
 #: Spelling digraph rules, precompiled case-insensitive.
 SPELLING_PATTERNS: list[tuple[re.Pattern, str]] = [
@@ -235,15 +270,18 @@ PUNCT_PEEL = re.compile(r"^([^\w]*)([\w\-\']+)([^\w]*)$")
 NUM_THEN_WORD = re.compile(r"^(\d+)([a-zA-Z]{3,})$")
 WORD_THEN_NUM = re.compile(r"^([a-zA-Z]{3,})(\d+)$")
 
-#: fast-path probes for the correction pass (necessary conditions only):
-#: a text with no digit-glued run and no phrase-map key occurrence cannot be
-#: changed by the (non-fuzzy) word-correction loop, which is then skipped
+#: fast-path probes for the correction pass, each a necessary condition for
+#: the (non-fuzzy) word-correction loop to change a text. The loop edits a
+#: token only where a digit run is glued to a >=3-letter word
+#: (``DIGIT_GLUE_PROBE``; it needs a Unicode ``\d``, so ``HAS_DIGIT`` is the
+#: cheaper first test) or where a word it looks up is a phrase-map key
+#: (``PHRASE_KEY_PROBE``, on ``text.lower()``: keys are lowercase). Outside
+#: digit-glued tokens, a looked-up word never ends before a ``[\w\-']``
+#: character and never starts right after a word character; it can start
+#: right after a ``-`` or ``'``, which ``PUNCT_PEEL`` peels off a token's
+#: front as prefix punctuation.
 DIGIT_GLUE_PROBE = re.compile(r"\d[a-zA-Z]{3}|[a-zA-Z]{3}\d")
-PHRASE_KEY_PROBE = re.compile(
-    r"(?<![\w\-'])(?:"
-    + "|".join(sorted(map(re.escape, PHRASE_MAP), key=len, reverse=True))
-    + r")(?![\w\-'])"
-)
+PHRASE_KEY_PROBE = re.compile(r"(?<!\w)(?:" + trie_pattern(PHRASE_MAP) + r")(?![\w\-'])")
 #: mid-token symbol splitter (keeps delimiters).
 SYMBOL_SPLIT = re.compile(r"([^\w\-\']+)")
 WORD_CORE = re.compile(r"^[\w\-\']+$")

@@ -166,8 +166,11 @@ def apply_multiword(text: str, spans: Optional[list[Span]] = None) -> tuple[str,
     mutated string (chained corrections compound), case-insensitively with
     case-style-preserving replacement. 9 keys delete garbage (map to "")."""
     spans = spans if spans is not None else []
+    # one scan for every rule's probe: if none occurs, no rule can match
+    lower = _probe_fold(text)
+    if D.MULTI_WORD_PROBE.search(lower) is None:
+        return text, spans
     result = text
-    lower = None  # lazily computed, invalidated on mutation
     for rule in D.MULTI_WORD_RULES:
         if lower is None:
             lower = _probe_fold(result)
@@ -321,15 +324,15 @@ def correct_with_stats(
 
     text, mw_spans = apply_multiword(text)
 
-    # fast identity path: when no phrase-map key occurs (scanned on the
-    # lowered text, keys are lowercase) and no digit-glued token candidate
-    # exists, the token loop below provably reproduces the input verbatim
-    # with zero corrections (the tokenizer is lossless and every mutation
-    # site requires one of those two probes to fire). Fuzzy mode can touch
-    # any unknown word, so it never takes the shortcut.
+    # fast identity path: when neither correction probe (see
+    # D.PHRASE_KEY_PROBE) fires, the token loop below provably reproduces
+    # the input verbatim with zero corrections (the tokenizer is lossless
+    # and every mutation site needs a digit-glued run or a phrase-map key
+    # word). Fuzzy mode can touch any unknown word, so it never takes the
+    # shortcut.
     if (
         not fuzzy
-        and D.DIGIT_GLUE_PROBE.search(text) is None
+        and (D.HAS_DIGIT.search(text) is None or D.DIGIT_GLUE_PROBE.search(text) is None)
         and D.PHRASE_KEY_PROBE.search(text.lower()) is None
     ):
         return text, 0, mw_spans

@@ -1,4 +1,11 @@
-"""Provenance checks on the extracted dictionary data (SURVEY.md §7.1)."""
+"""Provenance checks on the extracted dictionary data (SURVEY.md §7.1), and
+the ``trie_pattern`` builder the rule-table gates use."""
+import random
+import re
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from ocr_spark.functions import dictionaries as D
 
 
@@ -33,3 +40,41 @@ def test_spelling_rules():
     ]
     assert D.J_TO_Y["jang"] == "yang"
     assert D.J_TO_Y["jangan"] == "jangan"  # identity entry, stays j
+
+
+# ---------------------------------------------------------------------------
+# trie_pattern: a regex for exactly a set of literals.
+# ---------------------------------------------------------------------------
+
+#: regex metacharacters included, so escaping is exercised
+_ALPHABET = "ab.-\\|(?"
+
+
+def _check_trie(words):
+    words = set(words)
+    pattern = re.compile(D.trie_pattern(words))
+    for w in words:
+        assert pattern.fullmatch(w), w
+        for i in range(len(w)):
+            if w[:i] not in words:
+                assert not pattern.fullmatch(w[:i]), (w, i)
+        for ch in _ALPHABET:
+            if w + ch not in words:
+                assert not pattern.fullmatch(w + ch), (w, ch)
+    shuffled = sorted(words)
+    random.Random(len(words)).shuffle(shuffled)
+    assert D.trie_pattern(shuffled) == D.trie_pattern(sorted(words, reverse=True))
+
+
+@settings(derandomize=True, database=None, max_examples=150, deadline=None)
+@given(st.sets(st.text(_ALPHABET, max_size=5), max_size=8))
+def test_trie_pattern_matches_exactly_its_words(words):
+    _check_trie(words)
+
+
+def test_trie_pattern_on_the_rule_tables():
+    _check_trie(D.PHRASE_MAP)
+    _check_trie({r.probe for r in D.MULTI_WORD_RULES})
+    assert not re.search(D.trie_pattern([]), "abc")
+    # an empty word matches everywhere: a gate built from it passes every text
+    assert re.search(D.trie_pattern(["", "xyz"]), "abc")

@@ -1,7 +1,7 @@
 """Reference-free parity for the extraction core's fast paths.
 
-Every probe in ``ocr_spark.functions.textops`` (the T1 multi-word rule
-probes, the T3 identity shortcut, the T4 per-rule currency probes, the T5
+Every probe in ``ocr_spark.functions.textops`` (the T1 multi-word gate and
+rule probes, the T3 identity shortcut, the T4 per-rule currency probes, the T5
 digraph probe, and the ``_probe_fold`` haystack they share) only decides
 whether a regex scan may be skipped. ``extract_turn_probe_free`` below runs
 the same pipeline with every rule applied and no probe, so any probe that
@@ -85,6 +85,8 @@ _FRAGMENTS = (
     + ["sic", "pembagian", "djalan", "tjinta", "njonja", "sjarat", "chusus", "oetama", "jang"]
     + sorted(D.MULTI_WORD_MAP)[:20]
     + sorted(D.PHRASE_MAP)[:20]
+    # phrase keys behind punctuation that PUNCT_PEEL peels off a token's front
+    + [p + k for p in ("-", "'", "(-", "\"'") for k in ("departntn", *sorted(D.PHRASE_MAP)[:3])]
     + ["\u0130", "\u0131", "\u017f", "\u212a", "\u0307", "\t", "\n", " ", "  ", "x"]
 )
 
@@ -128,7 +130,8 @@ def test_extract_turn_matches_probe_free(text, use_dict, use_spell):
 @_parity_settings
 @given(_dense_texts)
 def test_probes_are_necessary_conditions(text):
-    """Per rule: wherever the pattern matches, its probe passes."""
+    """Per rule: wherever the pattern matches, its probe passes; the trie
+    gates agree with the probes they stand for."""
     low = T._probe_fold(text)
     digit = D.HAS_DIGIT.search(text) is not None
     for rule in D.CURRENCY_RULES:
@@ -137,6 +140,78 @@ def test_probes_are_necessary_conditions(text):
     for rule in D.MULTI_WORD_RULES:
         if rule.pattern.search(text):
             assert rule.probe in low, rule.key
+    # the T1 gate: one trie scan finds a probe exactly when some probe occurs
+    gate = D.MULTI_WORD_PROBE.search(low) is not None
+    assert gate == any(rule.probe in low for rule in D.MULTI_WORD_RULES)
+    if not gate:
+        assert not any(rule.pattern.search(text) for rule in D.MULTI_WORD_RULES)
+    assert _same_phrase_key_hit(text)
+
+
+# ---------------------------------------------------------------------------
+# The T3 phrase-key probe: trie-factored, same matches as a flat alternation.
+# ---------------------------------------------------------------------------
+
+#: the probe as a flat, longest-first alternation of the escaped keys
+_FLAT_PHRASE_KEY_PROBE = re.compile(
+    r"(?<!\w)(?:"
+    + "|".join(sorted(map(re.escape, D.PHRASE_MAP), key=len, reverse=True))
+    + r")(?![\w\-'])"
+)
+
+#: what may stand before or after a key in a token: PUNCT_PEEL's prefix
+#: punctuation, word characters, and the key's own boundary characters
+_KEY_NEIGHBOURS = ["", " ", "-", "'", "x", "1", "_", ".", "(-", "\"'"]
+
+
+def _same_phrase_key_hit(text):
+    low = text.lower()
+    return (D.PHRASE_KEY_PROBE.search(low) is None) == (
+        _FLAT_PHRASE_KEY_PROBE.search(low) is None
+    )
+
+
+def test_phrase_key_probe_matches_flat_alternation_on_every_key():
+    for key in D.PHRASE_MAP:
+        for variant in (key, key[:-1], key[1:], key + "a", key.upper()):
+            for before in _KEY_NEIGHBOURS:
+                for after in _KEY_NEIGHBOURS:
+                    assert _same_phrase_key_hit(before + variant + after), (before, variant, after)
+
+
+@pytest.mark.parametrize(
+    "text, want",
+    [
+        ("-departntn", "-departemen"),
+        ("x 'departntn", "x 'departemen"),
+        ("(-departntn", "(-departemen"),
+        ("\"'Departntn.", "\"'Departemen."),
+        ("x-departntn", "x-departntn"),
+    ],
+)
+def test_phrase_key_after_peeled_punctuation(text, want):
+    """A phrase key after a leading ``-`` or ``'`` is corrected: the token
+    loop peels them off as prefix punctuation, so the identity shortcut
+    must not skip the text."""
+    assert T.extract_turn(text)["extracted_text"] == want
+    assert T.extract_turn(text) == extract_turn_probe_free(text)
+
+
+_NEVER = re.compile("(?!)")
+
+
+@pytest.mark.parametrize(
+    "text",
+    ["12departntn", "departntn12", "agraria di jasa", "Agar 4tas"],
+)
+def test_probe_free_bypasses_every_gate(text):
+    """With the T1 gate and the T3 digit probe patched to skip everything,
+    ``extract_turn`` changes but the probe-free pipeline does not: no gate
+    decides anything there (``HAS_DIGIT`` only guards the digit probe)."""
+    want = extract_turn_probe_free(text)
+    with mock.patch.multiple(D, MULTI_WORD_PROBE=_NEVER, DIGIT_GLUE_PROBE=_NEVER):
+        assert extract_turn_probe_free(text) == want
+        assert T.extract_turn(text) != want
 
 
 # ---------------------------------------------------------------------------
