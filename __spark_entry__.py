@@ -1,13 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship fused-extraction pipeline (SURVEY.md §2.2 T1–T7
-+ A6) on sf0.001. ``queries`` exposes every implemented operator family from
-SURVEY.md §2 plus the training-data-pipeline operators (dedup / similarity /
-text analysis) over the driver's parquet tables; ``oracle_sql`` carries the
-exact DuckDB re-expression for every SQL-expressible one (the per-turn
-extraction core is deliberately NOT SQL-expressible — its correctness gate
-is the golden fixture suite in tests/test_golden.py, byte-equal against the
-reference).
++ A6) on sf0.001. ``REGISTRY`` at the bottom declares every query once: its
+builder over the driver's parquet tables, its exact DuckDB oracle when it
+is SQL-expressible, and whether it is a gate row or an extra. ``queries``,
+``oracle_sql``, ``extra_queries`` and ``extra_oracle_sql`` are views of it
+(the per-turn extraction core is deliberately NOT SQL-expressible — its
+correctness gate is the golden fixture suite in tests/test_golden.py).
 
 Determinism rules used throughout: md5-based hashing (portable across
 Spark/DuckDB/Python), fixed-width hex compare for MinHash, explicit
@@ -17,6 +16,7 @@ rounding on float aggregates, and (key, id) tie-breaks on every top-k.
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -3005,16 +3005,22 @@ FROM j GROUP BY source ORDER BY source
 
 
 def _q1_pricing(spark, sf_dir):
+    """TPC-H Q1-style pricing summary. The sums run in exact DECIMAL(15,2),
+    the TPC-H column types: a double sum rounded to cents depends on the
+    summation order, and so on the core count, when it lands near a half
+    cent."""
     li = _t(spark, sf_dir, "lineitem")
+    qty, price, disc = (
+        F.col(c).cast("decimal(15,2)")
+        for c in ("l_quantity", "l_extendedprice", "l_discount")
+    )
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
+            F.sum(qty).alias("sum_qty"),
+            F.sum(price).alias("sum_base_price"),
+            F.round(F.sum(price * (1 - disc)), 2).alias("sum_disc_price"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
@@ -3022,14 +3028,20 @@ def _q1_pricing(spark, sf_dir):
 
 
 _Q1_SQL = """
+WITH li AS (
+  SELECT l_returnflag, l_linestatus, l_discount,
+         CAST(l_quantity AS DECIMAL(15,2)) AS qty,
+         CAST(l_extendedprice AS DECIMAL(15,2)) AS price,
+         CAST(l_discount AS DECIMAL(15,2)) AS disc
+  FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+)
 SELECT l_returnflag, l_linestatus,
-       ROUND(sum(l_quantity), 2) AS sum_qty,
-       ROUND(sum(l_extendedprice), 2) AS sum_base_price,
-       ROUND(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+       sum(qty) AS sum_qty,
+       sum(price) AS sum_base_price,
+       ROUND(sum(price * (1 - disc)), 2) AS sum_disc_price,
        ROUND(avg(l_discount), 6) AS avg_disc,
        CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
+FROM li GROUP BY l_returnflag, l_linestatus
 """
 
 
@@ -4722,412 +4734,297 @@ FROM documents, t
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator family from SURVEY.md §2 plus the
-    training-data-pipeline operators. Keys ↔ oracle_sql keys.
+class Query(NamedTuple):
+    """One registry entry.
 
-    Sized to the driver gate's 50-row window so EVERY distinct operator
-    family gets a recorded correctness row: redundant physical variants of
-    queries already listed (numpy top-k, multi-probe LSH, signature-only
-    stages, the corpus anti-join over the same connected components) live
-    in :func:`extra_queries`, still oracle-backed via
-    ``tools/check_oracles.py --extended``."""
-    return {
-        # extraction core (T1–T7 + A6; golden-tested vs the reference)
-        "flagship_extract": _flagship,
-        # main-content extraction surface (block classification, layout)
-        "boilerplate_strip": _boilerplate_strip,
-        "pdf_layout": _pdf_layout,
-        "full_pipeline": _full_pipeline,
-        # aggregates A1/A2/A5/A7/A8/A9
-        "a1_event_stats": _a1_event_stats,
-        "a2_zero_filled": _a2_zero_filled,
-        "a3_key_stats": _a3_key_stats,
-        "a5_counts_by_type": _a5_counts_by_type,
-        "a4_learning_stats": _a4_learning_stats,
-        "a7_word_frequency": _a7_word_frequency,
-        "a8_top_pending": _a8_top_pending,
-        "a9_event_pagination": _a9_event_pagination,
-        # sinks / reassembly / joins (S4, T8, J2)
-        "s4_preview": _s4_preview,
-        "s5_export": _s5_export,
-        "s6_import_merge": _s6_import_merge,
-        "t8_event_sessions": _t8_event_sessions,
-        "asof_signup_attribution": _asof_signup_attribution,
-        "range_join_error_sessions": _range_join_error_sessions,
-        "j2_unknown_antijoin": _j2_unknown_antijoin,
-        # dedup family
-        "exact_dedup": _exact_dedup,
-        "minhash_near_dup": _minhash_near_dup,
-        "jaccard_near_dup": _jaccard_near_dup,
-        "dedup_clusters": _dedup_clusters,
-        "simhash_near_dup": _simhash_near_dup,
-        "curate_corpus": _curate_corpus,
-        # C4 heuristic rule gate (round-5 session-3 rotation: newest
-        # family gets a gate row; decontaminate — composed verbatim
-        # inside the gated curate_corpus, with its Bloom sibling already
-        # an extra — displaced to extras, the same composition rule that
-        # displaced stratified_sample)
-        "c4_filters": _c4_filters,
-        # character edit-distance near-dup (round-5 rotation: newest
-        # family gets a gate row; stratified_sample — composed inside the
-        # gated curate_corpus, the fingerprints⊂source_stats rule —
-        # displaced to extras)
-        "edit_near_dup": _edit_near_dup,
-        "winnow_near_dup": _winnow_near_dup,
-        # span-level exact-substring dedup (round-4 session-5 rotation:
-        # newest family gets a gate row; ann_lsh_topk — whose multi-probe
-        # sibling already lives in extras — displaced there)
-        "substr_dup_stats": _substr_dup_stats,
-        # corpus-level line-frequency boilerplate strip (round-4
-        # session-6 rotation: newest family gets a gate row;
-        # a10_value_quantiles — a bonus aggregate whose pivot/approx
-        # siblings already live in extras — displaced there)
-        "line_strip": _line_strip,
-        # corpus-global keep-first paragraph dedup (round-5 session-2
-        # rotation: newest family gets a gate row; media_image_features
-        # — an M1 rows-only shape whose codec family is also carried by
-        # pytest goldens and the audio extra — displaced, which makes the
-        # gate row it frees oracle-backed)
-        "paragraph_dedup": _paragraph_dedup,
-        # similarity search
-        "ann_cosine_topk": _ann_cosine_topk,
-        "ivf_topk": _ivf_topk,
-        "knn_join": _knn_join,
-        "embedding_near_dup": _embedding_near_dup,
-        "semantic_dedup": _semantic_dedup,
-        # hybrid retrieval: RRF fusion of the gated BM25 lexical ranking
-        # with a quality prior (round-4 session-6 rotation; q1_pricing —
-        # a TPC-H bonus shape whose join-agg siblings q3/q5/q18 live in
-        # extras — displaced there)
-        "rrf_fusion": _rrf_fusion,
-        # BM25 lexical retrieval (round-5 rotation gave the family gate
-        # rows; late round 5 keeps the topk shape gated and displaces
-        # bm25_join — the second physical shape, cross-shape equality
-        # pytest-pinned — back to extras, the same second-shape rule that
-        # displaced t8_assembled_docs and winnow_containment)
-        "bm25_topk": _bm25_topk,
-        # per-document tf·idf keyword extraction (round-5 rotation:
-        # newest family gets a gate row; bm25_join displaced per above)
-        "tfidf_topk_terms": _tfidf_topk_terms,
-        # multimodal (real stdlib codecs + numpy pixel ops; the image
-        # and audio codec shapes both live in extras since the round-5
-        # session-2 rotation — the family stays --extended-verified and
-        # pytest-golden-gated; t9 keeps the gate row)
-        "t9_preprocess": _t9_preprocess,
-        # text analysis
-        "lang_id_counts": _lang_id_counts,
-        "gopher_repetition": _gopher_repetition,
-        # interpolated bigram-LM perplexity filter (round-5 rotation:
-        # newest family gets a gate row; media_audio_features displaced)
-        "bigram_nll": _bigram_nll,
-        # PMI collocation mining (round-5 session-2 rotation: newest
-        # family gets a gate row; unigram_nll — the same CCNet LM-filter
-        # family one order DOWN from the gated bigram_nll, which
-        # interpolates against the identical unigram core — displaced to
-        # extras, still --extended-verified)
-        "pmi_collocations": _pmi_collocations,
-        "bpe_token_counts": _bpe_token_counts,
-        "pii_redaction": _pii_redaction,
-        "source_stats": _source_stats,
-        # sharded training-corpus write (histogram = the queryable stage)
-        "training_shards": _training_shards,
-        # data-selection breadth (round-4 rotation: the newest family
-        # gets driver-gate rows; q18 and w1 — TPC-H shapes whose
-        # join-agg / window-top-k siblings q1/q3 and cap_per_source stay
-        # gated — moved to extras)
-        "dsir_importance": _dsir_importance,
-        "cap_per_source": _cap_per_source,
-    }
+    ``oracle`` is DuckDB SQL that reproduces the result exactly, or None
+    for a rows-only query; the LSH queries have oracles because their
+    seeded hash families make them deterministic. ``gate`` puts the query
+    in the driver's 50-row gate, one row per operator family; the others
+    are extras, checked by ``python tools/check_oracles.py --extended``.
+    ``bench``, ``plan`` and ``sf1`` select the query for ``bench.py``,
+    ``tools/dump_plans.py`` and the ``tools/sf1_tier.py`` sweep, which
+    has only the documents and embeddings tables.
+    """
+
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+    gate: bool
+    bench: bool = False
+    plan: bool = False
+    sf1: bool = False
+
+
+GATE, EXTRA = True, False
+
+#: every query, gate entries first; the four views below keep this order
+REGISTRY: dict[str, Query] = {
+    # rows-only, not SQL-expressible: pytest goldens gate these four
+    "flagship_extract": Query(_flagship, None, GATE, bench=True, plan=True),
+    "boilerplate_strip": Query(_boilerplate_strip, None, GATE, bench=True),
+    "pdf_layout": Query(_pdf_layout, None, GATE, bench=True),
+    "full_pipeline": Query(_full_pipeline, None, GATE, bench=True, plan=True),
+    "a1_event_stats": Query(_a1_event_stats, _A1_SQL, GATE),
+    "a2_zero_filled": Query(_a2_zero_filled, _A2Z_SQL, GATE),
+    "a3_key_stats": Query(_a3_key_stats, _A3_SQL, GATE),
+    "a5_counts_by_type": Query(_a5_counts_by_type, _A5_SQL, GATE),
+    "a4_learning_stats": Query(_a4_learning_stats, _A4_SQL, GATE),
+    "a7_word_frequency": Query(
+        _a7_word_frequency, _A7_SQL, GATE, bench=True, plan=True),
+    "a8_top_pending": Query(_a8_top_pending, _A8_SQL, GATE),
+    "a9_event_pagination": Query(_a9_event_pagination, _A9_SQL, GATE),
+    "s4_preview": Query(_s4_preview, _S4_SQL, GATE),
+    "s5_export": Query(_s5_export, _s5_sql(), GATE),
+    "s6_import_merge": Query(_s6_import_merge, _s6_sql(), GATE),
+    "t8_event_sessions": Query(
+        _t8_event_sessions, _T8_SQL, GATE, bench=True, plan=True),
+    "asof_signup_attribution": Query(
+        _asof_signup_attribution, _ASOF_SQL, GATE, bench=True, plan=True),
+    "range_join_error_sessions": Query(
+        _range_join_error_sessions, _RANGE_JOIN_SQL, GATE,
+        bench=True, plan=True),
+    "j2_unknown_antijoin": Query(
+        _j2_unknown_antijoin, _J2_SQL, GATE, plan=True),
+    "exact_dedup": Query(
+        _exact_dedup, _EXACT_DEDUP_SQL, GATE, bench=True, plan=True, sf1=True),
+    "minhash_near_dup": Query(
+        _minhash_near_dup, _MINHASH_NEAR_DUP_SQL, GATE,
+        bench=True, plan=True, sf1=True),
+    "jaccard_near_dup": Query(
+        _jaccard_near_dup, _JACCARD_SQL, GATE,
+        bench=True, plan=True, sf1=True),
+    "dedup_clusters": Query(
+        _dedup_clusters, _DEDUP_CLUSTERS_SQL, GATE,
+        bench=True, plan=True, sf1=True),
+    "simhash_near_dup": Query(
+        _simhash_near_dup, _SIMHASH_NEAR_DUP_SQL, GATE, bench=True, sf1=True),
+    "curate_corpus": Query(
+        _curate_corpus, _curate_sql(), GATE, bench=True, sf1=True),
+    "c4_filters": Query(
+        _c4_filters, _C4_FILTERS_SQL, GATE, bench=True, plan=True, sf1=True),
+    # not in the sf1 sweep: its brute-force oracle is O(pairs·len²)
+    "edit_near_dup": Query(
+        _edit_near_dup, _EDIT_NEAR_DUP_SQL, GATE, bench=True, plan=True),
+    "winnow_near_dup": Query(
+        _winnow_near_dup, _WINNOW_NEAR_DUP_SQL, GATE, sf1=True),
+    "substr_dup_stats": Query(
+        _substr_dup_stats, _SUBSTR_DUP_SQL, GATE,
+        bench=True, plan=True, sf1=True),
+    "line_strip": Query(
+        _line_strip, _line_strip_sql(), GATE, bench=True, plan=True, sf1=True),
+    "paragraph_dedup": Query(
+        _paragraph_dedup, _paragraph_dedup_sql(), GATE,
+        bench=True, plan=True, sf1=True),
+    "ann_cosine_topk": Query(
+        _ann_cosine_topk, _ANN_SQL, GATE, bench=True, plan=True, sf1=True),
+    "ivf_topk": Query(
+        _ivf_topk, _ivf_sql(), GATE, bench=True, plan=True, sf1=True),
+    "knn_join": Query(
+        _knn_join, _KNN_SQL, GATE, bench=True, plan=True, sf1=True),
+    "embedding_near_dup": Query(
+        _embedding_near_dup, _emb_near_dup_sql(), GATE, bench=True, sf1=True),
+    "semantic_dedup": Query(
+        _semantic_dedup, _semantic_dedup_sql(), GATE,
+        bench=True, plan=True, sf1=True),
+    "rrf_fusion": Query(
+        _rrf_fusion, _rrf_fusion_sql(), GATE, bench=True, plan=True, sf1=True),
+    "bm25_topk": Query(
+        _bm25_topk, _bm25_topk_sql(), GATE, bench=True, plan=True, sf1=True),
+    "tfidf_topk_terms": Query(
+        _tfidf_topk_terms, _TFIDF_SQL, GATE, bench=True, plan=True, sf1=True),
+    "t9_preprocess": Query(_t9_preprocess, None, GATE),
+    "lang_id_counts": Query(
+        _lang_id_counts, _langid_sql(), GATE, bench=True, sf1=True),
+    "gopher_repetition": Query(
+        _gopher_repetition, _GOPHER_REPETITION_SQL, GATE,
+        bench=True, sf1=True),
+    "bigram_nll": Query(
+        _bigram_nll, _BIGRAM_NLL_SQL, GATE, bench=True, plan=True, sf1=True),
+    "pmi_collocations": Query(
+        _pmi_collocations, _PMI_SQL, GATE, bench=True, plan=True, sf1=True),
+    "bpe_token_counts": Query(
+        _bpe_token_counts, None, GATE, bench=True, sf1=True),
+    "pii_redaction": Query(
+        _pii_redaction, _pii_sql(), GATE, bench=True, plan=True, sf1=True),
+    "source_stats": Query(
+        _source_stats, _source_stats_sql(), GATE,
+        bench=True, plan=True, sf1=True),
+    "training_shards": Query(
+        _training_shards, _SHARDS_SQL, GATE, bench=True, plan=True, sf1=True),
+    "dsir_importance": Query(_dsir_importance, _DSIR_SQL, GATE, sf1=True),
+    "cap_per_source": Query(
+        _cap_per_source, _cap_per_source_sql(), GATE, sf1=True),
+    "minhash_signatures": Query(
+        _minhash_signatures, _MINHASH_SQL, EXTRA, plan=True, sf1=True),
+    "simhash": Query(_simhash, _SIMHASH_SQL, EXTRA, bench=True, sf1=True),
+    "dedup_corpus": Query(_dedup_corpus, _DEDUP_CORPUS_SQL, EXTRA, sf1=True),
+    "ann_cosine_topk_np": Query(
+        _ann_cosine_topk_np, _ANN_SQL, EXTRA, sf1=True),
+    "ann_lsh_topk": Query(_ann_lsh_topk, _ann_lsh_sql(), EXTRA, sf1=True),
+    "ann_lsh_topk_mp": Query(
+        _ann_lsh_topk_mp, _ann_lsh_mp_sql(), EXTRA, sf1=True),
+    "a2_events_by_date": Query(_a2_events_by_date, _A2_SQL, EXTRA),
+    # no oracle: an HLL estimate; pytest bounds it by the exact count
+    "a12_approx_distinct": Query(_a12_approx_distinct, None, EXTRA),
+    "a12_distinct_users": Query(_a12_distinct_users, _A12_SQL, EXTRA),
+    "a3_key_usage": Query(_a3_key_usage, _A3_USAGE_SQL, EXTRA),
+    "doc_tf_embeddings": Query(
+        _doc_tf_embeddings, _DOC_TF_SQL, EXTRA, sf1=True),
+    "a11_type_pivot": Query(_a11_type_pivot, _A11_SQL, EXTRA),
+    "t8_gap_sessions": Query(_t8_gap_sessions, _T8_GAP_SQL, EXTRA),
+    "fingerprints": Query(
+        _fingerprints, _FINGERPRINT_SQL, EXTRA, bench=True, sf1=True),
+    "token_counts": Query(_token_counts, _TOKEN_COUNTS_SQL, EXTRA, sf1=True),
+    "winnow_fingerprints": Query(
+        _winnow_fingerprints, _WINNOW_SQL, EXTRA, sf1=True),
+    "doc_quality": Query(
+        _doc_quality, _quality_sql(), EXTRA, bench=True, plan=True, sf1=True),
+    "q5_region_volume": Query(_q5_region_volume, _Q5_SQL, EXTRA, plan=True),
+    "mixture_summary": Query(
+        _mixture_summary, _MIXTURE_SUMMARY_SQL, EXTRA, sf1=True),
+    "bloom_decontaminate": Query(
+        _bloom_decontaminate, _BLOOM_DECONTAMINATE_SQL, EXTRA, sf1=True),
+    "pack_summary": Query(_pack_summary, _PACK_SUMMARY_SQL, EXTRA, sf1=True),
+    "quality_classify": Query(
+        _quality_classify, _quality_classify_sql(), EXTRA),
+    "kmeans_cells": Query(_kmeans_cells, None, EXTRA, sf1=True),
+    "q18_large_orders": Query(_q18_large_orders, _Q18_SQL, EXTRA),
+    "w1_top_orders_per_customer": Query(
+        _w1_top_orders_per_customer, _W1_SQL, EXTRA, plan=True),
+    "q3_nation_revenue": Query(
+        _q3_nation_revenue, _Q3_SQL, EXTRA, bench=True, plan=True),
+    "q1_pricing": Query(_q1_pricing, _Q1_SQL, EXTRA, bench=True),
+    "a10_value_quantiles": Query(_a10_value_quantiles, _A10_SQL, EXTRA),
+    "t8_assembled_docs": Query(_t8_assembled_docs, _T8_ASSEMBLED_SQL, EXTRA),
+    "winnow_containment": Query(
+        _winnow_containment, _WINNOW_CONTAINMENT_SQL, EXTRA, sf1=True),
+    "bpe_train_merges": Query(_bpe_train_merges, None, EXTRA, sf1=True),
+    # no oracle: pytest checks the codec against local WAV files
+    "media_audio_features": Query(_media_audio_features, None, EXTRA),
+    "bm25_join": Query(
+        _bm25_join, _bm25_join_sql(), EXTRA, bench=True, plan=True, sf1=True),
+    "stratified_sample": Query(
+        _stratified_sample, _STRATIFIED_SQL, EXTRA, sf1=True),
+    # no oracle: pytest checks the codec against local PNG files
+    "media_image_features": Query(_media_image_features, None, EXTRA),
+    "unigram_nll": Query(
+        _unigram_nll, _UNIGRAM_NLL_SQL, EXTRA, bench=True, sf1=True),
+    "chunk_documents": Query(
+        _chunk_documents, _CHUNK_SQL, EXTRA, bench=True, plan=True, sf1=True),
+    "source_kl_divergence": Query(
+        _source_kl, _SOURCE_KL_SQL, EXTRA, bench=True, plan=True, sf1=True),
+    "decontaminate": Query(
+        _decontaminate, _DECONTAMINATE_SQL, EXTRA, bench=True, sf1=True),
+    "mojibake_repair": Query(
+        _mojibake_repair, _mojibake_sql(), EXTRA,
+        bench=True, plan=True, sf1=True),
+    "flesch_readability": Query(
+        _flesch_readability, _FLESCH_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "lexical_diversity": Query(
+        _lexical_diversity, _LEXDIV_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "split_summary": Query(
+        _split_summary, _SPLIT_SUMMARY_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "char_entropy": Query(
+        _char_entropy, _CHAR_ENTROPY_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "heaps_growth": Query(
+        _heaps_growth, _HEAPS_SQL, EXTRA, bench=True, plan=True, sf1=True),
+    "cross_source_dup_matrix": Query(
+        _cross_source_dup, _cross_source_dup_sql(), EXTRA,
+        bench=True, plan=True, sf1=True),
+    "event_funnel": Query(
+        _event_funnel, _event_funnel_sql(), EXTRA, bench=True, plan=True),
+    "cohort_retention": Query(
+        _cohort_retention, _COHORT_SQL, EXTRA, bench=True, plan=True),
+    "daily_anomalies": Query(
+        _daily_anomalies, _ANOMALY_SQL, EXTRA, bench=True, plan=True),
+    "temperature_resample": Query(
+        _temperature_resample, _TEMP_RESAMPLE_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "length_quantiles": Query(
+        _length_quantiles, _LENGTH_QUANTILES_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "incremental_near_dup": Query(
+        _incremental_near_dup, _INCREMENTAL_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "leakage_safe_split": Query(
+        _leakage_safe_split, _LEAKAGE_SPLIT_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "ivf_recall": Query(
+        _ivf_recall, _ivf_recall_sql(), EXTRA,
+        bench=True, plan=True, sf1=True),
+    "collapse_repeats": Query(
+        _collapse_repeats, _COLLAPSE_REPEATS_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "dialogue_audit": Query(
+        _dialogue_audit, _DIALOGUE_AUDIT_SQL, EXTRA, bench=True, plan=True),
+    "ngram_coverage": Query(
+        _ngram_coverage, _NGRAM_COVERAGE_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "cms_heavy_hitters": Query(
+        _cms_heavy_hitters, _CMS_HH_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "lsh_recall": Query(
+        _lsh_recall, _LSH_RECALL_SQL, EXTRA, bench=True, plan=True, sf1=True),
+    "centroid_similarity": Query(
+        _centroid_similarity, _CENTROID_SIM_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "ngram_novelty": Query(
+        _ngram_novelty, _ngram_novelty_sql(), EXTRA,
+        bench=True, plan=True, sf1=True),
+    "normalized_dedup": Query(
+        _normalized_dedup, _NORMALIZED_DEDUP_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "sft_context": Query(
+        _sft_context, _SFT_CONTEXT_SQL, EXTRA, bench=True, plan=True),
+    "sft_pairs": Query(
+        _sft_pairs, _SFT_PAIRS_SQL, EXTRA, bench=True, plan=True),
+    "conv_prefix_dedup": Query(
+        _conv_prefix_dedup, _CONV_PREFIX_DEDUP_SQL, EXTRA,
+        bench=True, plan=True),
+    "tool_runs": Query(
+        _tool_runs, _TOOL_RUNS_SQL, EXTRA, bench=True, plan=True),
+    "mad_outliers": Query(
+        _mad_outliers, _MAD_OUTLIERS_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "curriculum_bins": Query(
+        _curriculum_bins, _CURRICULUM_BINS_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "truncate_context": Query(
+        _truncate_context, _TRUNCATE_CONTEXT_SQL, EXTRA,
+        bench=True, plan=True),
+    "merge_role_runs": Query(
+        _merge_role_runs, _MERGE_ROLE_RUNS_SQL, EXTRA, bench=True, plan=True),
+    "quantize_embeddings": Query(
+        _quantize_embeddings, _QUANTIZE_EMB_SQL, EXTRA,
+        bench=True, plan=True, sf1=True),
+    "curate_conversations": Query(
+        _curate_conversations, _CURATE_CONVS_SQL, EXTRA,
+        bench=True, plan=True),
+    "turn_latency": Query(
+        _turn_latency, _TURN_LATENCY_SQL, EXTRA, bench=True, plan=True),
+    "role_transitions": Query(
+        _role_transitions, _ROLE_TRANSITIONS_SQL, EXTRA,
+        bench=True, plan=True),
+}
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {n: q.build for n, q in REGISTRY.items() if q.gate}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracles for every SQL-expressible query — including the whole
-    LSH family (minhash_near_dup / simhash_near_dup / ann_lsh_topk /
-    embedding_near_dup): approximate as estimators/search, but fully
-    deterministic given the seeded hash families and hyperplanes, so DuckDB
-    reproduces the bucketing and verification bit-for-bit. Omitted
-    (rows-only): flagship_extract / full_pipeline (per-turn extraction —
-    golden-file + differential-fuzz gated instead), boilerplate_strip /
-    pdf_layout (prev/next-block classification and geometric clustering —
-    pytest geometry/classification goldens)."""
-    return {
-        "a1_event_stats": _A1_SQL,
-        "a2_zero_filled": _A2Z_SQL,
-        "a3_key_stats": _A3_SQL,
-        "a5_counts_by_type": _A5_SQL,
-        "a4_learning_stats": _A4_SQL,
-        "a7_word_frequency": _A7_SQL,
-        "a8_top_pending": _A8_SQL,
-        "a9_event_pagination": _A9_SQL,
-        "s4_preview": _S4_SQL,
-        "s5_export": _s5_sql(),
-        "s6_import_merge": _s6_sql(),
-        "t8_event_sessions": _T8_SQL,
-        "asof_signup_attribution": _ASOF_SQL,
-        "range_join_error_sessions": _RANGE_JOIN_SQL,
-        "j2_unknown_antijoin": _J2_SQL,
-        "exact_dedup": _EXACT_DEDUP_SQL,
-        "minhash_near_dup": _MINHASH_NEAR_DUP_SQL,
-        "jaccard_near_dup": _JACCARD_SQL,
-        "dedup_clusters": _DEDUP_CLUSTERS_SQL,
-        "simhash_near_dup": _SIMHASH_NEAR_DUP_SQL,
-        "curate_corpus": _curate_sql(),
-        "c4_filters": _C4_FILTERS_SQL,
-        "edit_near_dup": _EDIT_NEAR_DUP_SQL,
-        "winnow_near_dup": _WINNOW_NEAR_DUP_SQL,
-        "substr_dup_stats": _SUBSTR_DUP_SQL,
-        "line_strip": _line_strip_sql(),
-        "paragraph_dedup": _paragraph_dedup_sql(),
-        "ann_cosine_topk": _ANN_SQL,
-        "ivf_topk": _ivf_sql(),
-        "knn_join": _KNN_SQL,
-        "embedding_near_dup": _emb_near_dup_sql(),
-        "semantic_dedup": _semantic_dedup_sql(),
-        "rrf_fusion": _rrf_fusion_sql(),
-        "bm25_topk": _bm25_topk_sql(),
-        "tfidf_topk_terms": _TFIDF_SQL,
-        "lang_id_counts": _langid_sql(),
-        "gopher_repetition": _GOPHER_REPETITION_SQL,
-        "bigram_nll": _BIGRAM_NLL_SQL,
-        "pmi_collocations": _PMI_SQL,
-        "pii_redaction": _pii_sql(),
-        "source_stats": _source_stats_sql(),
-        "training_shards": _SHARDS_SQL,
-        "dsir_importance": _DSIR_SQL,
-        "cap_per_source": _cap_per_source_sql(),
-    }
+    return {n: q.oracle for n, q in REGISTRY.items() if q.gate and q.oracle}
 
 
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Oracle-backed physical VARIANTS of queries already in
-    :func:`queries` — numpy vs higher-order-function top-k, multi-probe vs
-    single-bucket LSH, the signature-only stages the near-dup pipelines
-    subsume, the corpus anti-join over the same connected components, and
-    queries subsumed by a gate entry that composes them (fingerprints ⊂
-    source_stats; t8_gap_sessions is the CTE inside
-    range_join_error_sessions; a11's pivot is the a5 rollup re-shaped;
-    token_counts ⊂ source_stats' scoring; a12_distinct_users overlaps
-    a5's grouping — both displaced in round 4 so the winnow near-dup
-    family gets driver-gate correctness rows; doc_quality is the per-doc
-    disaggregation of source_stats' fused scoring and q5 repeats
-    q3/q18's broadcast-join-agg shape — displaced so the round-4
-    gopher_repetition / unigram_nll quality filters get gate rows, per
-    the newest-family-gets-gated rotation rule).
-
-    Also holds round-4 operator families added AFTER the gate rotation —
-    mixture_summary (token-weighted corpus mixing), bloom_decontaminate
-    (narrow Bloom-bitset decontamination), pack_summary (sequence
-    packing) — all fully oracle-backed and rotation candidates for the
-    next round. The late-round-4 dsir_importance / cap_per_source pair
-    DID rotate into the gate, displacing q18_large_orders and
-    w1_top_orders_per_customer here (TPC-H shapes whose join-agg and
-    window-top-k siblings q1/q3/cap_per_source remain gated); session 5's
-    substr_dup_stats (ExactSubstr span dedup) rotated in displacing
-    ann_lsh_topk here (its multi-probe sibling was already an extra, and
-    ivf_topk keeps a bucketed-ANN shape gated); session 6's line_strip
-    (corpus-level boilerplate-line dedup) and rrf_fusion (hybrid
-    retrieval) rotated in displacing a10_value_quantiles (bonus
-    aggregate, pivot/approx siblings already extras) and q1_pricing (the
-    last gated TPC-H bonus shape — q1/q3/q5/q18/w1 now all live here,
-    all still --extended-verified). Round 5 rotated bm25_topk/bm25_join
-    into the gate (the only round-4 family without a gate row of its
-    own), displacing t8_assembled_docs and winnow_containment here —
-    each the second physical shape of a family whose sibling
-    (t8_event_sessions, winnow_near_dup) stays gated.
-    Kept out of the driver's 50-row gate so every distinct operator family
-    gets a recorded row there; run them with
-    ``python tools/check_oracles.py --extended``."""
-    return {
-        "minhash_signatures": _minhash_signatures,
-        "simhash": _simhash,
-        "dedup_corpus": _dedup_corpus,
-        "ann_cosine_topk_np": _ann_cosine_topk_np,
-        "ann_lsh_topk": _ann_lsh_topk,
-        "ann_lsh_topk_mp": _ann_lsh_topk_mp,
-        "a2_events_by_date": _a2_events_by_date,
-        "a12_approx_distinct": _a12_approx_distinct,
-        "a12_distinct_users": _a12_distinct_users,
-        "a3_key_usage": _a3_key_usage,
-        "doc_tf_embeddings": _doc_tf_embeddings,
-        "a11_type_pivot": _a11_type_pivot,
-        "t8_gap_sessions": _t8_gap_sessions,
-        "fingerprints": _fingerprints,
-        "token_counts": _token_counts,
-        "winnow_fingerprints": _winnow_fingerprints,
-        "doc_quality": _doc_quality,
-        "q5_region_volume": _q5_region_volume,
-        "mixture_summary": _mixture_summary,
-        "bloom_decontaminate": _bloom_decontaminate,
-        "pack_summary": _pack_summary,
-        "quality_classify": _quality_classify,
-        "kmeans_cells": _kmeans_cells,
-        "q18_large_orders": _q18_large_orders,
-        "w1_top_orders_per_customer": _w1_top_orders_per_customer,
-        "q3_nation_revenue": _q3_nation_revenue,
-        "q1_pricing": _q1_pricing,
-        "a10_value_quantiles": _a10_value_quantiles,
-        "t8_assembled_docs": _t8_assembled_docs,
-        "winnow_containment": _winnow_containment,
-        "bpe_train_merges": _bpe_train_merges,
-        # displaced by the round-5 bigram_nll / tfidf_topk_terms /
-        # edit_near_dup rotation (see queries() comments): the second
-        # M1 codec shape, the second BM25 physical shape, and the
-        # sampler curate_corpus composes — all still oracle- or
-        # pytest-verified here via --extended
-        "media_audio_features": _media_audio_features,
-        "bm25_join": _bm25_join,
-        "stratified_sample": _stratified_sample,
-        # displaced by the round-5 session-2 paragraph_dedup /
-        # pmi_collocations rotation (see queries() comments): the M1
-        # image codec shape (rows-only, pytest-golden-gated beside the
-        # audio shape above) and the unigram LM filter (the core the
-        # gated bigram_nll interpolates against — still exact-oracle
-        # verified here)
-        "media_image_features": _media_image_features,
-        "unigram_nll": _unigram_nll,
-        # round-5 session-2 family added after the gate reached 50
-        # distinct families — fully oracle-backed here via --extended
-        "chunk_documents": _chunk_documents,
-        "source_kl_divergence": _source_kl,
-        # displaced by the round-5 session-3 c4_filters rotation:
-        # composed verbatim inside the gated curate_corpus (its Bloom
-        # sibling was already here) — still exact-oracle verified
-        "decontaminate": _decontaminate,
-        # round-5 session-3 families beyond the 50-distinct-family gate —
-        # all exact-oracle backed here via --extended
-        "mojibake_repair": _mojibake_repair,
-        "flesch_readability": _flesch_readability,
-        "lexical_diversity": _lexical_diversity,
-        "split_summary": _split_summary,
-        "char_entropy": _char_entropy,
-        "heaps_growth": _heaps_growth,
-        "cross_source_dup_matrix": _cross_source_dup,
-        # round-5 session-4 behavioral analytics (X40-X42) — the
-        # one-shuffle user-key OLAP shapes past the reference's A1-A9;
-        # exact-oracle backed here via --extended
-        "event_funnel": _event_funnel,
-        "cohort_retention": _cohort_retention,
-        "daily_anomalies": _daily_anomalies,
-        # round-5 session-4 corpus-mix tooling (X43-X44)
-        "temperature_resample": _temperature_resample,
-        "length_quantiles": _length_quantiles,
-        # round-5 session-4 ingestion/leakage tooling (X45-X46)
-        "incremental_near_dup": _incremental_near_dup,
-        "leakage_safe_split": _leakage_safe_split,
-        # round-5 session-4 ANN eval harness (X47)
-        "ivf_recall": _ivf_recall,
-        # round-5 session-4 within-doc repeat collapse (X48)
-        "collapse_repeats": _collapse_repeats,
-        # round-5 session-5 dialogue-structure audit (X49) — the audit
-        # gate over the north rule's exact transcript input shape
-        "dialogue_audit": _dialogue_audit,
-        # round-5 session-5 graded contamination overlap (X50)
-        "ngram_coverage": _ngram_coverage,
-        # round-5 session-5 count-min-sketch heavy hitters (X51)
-        "cms_heavy_hitters": _cms_heavy_hitters,
-        # round-5 session-5 LSH candidate-recall harness (X52)
-        "lsh_recall": _lsh_recall,
-        # round-5 session-7 per-source centroid cosine matrix (X53)
-        "centroid_similarity": _centroid_similarity,
-        # round-5 session-7 per-doc n-gram novelty (X54)
-        "ngram_novelty": _ngram_novelty,
-        # round-5 session-7 normalized exact dedup (X55)
-        "normalized_dedup": _normalized_dedup,
-        # round-5 session-8 SFT example preparation over the transcript
-        # view (X56–X58) and tool-run islands (X59)
-        "sft_context": _sft_context,
-        "sft_pairs": _sft_pairs,
-        "conv_prefix_dedup": _conv_prefix_dedup,
-        "tool_runs": _tool_runs,
-        # round-5 session-8 statistical selection (X60–X61)
-        "mad_outliers": _mad_outliers,
-        "curriculum_bins": _curriculum_bins,
-        # round-5 session-8 batch 3 (X62–X64)
-        "truncate_context": _truncate_context,
-        "merge_role_runs": _merge_role_runs,
-        "quantize_embeddings": _quantize_embeddings,
-        # round-5 session-8 composed conversation curation (X65)
-        "curate_conversations": _curate_conversations,
-        # round-5 session-8 dialogue analytics (X66–X67)
-        "turn_latency": _turn_latency,
-        "role_transitions": _role_transitions,
-    }
+    return {n: q.build for n, q in REGISTRY.items() if not q.gate}
 
 
 def extra_oracle_sql() -> dict[str, str]:
     return {
-        "minhash_signatures": _MINHASH_SQL,
-        "simhash": _SIMHASH_SQL,
-        "dedup_corpus": _DEDUP_CORPUS_SQL,
-        "ann_cosine_topk_np": _ANN_SQL,
-        "ann_lsh_topk": _ann_lsh_sql(),
-        "ann_lsh_topk_mp": _ann_lsh_mp_sql(),
-        "a2_events_by_date": _A2_SQL,
-        "a12_distinct_users": _A12_SQL,
-        "a3_key_usage": _A3_USAGE_SQL,
-        "doc_tf_embeddings": _DOC_TF_SQL,
-        "a11_type_pivot": _A11_SQL,
-        "t8_gap_sessions": _T8_GAP_SQL,
-        "fingerprints": _FINGERPRINT_SQL,
-        "token_counts": _TOKEN_COUNTS_SQL,
-        "winnow_fingerprints": _WINNOW_SQL,
-        "doc_quality": _quality_sql(),
-        "q5_region_volume": _Q5_SQL,
-        "mixture_summary": _MIXTURE_SUMMARY_SQL,
-        "bloom_decontaminate": _BLOOM_DECONTAMINATE_SQL,
-        "pack_summary": _PACK_SUMMARY_SQL,
-        "quality_classify": _quality_classify_sql(),
-        "q18_large_orders": _Q18_SQL,
-        "w1_top_orders_per_customer": _W1_SQL,
-        "q3_nation_revenue": _Q3_SQL,
-        "q1_pricing": _Q1_SQL,
-        "a10_value_quantiles": _A10_SQL,
-        "t8_assembled_docs": _T8_ASSEMBLED_SQL,
-        "winnow_containment": _WINNOW_CONTAINMENT_SQL,
-        "bm25_join": _bm25_join_sql(),
-        "stratified_sample": _STRATIFIED_SQL,
-        "unigram_nll": _UNIGRAM_NLL_SQL,
-        "chunk_documents": _CHUNK_SQL,
-        "source_kl_divergence": _SOURCE_KL_SQL,
-        "decontaminate": _DECONTAMINATE_SQL,
-        "mojibake_repair": _mojibake_sql(),
-        "flesch_readability": _FLESCH_SQL,
-        "lexical_diversity": _LEXDIV_SQL,
-        "split_summary": _SPLIT_SUMMARY_SQL,
-        "char_entropy": _CHAR_ENTROPY_SQL,
-        "heaps_growth": _HEAPS_SQL,
-        "cross_source_dup_matrix": _cross_source_dup_sql(),
-        "event_funnel": _event_funnel_sql(),
-        "cohort_retention": _COHORT_SQL,
-        "daily_anomalies": _ANOMALY_SQL,
-        "temperature_resample": _TEMP_RESAMPLE_SQL,
-        "length_quantiles": _LENGTH_QUANTILES_SQL,
-        "incremental_near_dup": _INCREMENTAL_SQL,
-        "leakage_safe_split": _LEAKAGE_SPLIT_SQL,
-        "ivf_recall": _ivf_recall_sql(),
-        "collapse_repeats": _COLLAPSE_REPEATS_SQL,
-        "dialogue_audit": _DIALOGUE_AUDIT_SQL,
-        "ngram_coverage": _NGRAM_COVERAGE_SQL,
-        "cms_heavy_hitters": _CMS_HH_SQL,
-        "lsh_recall": _LSH_RECALL_SQL,
-        "centroid_similarity": _CENTROID_SIM_SQL,
-        "ngram_novelty": _ngram_novelty_sql(),
-        "normalized_dedup": _NORMALIZED_DEDUP_SQL,
-        "sft_context": _SFT_CONTEXT_SQL,
-        "sft_pairs": _SFT_PAIRS_SQL,
-        "conv_prefix_dedup": _CONV_PREFIX_DEDUP_SQL,
-        "tool_runs": _TOOL_RUNS_SQL,
-        "mad_outliers": _MAD_OUTLIERS_SQL,
-        "curriculum_bins": _CURRICULUM_BINS_SQL,
-        "truncate_context": _TRUNCATE_CONTEXT_SQL,
-        "merge_role_runs": _MERGE_ROLE_RUNS_SQL,
-        "quantize_embeddings": _QUANTIZE_EMB_SQL,
-        "curate_conversations": _CURATE_CONVS_SQL,
-        "turn_latency": _TURN_LATENCY_SQL,
-        "role_transitions": _ROLE_TRANSITIONS_SQL,
-        # a12_approx_distinct: no oracle (HLL estimate; tolerance-band
-        # pytest vs the exact count instead)
-        # media_audio_features / media_image_features: no oracle
-        # (rows-only; codec pytest vs local WAV/PNG references instead)
+        n: q.oracle for n, q in REGISTRY.items() if not q.gate and q.oracle
     }

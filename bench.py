@@ -1,12 +1,13 @@
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR on
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
-Headline set = the flagship fused-extraction pipeline (the north metric is
-its turns/sec) plus one representative per operator family (dedup,
-similarity, text analysis, aggregates, reassembly, joins). Each query is
-forced end-to-end with a noop sink (full computation, no driver collect
-overhead); one warmup pass absorbs JVM/codegen compilation so the numbers
-measure steady-state executor throughput, which is what scales.
+Headline set = the registry entries flagged ``bench`` in
+``__spark_entry__.py``: the flagship fused-extraction pipeline (the north
+metric is its turns/sec) plus one representative per operator family
+(dedup, similarity, text analysis, aggregates, reassembly, joins). Each
+query is forced end-to-end with a noop sink (full computation, no driver
+collect overhead); one warmup pass absorbs JVM/codegen compilation so the
+numbers measure steady-state executor throughput, which is what scales.
 
 SELF-DEFENSE against shared-VM noise (two rounds of ambiguous flagship
 numbers forced this): every query runs ``SPARK_GRAFT_BENCH_REPS`` times
@@ -35,89 +36,6 @@ REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 #: above the bound after the extra reps → flagged unstable in the JSON
 _STABLE_SPREAD = 0.25
 
-HEADLINE = [
-    "flagship_extract",
-    "full_pipeline",
-    "boilerplate_strip",
-    "pdf_layout",
-    "a7_word_frequency",
-    "t8_event_sessions",
-    "exact_dedup",
-    "minhash_near_dup",
-    "jaccard_near_dup",
-    "dedup_clusters",
-    "simhash",
-    "simhash_near_dup",
-    "decontaminate",
-    "curate_corpus",
-    "substr_dup_stats",
-    "ann_cosine_topk",
-    "bm25_topk",
-    "bm25_join",
-    "ivf_topk",
-    "knn_join",
-    "embedding_near_dup",
-    "semantic_dedup",
-    "asof_signup_attribution",
-    "range_join_error_sessions",
-    "lang_id_counts",
-    "line_strip",
-    "rrf_fusion",
-    "doc_quality",
-    "gopher_repetition",
-    "unigram_nll",
-    "bigram_nll",
-    "tfidf_topk_terms",
-    "edit_near_dup",
-    "pmi_collocations",
-    "paragraph_dedup",
-    "chunk_documents",
-    "source_kl_divergence",
-    "c4_filters",
-    "mojibake_repair",
-    "flesch_readability",
-    "lexical_diversity",
-    "split_summary",
-    "char_entropy",
-    "heaps_growth",
-    "cross_source_dup_matrix",
-    "event_funnel",
-    "cohort_retention",
-    "daily_anomalies",
-    "temperature_resample",
-    "length_quantiles",
-    "incremental_near_dup",
-    "leakage_safe_split",
-    "ivf_recall",
-    "collapse_repeats",
-    "dialogue_audit",
-    "ngram_coverage",
-    "cms_heavy_hitters",
-    "lsh_recall",
-    "centroid_similarity",
-    "ngram_novelty",
-    "normalized_dedup",
-    "sft_context",
-    "sft_pairs",
-    "conv_prefix_dedup",
-    "tool_runs",
-    "mad_outliers",
-    "curriculum_bins",
-    "truncate_context",
-    "merge_role_runs",
-    "quantize_embeddings",
-    "curate_conversations",
-    "turn_latency",
-    "role_transitions",
-    "bpe_token_counts",
-    "fingerprints",
-    "pii_redaction",
-    "source_stats",
-    "training_shards",
-    "q1_pricing",
-    "q3_nation_revenue",
-]
-
 
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
@@ -139,7 +57,8 @@ def main() -> int:
     spark = get_spark("ocr-spark-bench", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
-    qs = {**entrymod.queries(), **entrymod.extra_queries()}
+    qs = {n: q.build for n, q in entrymod.REGISTRY.items()}
+    headline = [n for n, q in entrymod.REGISTRY.items() if q.bench]
 
     # warmup: one full flagship pass spins up all Python workers, compiles
     # the rule tables per worker, and JITs the codegen'd stages — the timed
@@ -169,7 +88,7 @@ def main() -> int:
         return dt
 
     reps: dict[str, list[float]] = {}
-    for name in HEADLINE:
+    for name in headline:
         reps[name] = [_timed(name) for _ in range(REPS)]
 
     # per-query self-defense (same rationale as the flagship's below, at
@@ -179,7 +98,7 @@ def main() -> int:
     # >=3 clean reps for the median while a genuine regression (all reps
     # agreeing) spends nothing. Capped so a fully-contended box cannot
     # stretch the suite unboundedly.
-    for name in HEADLINE:
+    for name in headline:
         r = reps[name]
         if (max(r) - min(r)) > max(0.5, statistics.median(r)):
             r.extend(_timed(name) for _ in range(2))

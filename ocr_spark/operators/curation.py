@@ -1026,7 +1026,8 @@ def curriculum_bins(
 
     Determinism: thresholds are the exact linear-interpolated quantile
     family (Spark ``percentile`` ≡ DuckDB ``quantile_cont`` at rank
-    ``q·(n−1)``) at exactly-representable fractions ``i/n_bins``;
+    ``q·(n−1)``) at fractions ``i/n_bins``, which are exactly
+    representable only when ``n_bins`` is a power of two (the default 8);
     assignment is integer-vs-double strict comparison against those
     literals — no arithmetic whose rounding could differ.
 

@@ -1160,9 +1160,12 @@ def mad_outliers(
     documents cannot drag toward themselves (median and MAD have a 50%
     breakdown point; mean/std have 0%).
 
-    Returns one row per input row::
+    Returns one row per input row whose group is not NULL::
 
         (id, group, value, med, mad, robust_z, is_outlier)
+
+    Rows with a NULL group are excluded: NULL keys never match in the two
+    inner joins, and the DuckDB oracle drops them the same way.
 
     ``med``/``mad`` are rounded to 6 dp for display; ``robust_z`` and the
     flag are computed from the UNROUNDED statistics, in one fixed

@@ -27,6 +27,12 @@ def get_spark(
     if shuffle_partitions is None:
         # local mode: match core count; on a real cluster pass ~2-3x total cores
         shuffle_partitions = max(cpus, 8)
+    # Python workers import ocr_spark through the PYTHONPATH the JVM is
+    # launched with; outside the repo root they could not find it
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.environ.get("PYTHONPATH")
+    if root not in (path or "").split(os.pathsep):
+        os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (root, path) if p)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -4,7 +4,8 @@ Runs every ``queries()`` entry on Spark against ``$SF_DIR`` (default
 sf0.01) and, when an ``oracle_sql()`` entry exists, the oracle on DuckDB
 with the same tables registered as views. Compares row count, column names,
 and an order-insensitive value hash (rows sorted by their string repr,
-columns sorted by name). Exit code 1 on any mismatch.
+columns sorted by name). Exit code 1 on any mismatch. ``run`` returns the
+per-query results to in-process callers such as ``tools/sf1_tier.py``.
 
   python tools/check_oracles.py [--sf /root/testdata/sf0.01] [--only name,...]
 """
@@ -54,6 +55,136 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
+def _describe(e: Exception) -> str:
+    """The exception type and its message on one line: a Python-worker
+    error's message starts with a newline, so its first line is empty."""
+    msg = str(e).strip()
+    return f"{type(e).__name__}: {msg}" if msg else type(e).__name__
+
+
+def run(
+    sf: str,
+    names: list[str] | None = None,
+    extended: bool = False,
+    engine_time: bool = False,
+) -> dict[str, dict]:
+    """Check the gate queries (plus the extras when ``extended``) named in
+    ``names`` (all when None) at ``sf``, printing one line per query.
+
+    Returns ``{name: {"rows", "hash", "sec", "engine_sec", "oracle",
+    "failure"}}``: ``hash`` is None for a rows-only query, ``sec`` times
+    the comparison collect(), ``engine_sec`` a count() of the same plan
+    (None unless ``engine_time``), and ``failure`` is None on a pass.
+    """
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from ocr_spark.session import get_spark
+
+    spark = get_spark("oracle-check")
+    con = duckdb.connect()
+    # bound the oracle's buffer pool: DuckDB's default limit is 80% of
+    # RAM, and at the sf1 tier its HUGEINT joins grow the shared
+    # process's RSS until the NEXT Spark query's executors stall in page
+    # faults — measured 38x inflation (bloom_decontaminate 125 s in the
+    # sweep vs 3.3 s isolated). The oracles all fit comfortably in 24 GB.
+    con.execute("SET memory_limit='24GB'")
+    for t in TABLES:
+        # partial tiers (data/sf1 ships documents+embeddings only) register
+        # what exists; queries over missing tables fail loudly at run time
+        if os.path.exists(f"{sf}/{t}.parquet"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'"
+            )
+
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    if extended:
+        qs = {**qs, **entrymod.extra_queries()}
+        oracles = {**oracles, **entrymod.extra_oracle_sql()}
+    results: dict[str, dict] = {}
+    for name, fn in qs.items():
+        if names is not None and name not in names:
+            continue
+        res = results[name] = {
+            "rows": None, "hash": None, "sec": None, "engine_sec": None,
+            "oracle": name in oracles, "failure": None,
+        }
+        t0 = time.monotonic()
+        try:
+            if engine_time:
+                # separate ENGINE cost from the harness's row
+                # serialization: a count() drives the identical plan but
+                # collects nothing, so array-heavy outputs (winnow sets,
+                # signatures — multi-M elements) don't book their driver
+                # pickle time as engine time. The comparison collect below
+                # then re-executes; the sweep pays ~2x for the split.
+                te = time.monotonic()
+                fn(spark, sf).count()
+                res["engine_sec"] = time.monotonic() - te
+                t0 = time.monotonic()
+            sdf = fn(spark, sf)
+            cols = sdf.columns
+            rows = [tuple(r) for r in sdf.collect()]
+        except Exception as e:
+            res["failure"] = f"spark error: {_describe(e)}"
+            print(f"FAIL {name}: {res['failure']}")
+            continue
+        res["sec"] = time.monotonic() - t0
+        res["rows"] = len(rows)
+        suffix = (
+            f", engine {res['engine_sec']:.1f}s"
+            if res["engine_sec"] is not None else ""
+        )
+        # between-query hygiene (same fix bench.py carries): operators
+        # that build eager localCheckpoints (surrogate-id dictionaries,
+        # cluster resolution) leave blocks persisted until a driver GC
+        # that may never come — across a 35-query sweep the leaked blocks
+        # shrink executor memory and progressively degrade later queries
+        gc.collect()
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist(False)
+        if name not in oracles:
+            print(f"ok   {name}: rows-only, {len(rows)} rows "
+                  f"({res['sec']:.1f}s{suffix})")
+            if not rows and name != "jaccard_near_dup":
+                print(f"     WARNING {name} returned 0 rows")
+            continue
+        try:
+            out = con.execute(oracles[name])
+            ocols = [d[0] for d in out.description]
+            orows = out.fetchall()
+        except Exception as e:
+            res["failure"] = f"duckdb error: {_describe(e)}"
+            print(f"FAIL {name}: {res['failure']}")
+            continue
+        sh, oh = value_hash(cols, rows), value_hash(ocols, orows)
+        res["hash"] = sh
+        if sorted(cols) != sorted(ocols):
+            res["failure"] = f"cols {sorted(cols)} vs {sorted(ocols)}"
+        elif len(rows) != len(orows):
+            res["failure"] = f"rowcount {len(rows)} vs {len(orows)}"
+        elif sh != oh:
+            res["failure"] = f"value hash {sh} vs {oh} ({len(rows)} rows)"
+        if res["failure"] is None:
+            print(f"PASS {name}: {len(rows)} rows, hash {sh} "
+                  f"({res['sec']:.1f}s{suffix})")
+            continue
+        print(f"FAIL {name}: {res['failure']}")
+        if res["failure"].startswith("value hash"):
+            o = sorted(range(len(cols)), key=lambda i: cols[i])
+            srepr = sorted("\x1f".join(_canon(r[i]) for i in o) for r in rows)
+            oo = sorted(range(len(ocols)), key=lambda i: ocols[i])
+            orepr = sorted("\x1f".join(_canon(r[i]) for i in oo) for r in orows)
+            for a, b in zip(srepr, orepr):
+                if a != b:
+                    print(f"     spark : {a[:200]}")
+                    print(f"     oracle: {b[:200]}")
+                    break
+    spark.stop()
+    return results
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SF_DIR", "/root/testdata/sf0.01"))
@@ -74,104 +205,9 @@ def main() -> int:
     args = ap.parse_args()
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import duckdb
-
-    import __spark_entry__ as entrymod
-    from ocr_spark.session import get_spark
-
-    spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    # bound the oracle's buffer pool: DuckDB's default limit is 80% of
-    # RAM, and at the sf1 tier its HUGEINT joins grow the shared
-    # process's RSS until the NEXT Spark query's executors stall in page
-    # faults — measured 38x inflation (bloom_decontaminate 125 s in the
-    # sweep vs 3.3 s isolated). The oracles all fit comfortably in 24 GB.
-    con.execute("SET memory_limit='24GB'")
-    for t in TABLES:
-        # partial tiers (data/sf1 ships documents+embeddings only) register
-        # what exists; queries over missing tables fail loudly at run time
-        if os.path.exists(f"{args.sf}/{t}.parquet"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'"
-            )
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    if args.extended:
-        qs = {**qs, **entrymod.extra_queries()}
-        oracles = {**oracles, **entrymod.extra_oracle_sql()}
-    only = set(args.only.split(",")) if args.only else None
-    failed = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.monotonic()
-        eng = None
-        try:
-            if args.engine_time:
-                # separate ENGINE cost from the harness's row
-                # serialization: a count() drives the identical plan but
-                # collects nothing, so array-heavy outputs (winnow sets,
-                # signatures — multi-M elements) don't book their driver
-                # pickle time as engine time. The comparison collect below
-                # then re-executes; the sweep pays ~2x for the split.
-                te = time.monotonic()
-                fn(spark, args.sf).count()
-                eng = time.monotonic() - te
-                t0 = time.monotonic()
-            sdf = fn(spark, args.sf)
-            cols = sdf.columns
-            rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            failed.append(name)
-            continue
-        dt = time.monotonic() - t0
-        # between-query hygiene (same fix bench.py carries): operators
-        # that build eager localCheckpoints (surrogate-id dictionaries,
-        # cluster resolution) leave blocks persisted until a driver GC
-        # that may never come — across a 35-query sweep the leaked blocks
-        # shrink executor memory and progressively degrade later queries
-        gc.collect()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        if name not in oracles:
-            suffix = f", engine {eng:.1f}s" if eng is not None else ""
-            print(f"ok   {name}: rows-only, {len(rows)} rows ({dt:.1f}s{suffix})")
-            if not rows and name != "jaccard_near_dup":
-                print(f"     WARNING {name} returned 0 rows")
-            continue
-        try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            failed.append(name)
-            continue
-        sh, oh = value_hash(cols, rows), value_hash(ocols, orows)
-        if sorted(cols) != sorted(ocols):
-            print(f"FAIL {name}: cols {sorted(cols)} vs {sorted(ocols)}")
-            failed.append(name)
-        elif len(rows) != len(orows):
-            print(f"FAIL {name}: rowcount {len(rows)} vs {len(orows)}")
-            failed.append(name)
-        elif sh != oh:
-            print(f"FAIL {name}: value hash {sh} vs {oh} ({len(rows)} rows)")
-            o = sorted(range(len(cols)), key=lambda i: cols[i])
-            srepr = sorted("\x1f".join(_canon(r[i]) for i in o) for r in rows)
-            oo = sorted(range(len(ocols)), key=lambda i: ocols[i])
-            orepr = sorted("\x1f".join(_canon(r[i]) for i in oo) for r in orows)
-            for a, b in zip(srepr, orepr):
-                if a != b:
-                    print(f"     spark : {a[:200]}")
-                    print(f"     oracle: {b[:200]}")
-                    break
-            failed.append(name)
-        else:
-            suffix = f", engine {eng:.1f}s" if eng is not None else ""
-            print(f"PASS {name}: {len(rows)} rows, hash {sh} ({dt:.1f}s{suffix})")
-    spark.stop()
+    names = args.only.split(",") if args.only else None
+    results = run(args.sf, names, args.extended, args.engine_time)
+    failed = [n for n, r in results.items() if r["failure"] is not None]
     if failed:
         print(f"\n{len(failed)} FAILED: {failed}")
         return 1

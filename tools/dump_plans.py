@@ -1,5 +1,8 @@
 """Dump formatted physical plans of the headline queries to BENCH/plans.md.
 
+The queries are the registry entries flagged ``plan`` in
+``__spark_entry__.py``.
+
 Evidence artifact for plan-shape review: PushedFilters / ReadSchema on
 scans, broadcast joins, TakeOrderedAndProject top-k, ArrowEvalPython (not
 BatchEvalPython) for the UDF stages, and the absence of shuffles in narrow
@@ -16,80 +19,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SHOW = [
-    "flagship_extract",
-    "full_pipeline",
-    "exact_dedup",
-    "minhash_signatures",
-    "ann_cosine_topk",
-    "knn_join",
-    "minhash_near_dup",
-    "jaccard_near_dup",
-    "dedup_clusters",
-    "w1_top_orders_per_customer",
-    "q5_region_volume",
-    "j2_unknown_antijoin",
-    "q3_nation_revenue",
-    "a7_word_frequency",
-    "doc_quality",
-    "t8_event_sessions",
-    "asof_signup_attribution",
-    "range_join_error_sessions",
-    "ivf_topk",
-    "pii_redaction",
-    "source_stats",
-    "training_shards",
-    "semantic_dedup",
-    "substr_dup_stats",
-    "bm25_topk",
-    "bm25_join",
-    "line_strip",
-    "rrf_fusion",
-    "bigram_nll",
-    "tfidf_topk_terms",
-    "edit_near_dup",
-    "pmi_collocations",
-    "paragraph_dedup",
-    "chunk_documents",
-    "source_kl_divergence",
-    "c4_filters",
-    "mojibake_repair",
-    "flesch_readability",
-    "lexical_diversity",
-    "split_summary",
-    "char_entropy",
-    "heaps_growth",
-    "cross_source_dup_matrix",
-    "event_funnel",
-    "cohort_retention",
-    "daily_anomalies",
-    "temperature_resample",
-    "length_quantiles",
-    "incremental_near_dup",
-    "leakage_safe_split",
-    "ivf_recall",
-    "collapse_repeats",
-    "dialogue_audit",
-    "ngram_coverage",
-    "cms_heavy_hitters",
-    "lsh_recall",
-    "centroid_similarity",
-    "ngram_novelty",
-    "normalized_dedup",
-    "sft_context",
-    "sft_pairs",
-    "conv_prefix_dedup",
-    "tool_runs",
-    "mad_outliers",
-    "curriculum_bins",
-    "truncate_context",
-    "merge_role_runs",
-    "quantize_embeddings",
-    "curate_conversations",
-    "turn_latency",
-    "role_transitions",
-]
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -101,15 +30,16 @@ def main() -> int:
 
     spark = get_spark("plan-dump", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    qs = {**entrymod.queries(), **entrymod.extra_queries()}
     parts = [
         "# Physical plans of the headline queries\n",
         "Generated by `python tools/dump_plans.py` — the plan shapes",
         "tests/test_plans.py asserts (pushdown, pruning, broadcast, no",
         "spurious shuffles, Arrow-vectorized Python exchange).\n",
     ]
-    for name in SHOW:
-        df = qs[name](spark, args.sf)
+    for name, q in entrymod.REGISTRY.items():
+        if not q.plan:
+            continue
+        df = q.build(spark, args.sf)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -1,6 +1,7 @@
-"""The routine sf1-tier sweep: every documents/embeddings-family query —
-dedup, curation, text-stats, winnow, AND the similarity family — oracle-
-checked at ``data/sf1`` (50k docs / 20k×64 vecs, the 10× tier where the
+"""The routine sf1-tier sweep: every registry query flagged ``sf1`` in
+``__spark_entry__.py`` (they read only documents/embeddings) — dedup,
+curation, text-stats, winnow, AND the similarity family — oracle-checked
+at ``data/sf1`` (50k docs / 20k×64 vecs, the 10× tier where the
 hot-key caps actually fire), with the cap-drop counters recorded so the
 recall loss is observable per run.
 
@@ -16,57 +17,14 @@ import argparse
 import json
 import os
 import pathlib
-import re
-import subprocess
 import sys
 import time
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-#: every gate/extra query that reads only documents/embeddings (the sf1
-#: tier ships no events/TPC-H tables)
-DOC_QUERIES = [
-    "exact_dedup", "minhash_near_dup", "jaccard_near_dup", "dedup_clusters",
-    "simhash_near_dup", "decontaminate", "stratified_sample", "curate_corpus",
-    "winnow_near_dup", "winnow_containment", "substr_dup_stats",
-    "lang_id_counts",
-    "bpe_token_counts", "pii_redaction", "source_stats", "training_shards",
-    "gopher_repetition", "unigram_nll", "bigram_nll", "line_strip",
-    "rrf_fusion", "tfidf_topk_terms",
-    # edit_near_dup is EXCLUDED from the sf1 sweep: its ORACLE is the
-    # brute-force banded Levenshtein self-join (the exact truth side,
-    # affordable at the 500/5k-doc gate tiers where it is verified),
-    # which is O(pairs·len²) single-threaded in DuckDB at 50k docs —
-    # measured >5 CPU-hours before being killed. The ENGINE's PassJoin
-    # side is sf1-scale (pigeonhole candidates + banded DP); the same
-    # exact-side-affordable-at-eval-tier stance as ivf_recall/lsh_recall.
-    "pmi_collocations", "paragraph_dedup", "chunk_documents",
-    "source_kl_divergence", "c4_filters", "mojibake_repair",
-    "flesch_readability", "lexical_diversity", "split_summary",
-    "char_entropy", "heaps_growth", "cross_source_dup_matrix",
-    "temperature_resample", "length_quantiles",
-    "incremental_near_dup", "leakage_safe_split", "collapse_repeats",
-    "ngram_coverage", "cms_heavy_hitters", "lsh_recall",
-    "centroid_similarity", "ngram_novelty", "normalized_dedup",
-    "mad_outliers", "curriculum_bins", "quantize_embeddings",
-    # (the X56–X59 transcript-view families read events, which the sf1
-    # tier doesn't ship — their 10× evidence is the sf0.1 events table,
-    # 10× sf0.01, via check_oracles --extended)
-    # extras (need --extended)
-    "minhash_signatures", "simhash", "dedup_corpus", "fingerprints",
-    "token_counts", "winnow_fingerprints", "doc_tf_embeddings", "doc_quality",
-    "mixture_summary", "bloom_decontaminate", "pack_summary",
-    "dsir_importance", "cap_per_source",
-    "bm25_topk", "bm25_join", "bpe_train_merges",
-]
-SIM_QUERIES = [
-    "ann_cosine_topk", "ann_lsh_topk", "ivf_topk", "knn_join",
-    "semantic_dedup", "ivf_recall",
-    # extras
-    "ann_cosine_topk_np", "ann_lsh_topk_mp", "kmeans_cells",
-]
-HEAVY = ["embedding_near_dup"]  # ~3 min at sf1; --skip-heavy drops it
+#: ~3 min at sf1; --skip-heavy drops it
+HEAVY = "embedding_near_dup"
 
 
 def cap_counters(sf_dir: str) -> dict:
@@ -134,7 +92,13 @@ def main() -> int:
     ap.add_argument("--out", default=str(REPO / "BENCH" / "sf1.json"))
     args = ap.parse_args()
 
-    names = DOC_QUERIES + SIM_QUERIES + ([] if args.skip_heavy else HEAVY)
+    import __spark_entry__ as entrymod
+    from check_oracles import run
+
+    names = [
+        n for n, q in entrymod.REGISTRY.items()
+        if q.sf1 and not (args.skip_heavy and n == HEAVY)
+    ]
     t0 = time.monotonic()
     # size the local-mode driver heap for the tier: get_spark defaults to
     # 8 GB (right for sf<=0.1), but the sf1 posting/pair shuffles allocate
@@ -142,60 +106,24 @@ def main() -> int:
     # at 8 GB the winnow pair stage GC-thrashes (GCLocker retry warnings,
     # 143 s in-sweep vs 43 s at 48 GB, and repeat runs OOM)
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    proc = subprocess.run(
-        [sys.executable, str(REPO / "tools" / "check_oracles.py"),
-         "--sf", args.sf, "--extended", "--engine-time",
-         "--only", ",".join(names)],
-        capture_output=True, text=True,
-    )
+    results = run(args.sf, names, extended=True, engine_time=True)
     wall = round(time.monotonic() - t0, 1)
-    sys.stdout.write(proc.stdout)
-    sys.stderr.write(proc.stderr[-2000:])
-
-    results = {}
-    for line in proc.stdout.splitlines():
-        m = re.match(
-            r"PASS (\w+): (\d+) rows, hash (\w+) "
-            r"\(([\d.]+)s(?:, engine ([\d.]+)s)?\)",
-            line,
-        )
-        if m:
-            results[m.group(1)] = {
-                "rows": int(m.group(2)), "hash": m.group(3),
-                "sec": float(m.group(4)), "oracle": True,
-            }
-            if m.group(5) is not None:
-                # engine cost alone; "sec" includes the comparison
-                # collect()'s row serialization (multi-M-element arrays)
-                results[m.group(1)]["engine_sec"] = float(m.group(5))
-            continue
-        m = re.match(
-            r"ok   (\w+): rows-only, (\d+) rows "
-            r"\(([\d.]+)s(?:, engine ([\d.]+)s)?\)",
-            line,
-        )
-        if m:
-            results[m.group(1)] = {
-                "rows": int(m.group(2)), "sec": float(m.group(3)),
-                "oracle": False,
-            }
-            if m.group(4) is not None:
-                results[m.group(1)]["engine_sec"] = float(m.group(4))
-    missing = [n for n in names if n not in results]
+    failed = [n for n, r in results.items() if r["failure"] is not None]
+    rc = 1 if failed else 0
 
     caps = cap_counters(args.sf)
     payload = {
         "sf_dir": args.sf,
-        "rc": proc.returncode,
+        "rc": rc,
         "wall_seconds": wall,
-        "queries": results,
-        "missing_or_failed": missing,
+        "queries": {n: r for n, r in results.items() if n not in failed},
+        "missing_or_failed": failed,
         "cap_counters": caps,
     }
     pathlib.Path(args.out).write_text(json.dumps(payload, indent=1))
-    print(f"\nwrote {args.out}: rc={proc.returncode}, "
-          f"{len(results)}/{len(names)} recorded, caps={caps}")
-    return proc.returncode
+    print(f"\nwrote {args.out}: rc={rc}, "
+          f"{len(results) - len(failed)}/{len(names)} recorded, caps={caps}")
+    return rc
 
 
 if __name__ == "__main__":
