@@ -534,12 +534,6 @@ def normalize_spelling(
 # A6: quality scoring.
 # ---------------------------------------------------------------------------
 
-QUALITY_FIELDS = (
-    "overall", "label", "confidence", "dictionary_match", "correction_rate",
-    "total_words", "matched_words", "corrected_words",
-)
-
-
 def quality_score(
     text: str,
     confidences: Optional[list[float]] = None,

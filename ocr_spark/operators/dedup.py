@@ -33,7 +33,7 @@ from pyspark.sql.types import LongType
 
 from ocr_spark.functions.explode import explode_nonnull, posexplode_nonnull
 from ocr_spark.functions.hashing import md5_mod
-from ocr_spark.operators.textstats import WORD_RE, tokens
+from ocr_spark.operators.textstats import tokens
 
 # ---------------------------------------------------------------------------
 # Exact dedup.
@@ -105,12 +105,6 @@ def shingle_ids_from_tokens(toks: Column, k: int = 3) -> Column:
         shingles_from_tokens(toks, k),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
     )
-
-
-def shingle_ids(text_col: str = "text", k: int = 3) -> Column:
-    """Inline-tokenize form of :func:`shingle_ids_from_tokens` (same
-    staging caveat as :func:`shingles`)."""
-    return shingle_ids_from_tokens(tokens(text_col), k)
 
 
 #: postings up to this size emit their pair set as one flattened array

@@ -164,12 +164,16 @@ def tool_run_stats(
     10^5-turn conversation never materializes in memory.
     """
     w = Window.partitionBy(conv_col).orderBy(idx_col)
+    # ROWS, not the default RANGE frame: under RANGE, turns that tie on
+    # turn_idx all see the whole peer group's sum, which splits one run
+    # (the DuckDB oracle pins ROWS UNBOUNDED PRECEDING as well)
+    running = w.rowsBetween(Window.unboundedPreceding, 0)
     is_tool = (F.col(role_col) == tool_role).cast("long")
     turns = df.select(
         F.col(conv_col).alias("conv_id"),
         F.col(idx_col).alias("_idx"),
         (F.col(role_col) == tool_role).alias("_is_tool"),
-        (F.row_number().over(w) - F.sum(is_tool).over(w)).alias("_island"),
+        (F.row_number().over(w) - F.sum(is_tool).over(running)).alias("_island"),
     )
     runs = (
         turns.filter(F.col("_is_tool"))
@@ -222,6 +226,9 @@ def merge_role_runs(
     pathological single-role conversation ever exceeds task memory).
     """
     w = Window.partitionBy(conv_col).orderBy(idx_col)
+    # ROWS frame, as in tool_run_stats: RANGE would put tied turns of
+    # different roles into one island
+    running = w.rowsBetween(Window.unboundedPreceding, 0)
     # null-safe inequality: a NULL-role turn must OPEN a new island (and
     # a run of NULL roles stays one island) — the naive `!=` yields NULL
     # against a non-NULL predecessor, which the running sum would skip,
@@ -236,7 +243,7 @@ def merge_role_runs(
         F.col(idx_col).alias("_idx"),
         F.col(role_col).alias("_role"),
         F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
-        F.sum(boundary).over(w).alias("_island"),
+        F.sum(boundary).over(running).alias("_island"),
     )
     return (
         turns.groupBy("conv_id", "_island")

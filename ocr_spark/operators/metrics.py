@@ -1,4 +1,4 @@
-"""Metadata/metrics aggregations (SURVEY.md §2.3 A1-A9).
+"""Metadata/metrics aggregations (SURVEY.md §2.3 A2, A3, A5, S4).
 
 The reference keeps these as SQL over its SQLite history DB
 (db_service.py:197-278, audit_logger.py:125-146); here they are generic
@@ -10,17 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def request_stats(df: DataFrame, success_col: str = "success", time_col: str = "processing_time_ms", pages_col: str = "pages") -> DataFrame:
-    """A1 (db_service.py:244-263): totals, conditional sums, mean latency."""
-    return df.agg(
-        F.count(F.lit(1)).alias("total_requests"),
-        F.sum(F.when(F.col(success_col), 1).otherwise(0)).alias("successful"),
-        F.sum(F.when(~F.col(success_col), 1).otherwise(0)).alias("failed"),
-        F.round(F.avg(time_col), 2).alias("avg_processing_time_ms"),
-        F.sum(pages_col).alias("total_pages_processed"),
-    )
 
 
 def requests_by_date(
@@ -116,22 +105,6 @@ def key_stats(
         F.sum(F.when(F.col("is_active"), 0).otherwise(1)).alias("revoked_keys"),
         F.sum("requests_count").alias("total_requests"),
     )
-
-
-def paginate(df: DataFrame, order_col: str, limit: int, offset: int = 0, ascending: bool = False) -> DataFrame:
-    """A9 (db_service.py:226-236): ORDER BY .. LIMIT .. OFFSET.
-
-    Scale note: orderBy + offset + limit keeps the whole thing a
-    TakeOrderedAndProject of offset+limit rows per partition — no global
-    sort, no single-partition window (a Window.orderBy with no PARTITION BY
-    would move every row to one task). Deep offsets still pay offset+limit
-    per partition; the reference UI only pages shallowly.
-    """
-    col = F.asc(order_col) if ascending else F.desc(order_col)
-    out = df.orderBy(col)
-    if offset:
-        out = out.offset(offset)
-    return out.limit(limit)
 
 
 def preview_truncate(df: DataFrame, text_col: str = "text", n: int = 500) -> DataFrame:

@@ -99,7 +99,6 @@ def cosine_topk_np(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (
         DoubleType,
         LongType,

@@ -80,13 +80,14 @@ class ExtractionJob:
         # Called UNCONDITIONALLY — it also normalizes file:// prefixes,
         # which pathlib.Path would otherwise treat as a relative path and
         # fall through to the same whole-dir misread the guard prevents.
-        from ocr_spark.streaming.extract_stream import _require_local_path
+        from ocr_spark.streaming.extract_stream import (
+            _learned_state,
+            _require_local_path,
+        )
 
         root = _require_local_path(path, "learned words path")
-        path = str(root)
-        cur = root / "_CURRENT"
-        if cur.exists():
-            path = str(root / json.loads(cur.read_text())["snapshot"])
+        state = _learned_state(root)
+        path = str(root / state["snapshot"] if state else root)
         try:
             rows = (
                 self.spark.read.parquet(path)

@@ -46,7 +46,6 @@ def main() -> int:
 
     from ocr_spark.operators.learning import (
         approve_words,
-        export_learned_words,  # noqa: F401  (surface parity)
         learning_stats,
         merge_import,
         pending_top_k,

@@ -217,6 +217,44 @@ def test_merge_role_runs_null_role_opens_island(spark):
     assert out[1]["text"] == "stray\nstray2"
 
 
+# --- tied turn_idx: the running sums take a ROWS frame ---------------------
+
+
+def _tied(spark, turns):
+    rows = [
+        ("c", idx, role, f"{role}{n}", None, T0)
+        for n, (idx, role) in enumerate(turns)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+
+
+def test_tool_run_stats_tied_turn_idx(spark):
+    from ocr_spark.operators.dialogue import tool_run_stats
+
+    df = _tied(spark, [(0, "tool"), (1, "tool"), (1, "tool"), (2, "user")])
+    (r,) = tool_run_stats(df).collect()
+    # one run of three: under the default RANGE frame both turn 1s saw
+    # the peer group's full sum and the run split in two
+    assert (r["n_tool_turns"], r["n_runs"], r["longest_run"]) == (3, 1, 3)
+    assert r["first_run_start"] == 0
+
+
+def test_merge_role_runs_tied_turn_idx_keeps_roles_apart(spark):
+    from ocr_spark.operators.dialogue import merge_role_runs
+
+    df = _tied(spark, [(0, "user"), (1, "assistant"), (1, "user")])
+    out = merge_role_runs(df).collect()
+    # which tied turn sorts first is up to Spark, but no merged turn may
+    # hold text from two roles
+    assert sum(r["n_merged"] for r in out) == 3
+    for r in out:
+        assert all(s.startswith(r["role"]) for s in r["text"].split("\n"))
+
+
 def test_curate_conversations_custom_role_labels(spark):
     from ocr_spark.operators.sft import curate_conversations
 
