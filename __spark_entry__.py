@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.dedup import (
     minhash_coefficients as _minhash_coefficients,
 )
-
-WORD_RE = "[a-z]{3,}"
+from ocr_spark.operators.textstats import WORD_RE
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -887,10 +886,10 @@ def _simhash(spark, sf_dir):
     return with_simhash(docs).select("doc_id", "simhash")
 
 
-_SIMHASH_SQL = """
+_SIMHASH_SQL = f"""
 WITH toks AS (
   SELECT DISTINCT doc_id,
-         unnest(list_distinct(regexp_extract_all(lower(text), '[a-z]{3,}'))) AS t
+         unnest(list_distinct(regexp_extract_all(lower(text), '{WORD_RE}'))) AS t
   FROM documents
 ),
 votes AS (
@@ -1334,9 +1333,9 @@ def _doc_tf_embeddings(spark, sf_dir):
     )
 
 
-_DOC_TF_SQL = """
+_DOC_TF_SQL = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]{3,}')) AS t
+  SELECT doc_id, unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS t
   FROM documents
 ),
 bc AS (
@@ -2035,6 +2034,53 @@ FROM h
 #: sf≤0.01 (≤500 docs), active at sf0.1+ where boilerplate fingerprints
 #: go hot
 _WINNOW_CAP = 1000
+
+
+def cap_counters(spark: SparkSession, sf_dir: str) -> dict:
+    """Hot-key drop counts of the near-dup caps over the tier's documents:
+    shingles over the Jaccard doc-frequency cap, over-cap MinHash LSH
+    buckets, and winnow fingerprints over the winnow cap. A silent cap
+    reads as "covered everything" when it did not; these counts make the
+    recall loss observable per tier (0 until the corpus has hot keys)."""
+    from ocr_spark.functions.explode import explode_nonnull
+    from ocr_spark.operators.dedup import (
+        band_buckets,
+        minhash_signatures,
+        shingle_ids_from_tokens,
+    )
+    from ocr_spark.operators.textstats import (
+        WINNOW_K,
+        WINNOW_W,
+        tokens,
+        with_winnow_fingerprints,
+    )
+
+    def over(df: DataFrame, keys: list[str], cap: int) -> int:
+        return df.groupBy(*keys).count().filter(F.col("count") > cap).count()
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    shingles = explode_nonnull(
+        docs.select(tokens("text").alias("_toks")),
+        shingle_ids_from_tokens(F.col("_toks"), 3),
+        "s",
+    )
+    buckets = minhash_signatures(docs, n_hashes=16, k=3).select(
+        F.posexplode(band_buckets("signature", 4)).alias("band", "bucket")
+    )
+    fingerprints = explode_nonnull(
+        with_winnow_fingerprints(
+            docs.select("doc_id", "text"), "text", WINNOW_K, WINNOW_W
+        ),
+        "winnow", "fp",
+    )
+    return {
+        "max_doc_freq": _JACCARD_CAP,
+        "max_bucket_size": _JACCARD_CAP,
+        "max_winnow_freq": _WINNOW_CAP,
+        "jaccard_dropped_shingles": over(shingles, ["s"], _JACCARD_CAP),
+        "minhash_hot_buckets": over(buckets, ["band", "bucket"], _JACCARD_CAP),
+        "winnow_hot_fingerprints": over(fingerprints, ["fp"], _WINNOW_CAP),
+    }
 
 
 def _winnow_near_dup(spark, sf_dir):

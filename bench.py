@@ -137,43 +137,7 @@ def main() -> int:
     turns_per_sec = round(n_docs / times["flagship_extract"], 1)
 
     # cap-drop counters: the hot-key caps trade recall for bounded fan-out
-    # (shingles over the doc-freq cap leave the Jaccard universe; over-cap
-    # LSH buckets are dropped before pair generation). Reporting the drop
-    # counts makes the recall loss OBSERVABLE per tier — a silent cap reads
-    # as "covered everything" when it didn't. Both counters are 0 until the
-    # corpus actually has hot keys (inert at sf≤0.1; the data/sf1 tier and
-    # any real corpus exercise them).
-    from pyspark.sql import functions as F
-
-    from ocr_spark.functions.explode import explode_nonnull
-    from ocr_spark.operators.dedup import (
-        band_buckets,
-        minhash_signatures,
-        shingle_ids_from_tokens,
-    )
-    from ocr_spark.operators.textstats import tokens
-
-    cap = entrymod._JACCARD_CAP
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    dropped_shingles = (
-        explode_nonnull(
-            docs.select(tokens("text").alias("_toks")),
-            shingle_ids_from_tokens(F.col("_toks"), 3),
-            "s",
-        )
-        .groupBy("s")
-        .count()
-        .filter(F.col("count") > cap)
-        .count()
-    )
-    hot_buckets = (
-        minhash_signatures(docs, n_hashes=16, k=3)
-        .select(F.posexplode(band_buckets("signature", 4)).alias("band", "bucket"))
-        .groupBy("band", "bucket")
-        .count()
-        .filter(F.col("count") > cap)
-        .count()
-    )
+    caps = entrymod.cap_counters(spark, SF_DIR)
     spark.stop()
 
     total = round(sum(times.values()), 3)
@@ -191,12 +155,7 @@ def main() -> int:
         "flagship_reps": [round(t, 3) for t in flag],
         "flagship_spread_pct": flagship_spread,
         "flagship_unstable": flagship_unstable,
-        "cap_counters": {
-            "max_doc_freq": cap,
-            "max_bucket_size": cap,
-            "jaccard_dropped_shingles": dropped_shingles,
-            "minhash_hot_buckets": hot_buckets,
-        },
+        "cap_counters": caps,
     }
     # persist the round record ourselves: the driver captures stdout, and
     # BENCH_r04.json shipped with "parsed": null + a truncated tail — the

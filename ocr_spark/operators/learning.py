@@ -175,9 +175,9 @@ def write_learned_export(
     deploying against a remote store)."""
     import json
 
-    from ocr_spark.streaming.extract_stream import _require_local_path
+    from ocr_spark.streaming.extract_stream import require_local_path
 
-    root = _require_local_path(path, "learned export path")
+    root = require_local_path(path, "learned export path")
     rows = export_learned_words(learned, approved_only, pending_limit).persist()
     try:
         rows.write.mode("overwrite").json(f"{path}/words")

@@ -71,23 +71,18 @@ class ExtractionJob:
     def _load_learned(self, path: str | None) -> frozenset | None:
         if not path:
             return None
-        # versioned learned tables (streaming accrual) commit through a
-        # _CURRENT pointer — resolve it; plain parquet dirs read directly.
-        # Pointer resolution shares the versioned-table root's LOCAL-
-        # filesystem contract (extract_stream._require_local_path): on a
-        # URI-schemed path the pathlib probe would silently miss the
-        # pointer and read the whole multi-snapshot dir, so reject it.
-        # Called UNCONDITIONALLY — it also normalizes file:// prefixes,
-        # which pathlib.Path would otherwise treat as a relative path and
-        # fall through to the same whole-dir misread the guard prevents.
+        # a versioned learned table (streaming accrual) reads its live
+        # snapshot; a plain parquet dir reads directly. Both resolve through
+        # the versioned-table root's local-filesystem contract, which
+        # rejects URI-schemed paths (the pointer probe would miss them and
+        # read every snapshot at once) and strips file:// prefixes.
         from ocr_spark.streaming.extract_stream import (
-            _learned_state,
-            _require_local_path,
+            live_snapshot,
+            require_local_path,
         )
 
-        root = _require_local_path(path, "learned words path")
-        state = _learned_state(root)
-        path = str(root / state["snapshot"] if state else root)
+        what = "learned words path"
+        path = str(live_snapshot(path, what) or require_local_path(path, what))
         try:
             rows = (
                 self.spark.read.parquet(path)

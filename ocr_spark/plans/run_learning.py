@@ -9,9 +9,10 @@ export/import) over a versioned learned-words table.
   spark-submit run_learning.py export  --table /path/learned --out /path/export [--approved-only]
   spark-submit run_learning.py import  --table /path/learned --src /path/export
 
-Mutations commit through the same atomic snapshot protocol the streaming
-accrual hook uses (new snapshot dir + pointer rename), so a concurrent
-reader never sees a half-written table. Prints one JSON line per command.
+Mutations commit through the same snapshot commit the streaming accrual
+hook uses (extract_stream.commit_snapshot), so a concurrent reader never
+sees a half-written table and a concurrent writer's commit is never
+overwritten. Prints one JSON line per command.
 """
 from __future__ import annotations
 
@@ -55,34 +56,24 @@ def main() -> int:
     )
     from ocr_spark.session import get_spark
     from ocr_spark.streaming.extract_stream import (
-        _learned_state,
-        commit_learned_snapshot,
-        next_commit_version,
+        SnapshotConflict,
         read_learned_table,
+        update_learned_table,
     )
 
     spark = get_spark("learning-admin", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
-    root = pathlib.Path(args.table)
     learned = read_learned_table(spark, args.table)
     if learned is None:
         print(json.dumps({"error": "no committed snapshot", "table": args.table}))
         return 1
-    state = _learned_state(root)
-    # skips past crash debris dirs, never reusing a version a concurrent
-    # writer might still be mid-commit on
-    next_version = next_commit_version(root)
 
-    def commit(df) -> None:
-        # preserve the streaming replay guard: a CLI mutation must NOT
-        # advance batch_id, or a resumed stream drops genuine micro-batches
+    def commit(derive) -> int:
+        # applied to the live table; a concurrent commit (e.g. a live
+        # stream's) makes the mutation re-apply to the fresh snapshot
         try:
-            commit_learned_snapshot(
-                df, root, next_version, stream_batch_id=state.get("batch_id")
-            )
-        except RuntimeError as e:
-            # lost a race against another writer (e.g. a live stream):
-            # report on the JSON contract and let the operator retry
+            return update_learned_table(spark, args.table, derive)
+        except SnapshotConflict as e:
             print(json.dumps({"error": "conflict", "detail": str(e)}))
             raise SystemExit(2)
 
@@ -99,11 +90,11 @@ def main() -> int:
         ]
         print(json.dumps({"pending": rows}))
     elif args.command == "approve":
-        commit(approve_words(learned, words, now))
-        print(json.dumps({"approved": words, "version": next_version}))
+        version = commit(lambda t: approve_words(t, words, now))
+        print(json.dumps({"approved": words, "version": version}))
     elif args.command == "reject":
-        commit(reject_words(learned, words))
-        print(json.dumps({"rejected": words, "version": next_version}))
+        version = commit(lambda t: reject_words(t, words))
+        print(json.dumps({"rejected": words, "version": version}))
     elif args.command == "export":
         meta = write_learned_export(
             learned, args.out, export_date=now.isoformat(),
@@ -112,8 +103,8 @@ def main() -> int:
         print(json.dumps(meta))
     elif args.command == "import":
         imported = read_learned_export(spark, args.src)
-        commit(merge_import(learned, imported))
-        print(json.dumps({"imported_from": args.src, "version": next_version}))
+        version = commit(lambda t: merge_import(t, imported))
+        print(json.dumps({"imported_from": args.src, "version": version}))
     return 0
 
 

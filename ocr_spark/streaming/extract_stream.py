@@ -3,19 +3,27 @@
 The reference is purely request-at-a-time (SURVEY.md §2.6: no streaming
 features); its incremental aspects map to batch-epoch jobs. This module
 provides the *streaming deployment shape* anyway, because a transcript lake
-ingests continuously: the same fused extraction UDF runs unchanged over a
-file-source stream with exactly-once sink semantics via checkpointing —
-Structured Streaming's incremental execution IS the scaling story (each
-micro-batch is the batch plan over new files only).
+ingests continuously: ``extract_turns`` (the batch path's fused extraction
+UDF) runs unchanged over a file-source stream with exactly-once sink
+semantics via checkpointing — Structured Streaming's incremental execution
+IS the scaling story (each micro-batch is the batch plan over new files
+only).
 
 Also included: a watermarked sliding-window per-language throughput metric
 stream (the streaming analog of A2's per-day counts) demonstrating late-data
 handling, and a ``foreachBatch`` learning accrual hook that reuses the batch
 epoch merge (ocr_spark.operators.learning) so stream and batch share one
 code path for A7.
+
+Versioned snapshot tables (the learned-words table, the streaming near-dup
+store in ``neardup_stream``) are read through :func:`live_snapshot` and
+written through :func:`commit_snapshot` (:func:`commit_learned_snapshot`
+for a caller that picks its own version); this module alone knows the
+``_CURRENT`` pointer's keys, the version numbering and the conflict rule.
 """
 from __future__ import annotations
 
+import fcntl
 import json
 import pathlib
 import shutil
@@ -25,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ocr_spark.operators.extraction import extract_turns
 from ocr_spark.plans.job import INPUT_COLUMNS
 
 TRANSCRIPT_DDL = (
@@ -52,38 +59,21 @@ def read_transcript_stream(
     )
 
 
-def extract_stream(
-    stream: DataFrame,
-    use_dictionary: bool = True,
-    use_spelling: bool = True,
-) -> DataFrame:
-    """The SAME fused Arrow UDF as the batch path — per-turn transforms are
-    stateless, so batch/streaming parity is automatic (one code path, the
-    north rule's per-turn equality holds for both)."""
-    return extract_turns(
-        stream, use_dictionary=use_dictionary, use_spelling=use_spelling
-    )
-
-
 def write_extracted_stream(
-    extracted: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    trigger_available_now: bool = True,
+    extracted: DataFrame, output_path: str, checkpoint_path: str
 ) -> StreamingQuery:
-    """Append sink with checkpointed exactly-once file output. With
-    ``availableNow`` the query drains the current backlog and stops —
+    """Append sink with checkpointed exactly-once file output. The
+    ``availableNow`` trigger drains the current backlog and stops —
     kill-and-restart resumes from the checkpoint without reprocessing
     (tested in tests/test_streaming.py)."""
-    writer = (
+    return (
         extracted.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_turn_metrics(
@@ -232,19 +222,31 @@ def _duration_ms(spec: str) -> int:
     return int(n) * factor
 
 
-#: pointer file naming the live snapshot of a versioned learned table
+#: pointer file naming the live snapshot of a versioned table
 LEARNED_CURRENT = "_CURRENT"
+#: snapshot dirs kept below the live one by each commit's GC
+KEEP_SNAPSHOTS = 2
+COMMIT_ATTEMPTS = 3
 
 
-def _require_local_path(path: str | pathlib.Path, what: str) -> pathlib.Path:
-    """The versioned-table root is a LOCAL-FILESYSTEM contract: the commit
-    protocol's arbiter is ``os.rename`` atomicity and the pointer/meta
-    files are written with pathlib, while the row data goes through
-    ``df.write`` — on an object store (s3a://...) or HDFS the two halves
-    would land in different filesystems and rename would not be atomic.
-    Reject URI-schemed paths loudly instead of splitting the artifact; the
-    deployment-grade rendition is an Iceberg/metastore commit transaction
-    (or routing the small writes through the Hadoop FileSystem API)."""
+class SnapshotConflict(RuntimeError):
+    """Another writer committed first; re-read the pointer and retry."""
+
+    def __init__(self, root: pathlib.Path, reason: str):
+        super().__init__(
+            f"concurrent commit on {root}: {reason}; re-read state and retry"
+        )
+
+
+def require_local_path(path: str | pathlib.Path, what: str) -> pathlib.Path:
+    """The versioned-table root (and the learned-words export) is a
+    LOCAL-FILESYSTEM contract: the commit relies on ``flock`` and
+    ``os.rename`` atomicity and the pointer/meta files are written with
+    pathlib, while the row data goes through ``df.write`` — on an object
+    store (s3a://...) or HDFS the two halves would land in different
+    filesystems. Reject URI-schemed paths loudly instead of splitting the
+    artifact; strip a ``file://`` prefix, which pathlib would read as a
+    relative path."""
     s = str(path)
     scheme, sep, _ = s.partition("://")
     if sep and scheme != "file":
@@ -270,90 +272,132 @@ def _state_version(state: dict | None) -> int:
     return state.get("version", state.get("batch_id", -1))
 
 
-def next_commit_version(root: pathlib.Path) -> int:
-    """The version a new commit should target: one past BOTH the pointer
-    and the highest existing snapshot dir. Skipping past unreferenced dirs
-    is what makes crash debris (a writer that died between its rename and
-    its pointer swap) harmless: nobody ever deletes or reuses a dir that
-    might belong to a live concurrent writer — the orphan just gets
-    superseded and swept by a later committer's GC once the pointer has
-    advanced past it."""
+def _next_version(root: pathlib.Path, state: dict | None) -> int:
     dir_max = -1
     for p in root.glob("v*"):
         try:
             dir_max = max(dir_max, int(p.name[1:]))
         except ValueError:
             continue
-    return max(_state_version(_learned_state(root)), dir_max) + 1
+    return max(_state_version(state), dir_max) + 1
+
+
+def next_commit_version(root: pathlib.Path) -> int:
+    """The version a new commit on ``root`` targets: one past both the
+    pointer and the highest snapshot dir (see :func:`commit_snapshot`)."""
+    return _next_version(root, _learned_state(root))
+
+
+def live_snapshot(
+    path: str | pathlib.Path, what: str = "versioned table root"
+) -> pathlib.Path | None:
+    """The snapshot dir ``_CURRENT`` names; None before the first commit."""
+    root = require_local_path(path, what)
+    state = _learned_state(root)
+    return root / state["snapshot"] if state else None
 
 
 def read_learned_table(spark: SparkSession, learned_table_path: str) -> DataFrame | None:
-    """Resolve the ``_CURRENT`` pointer of a versioned learned table and
-    read the live snapshot; None when no snapshot has been committed yet."""
-    root = pathlib.Path(learned_table_path)
-    state = _learned_state(root)
-    if state is None:
-        return None
-    return spark.read.parquet(str(root / state["snapshot"]))
+    """The live snapshot of a versioned learned table; None when no
+    snapshot has been committed yet."""
+    snapshot = live_snapshot(learned_table_path, "learned table root")
+    return None if snapshot is None else spark.read.parquet(str(snapshot))
 
 
-def learning_foreach_batch(learned_table_path: str, keep_snapshots: int = 2):
-    """``foreachBatch`` hook: accrue unknown-word frequencies per
-    micro-batch by reusing the batch epoch merge — A7 semantics identical
-    in stream and batch (epoch == micro-batch).
+def commit_snapshot(
+    path: str | pathlib.Path, build, batch_id: int | None = None
+) -> int | None:
+    """Commit the next snapshot of the versioned table at ``path``: the one
+    write path of every versioned table (the learned-words table, the
+    streaming near-dup store). Returns the committed version, or None when
+    nothing was committed. This is the plain-local-filesystem rendition of
+    an Iceberg snapshot commit.
 
-    Exactly-once across foreachBatch's at-least-once replays: the last
-    applied batch_id is recorded in the ``_CURRENT`` pointer, and a replayed
-    micro-batch (batch_id <= recorded) is a no-op — without this, a
-    crash-replay would re-ADD frequencies and auto-approve words early.
+    Layout: ``_CURRENT`` holds ``{"snapshot": "v{version:010d}", "version",
+    "batch_id"}``; ``version`` counts every commit by any writer and names
+    the snapshot dir; ``batch_id`` is the last streaming micro-batch applied.
 
-    Snapshot protocol (the plain-filesystem rendition of an Iceberg
-    ``MERGE INTO`` + snapshot commit): merge reads snapshot N and writes
-    snapshot N+1 to a temp dir, the dir is renamed into place, then the
-    pointer file is atomically replaced. No driver-side ``collect()`` —
-    the merge stays on executors, so a 100 TB multilingual vocabulary is
-    fine. The last ``keep_snapshots`` snapshots are retained (crash safety
-    + debug); older ones are GC'd."""
+    ``build(snapshot, version, tmp)`` writes the new snapshot's full content
+    into the empty staging dir ``tmp``, derived from the live snapshot dir
+    ``snapshot`` (None before the first commit); it may return False to
+    commit nothing.
+
+    ``batch_id`` makes a ``foreachBatch`` writer exactly-once across
+    at-least-once replays: when the pointer already records a batch_id at
+    or past it, nothing is built. Admin writers pass None and the pointer's
+    batch_id is carried over unchanged — advancing it would make a resumed
+    stream drop new micro-batches as replays.
+
+    Each attempt reads ``_CURRENT`` once; the replay guard, the version and
+    the build input all come from that read. The version is one past both
+    the pointer and the highest ``v*`` dir, so crash debris (a writer that
+    died between renaming its snapshot dir and swapping the pointer) is
+    skipped, never reused or deleted early. Under an exclusive ``flock`` on
+    ``_CURRENT.lock`` the commit checks that the pointer still equals the
+    one read and that ``v{version}`` does not exist, renames the staging
+    dir to it and atomically replaces ``_CURRENT``. Otherwise
+    :class:`SnapshotConflict`: the staging is discarded and the attempt
+    starts over from a fresh read, so a concurrent commit is merged into,
+    never overwritten. A build error while the pointer moved (a faster
+    writer's GC deleted the snapshot being read lazily) is retried the same
+    way; any other error propagates, as does the last of
+    ``COMMIT_ATTEMPTS`` conflicts. The lock and the renames need one local
+    filesystem (:func:`require_local_path`); a metastore/Iceberg commit
+    transaction is the deployment-grade rendition.
+
+    After the swap, still under the lock, GC keeps ``KEEP_SNAPSHOTS`` + 1
+    snapshot dirs (one extra for a concurrent writer still lazily reading
+    the previous one); everything swept is below the pointer just
+    committed."""
+    root = require_local_path(path, "versioned table root")
+    root.mkdir(parents=True, exist_ok=True)
+    for attempt in range(1, COMMIT_ATTEMPTS + 1):
+        state = _learned_state(root)
+        last_batch = state.get("batch_id") if state else None
+        if batch_id is not None and last_batch is not None and batch_id <= last_batch:
+            return None  # at-least-once replay of an applied micro-batch
+        version = _next_version(root, state)
+        snapshot = root / state["snapshot"] if state else None
+        try:
+            return _commit(
+                root, state, version, last_batch if batch_id is None else batch_id,
+                lambda tmp: build(snapshot, version, tmp),
+            )
+        except SnapshotConflict:
+            if attempt == COMMIT_ATTEMPTS:
+                raise
+        except Exception:
+            if attempt == COMMIT_ATTEMPTS or _learned_state(root) == state:
+                raise
+
+
+def update_learned_table(
+    spark: SparkSession, path: str, derive, batch_id: int | None = None
+) -> int | None:
+    """Commit ``derive(live table or None)`` as the learned table's next
+    snapshot through :func:`commit_snapshot`; the merge runs on the
+    executors (no collect)."""
+
+    def build(snapshot, version, tmp):
+        live = spark.read.parquet(str(snapshot)) if snapshot else None
+        derive(live).write.mode("overwrite").parquet(str(tmp))
+
+    return commit_snapshot(path, build, batch_id)
+
+
+def learning_foreach_batch(learned_table_path: str):
+    """``foreachBatch`` hook: accrue each micro-batch's unknown-word counts
+    into the learned table with the batch epoch merge (A7; epoch ==
+    micro-batch), exactly once per batch_id."""
     from ocr_spark.operators.learning import accrue_learned, epoch_word_counts
 
     def hook(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        root = _require_local_path(learned_table_path, "learned table root")
-        root.mkdir(parents=True, exist_ok=True)
-        # retry loop: a commit lost to a concurrent admin (CLI) writer is
-        # re-merged against the fresh snapshot — dropping the batch would
-        # lose its counts, and propagating would kill the whole stream
-        for attempt in range(3):
-            state = _learned_state(root)
-            last_stream = state.get("batch_id") if state else None
-            if last_stream is not None and batch_id <= last_stream:
-                return  # at-least-once replay of an applied micro-batch
-            existing = (
-                spark.read.parquet(str(root / state["snapshot"]))
-                if state
-                else None
-            )
-            merged = accrue_learned(existing, epoch_word_counts(batch_df))
-            version = next_commit_version(root)
-            try:
-                commit_learned_snapshot(
-                    merged, root, version, stream_batch_id=batch_id,
-                    keep_snapshots=keep_snapshots,
-                )
-                return
-            except RuntimeError:
-                if attempt == 2:
-                    raise  # persistent contention: surface it
-            except Exception:
-                # the merge READS the source snapshot lazily during the
-                # commit's write job — a concurrent faster writer's GC can
-                # delete it mid-read, surfacing as a raw Spark/IO error
-                # rather than the protocol's RuntimeError. If the pointer
-                # moved since our read, treat it as the same retryable
-                # conflict (re-resolve and re-merge); a failure with an
-                # UNCHANGED pointer is a real error and propagates.
-                if attempt == 2 or _learned_state(root) == state:
-                    raise
+        update_learned_table(
+            batch_df.sparkSession,
+            learned_table_path,
+            lambda live: accrue_learned(live, epoch_word_counts(batch_df)),
+            batch_id,
+        )
 
     return hook
 
@@ -363,109 +407,45 @@ def commit_learned_snapshot(
     root: pathlib.Path,
     version: int,
     stream_batch_id: int | None = None,
-    keep_snapshots: int = 2,
 ) -> None:
-    """Snapshot-commit protocol shared by the streaming hook and the batch
-    learning CLI: write the new table to a temp dir, rename it into place,
-    atomically replace the ``_CURRENT`` pointer, GC old snapshots.
-
-    The pointer tracks TWO counters: ``version`` (every commit, any
-    writer — names the snapshot dir) and ``batch_id`` (the last STREAMING
-    micro-batch applied — the hook's at-least-once replay guard). They
-    must stay separate: if a CLI mutation advanced the replay guard, a
-    resumed stream would treat genuinely new micro-batches as replays and
-    silently drop their counts. A CLI commit passes
-    ``stream_batch_id=state['batch_id']`` unchanged.
-
-    Optimistic concurrency: the commit raises ``RuntimeError`` when
-    another writer took this ``version`` first. The ARBITER is the
-    atomic ``rename(tmp → v{version})`` — each writer stages into a
-    uniquely named tmp dir, so concurrent same-version writers can't
-    delete each other's in-flight output, and exactly one rename wins;
-    the loser cleans up and raises. An already-existing ``v{version}``
-    dir is ALWAYS a conflict — it is either a live concurrent writer
-    between its rename and pointer swap, or crash debris; deleting it
-    inline could destroy the winner's just-committed snapshot, so this
-    commit never removes a same-version dir (callers pick the next
-    version with :func:`next_commit_version`, which skips past debris;
-    debris is swept only by a LATER committer's GC, after the pointer has
-    advanced past it). A pointer re-check immediately before the swap
-    keeps a slower lower-version writer from regressing ``_CURRENT`` past
-    a higher commit. Callers retry from a fresh read (the streaming hook
-    does; the CLI reports and exits). This is a plain-LOCAL-filesystem
-    protocol (rename atomicity — URI-schemed roots are rejected); it
-    makes every detectable race an error instead of a silent clobber — a
-    metastore/Iceberg commit transaction is the deployment-grade version.
-
-    GC keeps ``keep_snapshots`` + 1 snapshot dirs (one extra beyond the
-    nominal retention): a concurrent slower writer reads its merge source
-    lazily during its own write job, so the previous-but-one snapshot must
-    outlive in-flight merges; everything swept is strictly below the
-    pointer just committed."""
-    _commit_snapshot(
+    """Commit ``merged`` as snapshot ``version`` of the learned table at
+    ``root``, once: :func:`commit_snapshot`'s protocol for a caller that
+    picked its own version (:func:`next_commit_version`). Raises
+    :class:`SnapshotConflict` when the pointer is already at or past
+    ``version``."""
+    root = require_local_path(root, "learned table root")
+    root.mkdir(parents=True, exist_ok=True)
+    state = _learned_state(root)
+    if _state_version(state) >= version:
+        raise SnapshotConflict(root, f"pointer already at or past v{version:010d}")
+    _commit(
+        root, state, version, stream_batch_id,
         lambda tmp: merged.write.mode("overwrite").parquet(str(tmp)),
-        root,
-        version,
-        stream_batch_id=stream_batch_id,
-        keep_snapshots=keep_snapshots,
     )
 
 
-def _commit_snapshot(
-    stage,
-    root: pathlib.Path,
-    version: int,
-    stream_batch_id: int | None = None,
-    keep_snapshots: int = 2,
-) -> None:
-    """The protocol core shared by every versioned snapshot table (the
-    learned-words table, the streaming near-dup store): ``stage(tmp)``
-    writes the snapshot's full content into the staging dir — one parquet
-    table or several subdir tables — and everything from the rename
-    arbiter on is identical. See :func:`commit_learned_snapshot` for the
-    concurrency contract."""
-    root = _require_local_path(root, "versioned table root")
-    root.mkdir(parents=True, exist_ok=True)
+def _commit(root, state, version, batch_id, stage) -> int | None:
+    """One attempt of :func:`commit_snapshot` against the pointer ``state``."""
     snap = f"v{version:010d}"
     tmp = root / f"_tmp-{snap}-{uuid.uuid4().hex[:8]}"  # per-writer staging
-    stage(tmp)
-
-    def conflict(reason: str):
-        shutil.rmtree(tmp, ignore_errors=True)
-        return RuntimeError(
-            f"concurrent learned-table commit on {root}: {reason}; "
-            f"re-read state and retry"
-        )
-
-    def current_version():
-        return _state_version(_learned_state(root))
-
-    if current_version() >= version:
-        raise conflict(f"pointer already at or past v{version:010d}")
-    final = root / snap
-    if final.exists():
-        # live concurrent writer mid-commit OR crash debris — never rmtree
-        # it here (the live writer's rename may have JUST won); the retry
-        # path targets a higher version via next_commit_version
-        raise conflict(f"snapshot dir {snap} already exists")
+    tmp.mkdir()
     try:
-        tmp.rename(final)  # the arbiter: exactly one same-version winner
-    except OSError as e:
-        raise conflict(f"lost the rename race for {snap}") from e
-    if current_version() >= version:  # re-check just before the swap
-        raise RuntimeError(
-            f"concurrent learned-table commit on {root}: pointer advanced "
-            f"past v{version:010d} after rename; snapshot left for GC"
-        )
-    ptr_tmp = root / f"{LEARNED_CURRENT}.tmp-{uuid.uuid4().hex[:8]}"
-    ptr_tmp.write_text(
-        json.dumps(
-            {"snapshot": snap, "version": version, "batch_id": stream_batch_id}
-        )
-    )
-    ptr_tmp.rename(root / LEARNED_CURRENT)  # atomic commit
-    # sweep runs only after a successful pointer swap, so every deleted dir
-    # (including any adopted crash debris) is strictly below the live
-    # pointer; +1 defers one extra version for in-flight lazy readers
-    for old in sorted(root.glob("v*"))[: -(keep_snapshots + 1)]:
-        shutil.rmtree(old)
+        if stage(tmp) is False:
+            return None
+        with open(root / f"{LEARNED_CURRENT}.lock", "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)  # released on close or exit
+            if _learned_state(root) != state:
+                raise SnapshotConflict(root, "pointer moved since it was read")
+            if (root / snap).exists():
+                raise SnapshotConflict(root, f"snapshot dir {snap} already exists")
+            tmp.rename(root / snap)
+            ptr_tmp = root / f"{LEARNED_CURRENT}.tmp-{uuid.uuid4().hex[:8]}"
+            ptr_tmp.write_text(
+                json.dumps({"snapshot": snap, "version": version, "batch_id": batch_id})
+            )
+            ptr_tmp.rename(root / LEARNED_CURRENT)  # atomic commit
+            for old in sorted(root.glob("v*"))[: -(KEEP_SNAPSHOTS + 1)]:
+                shutil.rmtree(old)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)  # already gone once renamed
+    return version

@@ -7,15 +7,15 @@ near-duplicate anything seen so far". ``dropDuplicatesWithinWatermark``
 covers exact dedup with bounded state, but MinHash-LSH state (band
 postings) must outlive any watermark — so it lives in a versioned snapshot
 store committed through the SAME protocol as the learned-words table
-(extract_stream._commit_snapshot: staged write → rename arbiter → pointer
-swap → deferred GC; batch_id replay guard for foreachBatch's at-least-once
-semantics).
+(extract_stream.commit_snapshot: staged write → pointer check, rename and
+pointer swap under one lock → deferred GC; batch_id replay guard for
+foreachBatch's at-least-once semantics).
 
 APPEND-ONLY LAYOUT (the Iceberg-append analogue, upgraded from the
 round-3 full-rewrite): a snapshot is a tiny ``manifest.json`` listing
 immutable per-batch DELTA directories —
 
-    root/_CURRENT                      → {"snapshot": "v…", "batch_id": N}
+    root/_CURRENT                      → names the live v… (extract_stream)
     root/v…/manifest.json              → {"bands": [names], "pairs": [names]}
     root/band_deltas/_delta=<name>/_pb=<k>/*.parquet   (per-batch, immutable)
     root/pair_deltas/_delta=<name>/*.parquet
@@ -75,10 +75,10 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import band_buckets, minhash_signatures
 from ocr_spark.streaming.extract_stream import (
-    _commit_snapshot,
-    _learned_state,
-    _require_local_path,
-    next_commit_version,
+    KEEP_SNAPSHOTS,
+    commit_snapshot,
+    live_snapshot,
+    require_local_path,
 )
 
 BAND_DELTAS = "band_deltas"
@@ -100,8 +100,12 @@ def _with_pb(bands: DataFrame) -> DataFrame:
     )
 
 
-def _read_manifest(root: pathlib.Path, state: dict) -> dict:
-    return json.loads((root / state["snapshot"] / MANIFEST).read_text())
+def _read_manifest(snapshot: pathlib.Path) -> dict:
+    return json.loads((snapshot / MANIFEST).read_text())
+
+
+def _write_manifest(tmp: pathlib.Path, bands: list[str], pairs: list[str]) -> None:
+    (tmp / MANIFEST).write_text(json.dumps({"bands": bands, "pairs": pairs}))
 
 
 def _read_deltas(
@@ -117,21 +121,23 @@ def _read_deltas(
     )
 
 
-def read_neardup_state(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame, DataFrame] | None:
-    """Resolve the store's ``_CURRENT`` pointer and read (bands, pairs)
-    as unions of the live manifest's deltas; None before the first
-    commit."""
-    root = _require_local_path(store_path, "near-dup store root")
-    state = _learned_state(root)
-    if state is None:
-        return None
-    man = _read_manifest(root, state)
+def _read_snapshot(
+    spark: SparkSession, snapshot: pathlib.Path
+) -> tuple[DataFrame, DataFrame]:
+    root, man = snapshot.parent, _read_manifest(snapshot)
     bands = _read_deltas(spark, root / BAND_DELTAS, man["bands"])
     pairs = _read_deltas(spark, root / PAIR_DELTAS, man["pairs"])
     assert bands is not None and pairs is not None  # empty first commits are skipped
     return bands, pairs
+
+
+def read_neardup_state(
+    spark: SparkSession, store_path: str
+) -> tuple[DataFrame, DataFrame] | None:
+    """The live snapshot's (bands, pairs), each the union of its manifest's
+    deltas; None before the first commit."""
+    snapshot = live_snapshot(store_path, "near-dup store root")
+    return None if snapshot is None else _read_snapshot(spark, snapshot)
 
 
 def _banded(
@@ -178,16 +184,13 @@ def _write_delta(
         )
 
 
-def _sweep_orphan_deltas(root: pathlib.Path, keep_snapshots: int) -> None:
-    """Delete delta dirs referenced by NO live v* manifest whose version
-    component is strictly below the live pointer minus the keep window —
-    crash debris and compacted-away history. An in-flight concurrent
-    writer always targets a version ABOVE the live pointer, so its
-    freshly-written (not-yet-referenced) deltas are never swept."""
-    state = _learned_state(root)
-    if state is None:
-        return
-    horizon = state.get("version", 0) - (keep_snapshots + 1)
+def _sweep_orphan_deltas(root: pathlib.Path, version: int) -> None:
+    """After committing ``version``, delete delta dirs referenced by NO
+    ``v*`` manifest and born below the keep window — crash debris and
+    compacted-away history. An in-flight writer whose delta falls below the
+    window read a pointer older than this commit, so its commit conflicts
+    and retries with a fresh delta."""
+    horizon = version - (KEEP_SNAPSHOTS + 1)
     referenced: set[str] = set()
     for snap in root.glob("v*"):
         mf = snap / MANIFEST
@@ -208,6 +211,12 @@ def _sweep_orphan_deltas(root: pathlib.Path, keep_snapshots: int) -> None:
                 shutil.rmtree(d, ignore_errors=True)
 
 
+def _commit_and_sweep(root: pathlib.Path, build, batch_id: int | None = None) -> None:
+    version = commit_snapshot(root, build, batch_id)
+    if version is not None:
+        _sweep_orphan_deltas(root, version)
+
+
 def neardup_foreach_batch(
     store_path: str,
     text_col: str = "text",
@@ -216,33 +225,24 @@ def neardup_foreach_batch(
     n_bands: int = 4,
     k: int = 3,
     threshold: float = 0.5,
-    keep_snapshots: int = 2,
 ):
     """``foreachBatch`` hook: near-dup each micro-batch against the
-    accumulated corpus and fold the result into the versioned store.
-    Exactly-once across at-least-once replays via the pointer's batch_id
-    guard (same contract as the learning hook); a commit lost to a
-    concurrent writer is retried from the fresh snapshot with a FRESH
-    delta (the stale one becomes debris for the orphan sweep).
+    accumulated corpus and fold the result into the versioned store,
+    exactly once per batch_id (extract_stream.commit_snapshot). Each
+    attempt writes a FRESH delta; a lost attempt's delta is debris for the
+    orphan sweep.
 
     Commit cost is O(micro-batch): one delta write + one manifest JSON —
     the accumulated table is never rewritten (append-only manifests; the
     true Iceberg deployment maps 1:1 onto append commits)."""
+    root = require_local_path(store_path, "near-dup store root")
 
     def hook(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        root = _require_local_path(store_path, "near-dup store root")
-        root.mkdir(parents=True, exist_ok=True)
-        for attempt in range(3):
-            state = _learned_state(root)
-            last = state.get("batch_id") if state else None
-            if last is not None and batch_id <= last:
-                return  # replay of an applied micro-batch
-            version = next_commit_version(root)
-            man = _read_manifest(root, state) if state else {"bands": [], "pairs": []}
-            old_bands = _read_deltas(spark, root / BAND_DELTAS, man["bands"])
-            old_pairs_names = man["pairs"]
 
+        def build(snapshot, version, tmp):
+            man = _read_manifest(snapshot) if snapshot else {"bands": [], "pairs": []}
+            old_bands = _read_deltas(spark, root / BAND_DELTAS, man["bands"])
             new_bands = _with_pb(
                 _banded(batch_df, text_col, id_col, n_hashes, n_bands, k)
             )
@@ -261,25 +261,13 @@ def neardup_foreach_batch(
                 row[0] for row in new_bands.select("_pb").distinct().collect()
             ]
             if not batch_pbs:
-                if state is None:
+                if snapshot is None:
                     # an empty FIRST batch must not commit (no delta to
                     # reference); the replayed empty batch is idempotent
-                    return
+                    return False
                 # record the batch_id against replays; manifest unchanged
-                def stage_empty(tmp: pathlib.Path) -> None:
-                    tmp.mkdir(parents=True, exist_ok=True)
-                    (tmp / MANIFEST).write_text(json.dumps(man))
-
-                try:
-                    _commit_snapshot(
-                        stage_empty, root, version,
-                        stream_batch_id=batch_id, keep_snapshots=keep_snapshots,
-                    )
-                    return
-                except RuntimeError:
-                    if attempt == 2:
-                        raise
-                    continue
+                _write_manifest(tmp, man["bands"], man["pairs"])
+                return True
             probe_old = (
                 old_bands.filter(F.col("_pb").isin(batch_pbs))
                 if old_bands is not None
@@ -318,57 +306,27 @@ def neardup_foreach_batch(
             # retried commit never collides with its own debris
             name = f"b{batch_id}x{version}-{uuid.uuid4().hex[:8]}"
             _write_delta(new_bands, cand, root, name)
-            new_man = {
-                "bands": man["bands"] + [name],
-                "pairs": man["pairs"] + [name],
-            }
+            _write_manifest(tmp, man["bands"] + [name], man["pairs"] + [name])
+            return True
 
-            def stage(tmp: pathlib.Path) -> None:
-                tmp.mkdir(parents=True, exist_ok=True)
-                (tmp / MANIFEST).write_text(json.dumps(new_man))
-
-            try:
-                _commit_snapshot(
-                    stage, root, version,
-                    stream_batch_id=batch_id, keep_snapshots=keep_snapshots,
-                )
-                _sweep_orphan_deltas(root, keep_snapshots)
-                return
-            except RuntimeError:
-                if attempt == 2:
-                    raise
-            except Exception:
-                # lazy read of a snapshot GC'd by a concurrent faster
-                # writer — retry only if the pointer actually moved
-                if attempt == 2 or _learned_state(root) == state:
-                    raise
+        _commit_and_sweep(root, build, batch_id)
 
     return hook
 
 
-def compact_neardup_store(
-    spark: SparkSession, store_path: str, keep_snapshots: int = 2
-) -> None:
+def compact_neardup_store(spark: SparkSession, store_path: str) -> None:
     """Rewrite the accumulated state into ONE delta and commit a manifest
     referencing only it — bounds delta-file growth; superseded deltas are
     swept once the pointer passes the keep window. Keeps the recorded
     stream batch_id unchanged (compaction is not an ingest)."""
-    root = _require_local_path(store_path, "near-dup store root")
-    state = _learned_state(root)
-    if state is None:
-        return
-    bands, pairs = read_neardup_state(spark, store_path)
-    version = next_commit_version(root)
-    name = f"compactx{version}-{uuid.uuid4().hex[:8]}"
-    _write_delta(bands, pairs, root, name)
-    new_man = {"bands": [name], "pairs": [name]}
+    root = require_local_path(store_path, "near-dup store root")
 
-    def stage(tmp: pathlib.Path) -> None:
-        tmp.mkdir(parents=True, exist_ok=True)
-        (tmp / MANIFEST).write_text(json.dumps(new_man))
+    def build(snapshot, version, tmp):
+        if snapshot is None:
+            return False
+        name = f"compactx{version}-{uuid.uuid4().hex[:8]}"
+        _write_delta(*_read_snapshot(spark, snapshot), root, name)
+        _write_manifest(tmp, [name], [name])
+        return True
 
-    _commit_snapshot(
-        stage, root, version,
-        stream_batch_id=state.get("batch_id"), keep_snapshots=keep_snapshots,
-    )
-    _sweep_orphan_deltas(root, keep_snapshots)
+    _commit_and_sweep(root, build)

@@ -1,13 +1,7 @@
 """Main-content extraction + layout parsing tests (pure core and Spark)."""
 from __future__ import annotations
 
-import pytest
-
-from ocr_spark.functions.blocks import (
-    classify_blocks,
-    extract_main_content,
-    parse_blocks,
-)
+from ocr_spark.functions.blocks import extract_main_content, parse_blocks
 from ocr_spark.functions.layout import cluster_lines, detect_columns, layout_text
 
 HTML = """<html><head><title>t</title><style>.x{color:red}</style></head><body>

@@ -6,7 +6,6 @@ unreachable threshold."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_spark.operators.curation import line_strip
 

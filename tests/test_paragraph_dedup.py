@@ -8,7 +8,6 @@ segment key)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_spark.operators.curation import paragraph_dedup
 

@@ -12,7 +12,6 @@ from hypothesis import strategies as st
 from ocr_spark.functions.blocks import extract_main_content
 from ocr_spark.functions.layout import cluster_lines, layout_text
 from ocr_spark.functions.textops import (
-    correct_with_stats,
     extract_turn,
     normalize_currency,
     normalize_spelling,

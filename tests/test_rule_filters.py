@@ -10,7 +10,6 @@ from __future__ import annotations
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_spark.operators.curation import (
     ENTITY_REPAIRS,

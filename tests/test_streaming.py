@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from data.synth import make_rows, write_table
 from ocr_spark.operators.extraction import extract_turns
 from ocr_spark.streaming.extract_stream import (
-    extract_stream,
     learning_foreach_batch,
     read_transcript_stream,
     windowed_turn_metrics,
@@ -34,7 +33,7 @@ def test_stream_matches_batch(spark, stream_input, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     stream = read_transcript_stream(spark, stream_input, max_files_per_trigger=2)
-    q = write_extracted_stream(extract_stream(stream), out, ckpt)
+    q = write_extracted_stream(extract_turns(stream), out, ckpt)
     _drain(q)
 
     got = {
@@ -53,13 +52,13 @@ def test_stream_resume_no_reprocessing(spark, stream_input, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     # first drain
     q = write_extracted_stream(
-        extract_stream(read_transcript_stream(spark, stream_input)), out, ckpt
+        extract_turns(read_transcript_stream(spark, stream_input)), out, ckpt
     )
     _drain(q)
     n1 = spark.read.parquet(out).count()
     # restart with same checkpoint: no new files -> no new rows
     q2 = write_extracted_stream(
-        extract_stream(read_transcript_stream(spark, stream_input)), out, ckpt
+        extract_turns(read_transcript_stream(spark, stream_input)), out, ckpt
     )
     _drain(q2)
     assert spark.read.parquet(out).count() == n1
@@ -68,7 +67,7 @@ def test_stream_resume_no_reprocessing(spark, stream_input, tmp_path):
     write_table(str(pathlib.Path(stream_input)), extra, files=1)
     # write_table names files part-0000.. which collides; write under new name
     q3 = write_extracted_stream(
-        extract_stream(read_transcript_stream(spark, stream_input)), out, ckpt
+        extract_turns(read_transcript_stream(spark, stream_input)), out, ckpt
     )
     _drain(q3)
     n3 = spark.read.parquet(out).count()
@@ -183,7 +182,7 @@ def test_foreach_batch_learning(spark, stream_input, tmp_path):
     from ocr_spark.streaming.extract_stream import read_learned_table
 
     learned = str(tmp_path / "learned")
-    stream = extract_stream(read_transcript_stream(spark, stream_input))
+    stream = extract_turns(read_transcript_stream(spark, stream_input))
     q = (
         stream.writeStream.foreachBatch(learning_foreach_batch(learned))
         .option("checkpointLocation", str(tmp_path / "ck2"))
@@ -255,6 +254,55 @@ def test_cli_commit_does_not_advance_stream_replay_guard(spark, tmp_path):
     # and the manual approval survived the accrual merge
     row = read_learned_table(spark, learned).filter("word='zzyqx'").first()
     assert row["is_approved"]
+
+
+def test_foreach_batch_keeps_a_concurrent_commit(spark, tmp_path, monkeypatch):
+    """Lost update: an admin commit that lands between the hook's pointer
+    read and its own commit must survive. The hook re-merges its batch into
+    the fresh snapshot instead of committing the merge of the stale one."""
+    import datetime
+
+    import ocr_spark.operators.learning as learning
+    from ocr_spark.streaming.extract_stream import (
+        _learned_state,
+        commit_learned_snapshot,
+        next_commit_version,
+        read_learned_table,
+    )
+
+    learned = str(tmp_path / "learned_lost_update")
+    root = pathlib.Path(learned)
+    batch = spark.createDataFrame(
+        [(["zzyqx"], "2026-01-01 00:00:00")],
+        "unknown_words array<string>, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    learning_foreach_batch(learned)(batch, 0)
+
+    real = learning.accrue_learned
+    calls = []
+
+    def racing_accrue(existing, epoch_counts, *args, **kwargs):
+        if not calls:  # a CLI-style approval commits mid-merge
+            commit_learned_snapshot(
+                learning.approve_words(
+                    read_learned_table(spark, learned), ["zzyqx"],
+                    datetime.datetime(2026, 8, 17),
+                ),
+                root,
+                next_commit_version(root),
+                stream_batch_id=_learned_state(root)["batch_id"],
+            )
+        calls.append(1)
+        return real(existing, epoch_counts, *args, **kwargs)
+
+    monkeypatch.setattr(learning, "accrue_learned", racing_accrue)
+    learning_foreach_batch(learned)(batch, 1)
+
+    row = read_learned_table(spark, learned).filter("word='zzyqx'").first()
+    assert row["frequency"] == 2  # the batch's count
+    assert row["is_approved"]  # and the approval
+    assert _learned_state(root)["batch_id"] == 1
+    assert len(calls) == 2  # the stale merge was redone once
 
 
 def test_foreach_batch_large_vocab_no_driver_materialization(spark, tmp_path):

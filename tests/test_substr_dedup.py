@@ -8,7 +8,6 @@ import random
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import (
     EXACT_SUBSTR_MIN_LEN,

@@ -4,7 +4,6 @@ sequential-scan merge semantics, and checkpoint hygiene."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_spark.functions.bpe import train_bpe
 from ocr_spark.operators.tokenizer import (

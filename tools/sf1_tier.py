@@ -28,59 +28,13 @@ HEAVY = "embedding_near_dup"
 
 
 def cap_counters(sf_dir: str) -> dict:
-    """The tier's hot-key drop counts — the same observability contract as
-    bench.py, extended with the winnow fingerprint cap."""
+    """The tier's hot-key drop counts, in a session of their own."""
     import __spark_entry__ as entrymod
-    from pyspark.sql import functions as F
-
-    from ocr_spark.functions.explode import explode_nonnull
-    from ocr_spark.operators.dedup import (
-        band_buckets,
-        minhash_signatures,
-        shingle_ids_from_tokens,
-    )
-    from ocr_spark.operators.textstats import (
-        WINNOW_K,
-        WINNOW_W,
-        tokens,
-        with_winnow_fingerprints,
-    )
     from ocr_spark.session import get_spark
 
     spark = get_spark("sf1-cap-counters")
     spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cap = entrymod._JACCARD_CAP
-    wcap = entrymod._WINNOW_CAP
-    dropped_shingles = (
-        explode_nonnull(
-            docs.select(tokens("text").alias("_toks")),
-            shingle_ids_from_tokens(F.col("_toks"), 3),
-            "s",
-        )
-        .groupBy("s").count().filter(F.col("count") > cap).count()
-    )
-    hot_buckets = (
-        minhash_signatures(docs, n_hashes=16, k=3)
-        .select(F.posexplode(band_buckets("signature", 4)).alias("band", "bucket"))
-        .groupBy("band", "bucket").count().filter(F.col("count") > cap).count()
-    )
-    hot_winnow = (
-        explode_nonnull(
-            with_winnow_fingerprints(
-                docs.select("doc_id", "text"), "text", WINNOW_K, WINNOW_W
-            ),
-            "winnow", "fp",
-        )
-        .groupBy("fp").count().filter(F.col("count") > wcap).count()
-    )
-    out = {
-        "max_doc_freq": cap,
-        "max_winnow_freq": wcap,
-        "jaccard_dropped_shingles": dropped_shingles,
-        "minhash_hot_buckets": hot_buckets,
-        "winnow_hot_fingerprints": hot_winnow,
-    }
+    out = entrymod.cap_counters(spark, sf_dir)
     spark.stop()
     return out
 

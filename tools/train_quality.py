@@ -33,7 +33,9 @@ import numpy as np
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-WORD_RE = re.compile(r"[a-z]{3,}")
+from ocr_spark.operators import textstats  # noqa: E402
+
+WORD_RE = re.compile(textstats.WORD_RE)
 
 
 def _stopwords() -> tuple[str, ...]:
