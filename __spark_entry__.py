@@ -18,6 +18,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import NamedTuple
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,24 +29,27 @@ from ocr_spark.operators.textstats import WORD_RE
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one tier table — plus the toy-tier lake-layout shim.
+    """Load one tier table, spread over every core.
 
-    Every tier table here is ONE parquet file with ONE row group, which
-    Spark cannot split: every scan-rooted narrow stage (the flagship
-    extraction, winnowing, signatures, quality scoring, …) would run in
-    a single task no matter how many cores the session has — measured
-    5× on sf1 winnowing (51.4 → 10.5 s at local[32]). A real lake is
-    millions of row-group-sized splits, so scan parallelism is free
-    there; the round-robin repartition below restores exactly that and
-    nothing else (results are unchanged — the compare is order-
-    insensitive — and sortBeforeRepartition keeps the layout
-    deterministic). Only single-split inputs are shimmed: anything
-    Spark can already split keeps its native file parallelism."""
+    Spark reads a parquet row group whole, in the split that holds its
+    middle, and the tier writers put each table in ONE file with ONE row
+    group. So every scan-rooted narrow stage (the flagship extraction,
+    winnowing, signatures, quality scoring, …) would run in as many tasks
+    as there are row groups, whatever the split count (a 4.7 MB table
+    plans two splits, one of them empty) — measured 5× on sf1 winnowing
+    (51.4 → 10.5 s at local[32]). A real lake is millions of row groups,
+    so scan parallelism is free there; the round-robin repartition below
+    restores exactly that and nothing else (results are unchanged — the
+    compare is order-insensitive — and sortBeforeRepartition keeps the
+    layout deterministic). The row-group count comes from the parquet
+    footers on the driver, without a Spark job."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    if df.rdd.getNumPartitions() == 1:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
+    cores = spark.sparkContext.defaultParallelism
+    row_groups = sum(f.num_row_groups for f in ds.dataset(path, format="parquet").get_fragments())
+    if row_groups < cores:
+        df = df.repartition(cores)
     return df
 
 
@@ -4397,7 +4401,7 @@ WITH t AS ({_TRANSCRIPT_CTE}),
 x AS (
   SELECT conv_id, turn_idx, role,
          count(*) OVER w AS n_context,
-         list(role || ': ' || coalesce(text, '')) OVER w AS ctx,
+         list(coalesce(role, '') || ': ' || coalesce(text, '')) OVER w AS ctx,
          coalesce(text, '') AS target
   FROM t
   WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx
@@ -4774,8 +4778,9 @@ WITH t AS (
   FROM documents
 )
 SELECT doc_id AS id, n_chars AS value,
-       CAST(len(list_filter(th, x -> CAST(n_chars AS DOUBLE) > x))
-            AS INTEGER) AS bin
+       CASE WHEN n_chars IS NOT NULL THEN
+         CAST(len(list_filter(th, x -> CAST(n_chars AS DOUBLE) > x))
+              AS INTEGER) END AS bin
 FROM documents, t
 """
 

@@ -118,6 +118,11 @@ SPELLING_PATTERNS: list[tuple[re.Pattern, str]] = [
     (re.compile(p, re.IGNORECASE), r) for p, r in SPELLING_RULES
 ]
 
+#: In a lowercased ASCII text, marks a token the spelling stage may change:
+#: every J_TO_Y key contains ``j`` and every digraph rule is ``oe``, ``ch``
+#: or a ``?j``.
+SPELLING_HIT: re.Pattern = re.compile(r"j|oe|ch")
+
 # ---------------------------------------------------------------------------
 # Currency / number normalization rule table.
 # Semantics mirror reference dictionary_corrector.py:1304-1408; the table
@@ -264,6 +269,8 @@ CURRENCY_RULES: list[CurrencyRule] = [
 
 #: Lossless token/whitespace splitter (round-trips via "".join).
 TOKEN_SPLIT = re.compile(r"\S+|\s+")
+#: one whitespace-delimited token (``str.split()``'s unit).
+TOKEN = re.compile(r"\S+")
 #: prefix-punct / word-core / suffix-punct peel.
 PUNCT_PEEL = re.compile(r"^([^\w]*)([\w\-\']+)([^\w]*)$")
 #: digits glued to a >=3-letter word, both orders.

@@ -231,10 +231,20 @@ _UNSET = object()
 _fuzzy_state: dict = {"key": _UNSET, "sorted": None, "cache": {}}
 
 
+#: (extra, KAMUS | extra) for the last learned-word set seen
+_kamus_memo: tuple = (None, D.KAMUS)
+
+
 def _effective_kamus(extra: Optional[frozenset] = None) -> frozenset:
     """The epoch dictionary: base kamus ∪ approved learned words (SURVEY.md
-    §7.4 epoch-snapshot semantics — frozen for a whole job)."""
-    return D.KAMUS if not extra else D.KAMUS | extra
+    §7.4 epoch-snapshot semantics — frozen for a whole job). Memoized on
+    the identity of ``extra``, which one job passes to every turn."""
+    global _kamus_memo
+    if not extra:
+        return D.KAMUS
+    if _kamus_memo[0] is not extra:
+        _kamus_memo = (extra, D.KAMUS | extra)
+    return _kamus_memo[1]
 
 
 def fuzzy_best_match(
@@ -471,63 +481,98 @@ def normalize_token_spelling(token: str) -> str:
         if token[0].isupper():
             repl = repl.capitalize()
         return repl
-    # necessary-condition probe: no digraph substring -> no rule can fire.
-    # Probing the plain-lowered token is NOT exact (the sre equivalence
-    # folds — see _probe_fold; 'ſj' must probe as 'sj')
+    # each rule is a two-letter literal, so its probe is a necessary
+    # condition, refreshed after a rule fires (``dj`` -> ``j`` can make an
+    # ``nj``). Probing the plain-lowered token is NOT exact (the sre
+    # equivalence folds — see _probe_fold; 'ſj' must probe as 'sj')
     probe = _probe_fold(token)
-    if (
-        "oe" not in probe
-        and "dj" not in probe
-        and "tj" not in probe
-        and "nj" not in probe
-        and "sj" not in probe
-        and "ch" not in probe
-    ):
-        return token
     out = token
-    for pattern, repl in D.SPELLING_PATTERNS:
-        out = pattern.sub(lambda m, _r=repl: _preserve_case_single(m.group(0), _r), out)
+    for (digraph, repl), (pattern, _) in zip(D.SPELLING_RULES, D.SPELLING_PATTERNS):
+        if digraph in probe:
+            fixed = pattern.sub(lambda m, _r=repl: _preserve_case_single(m.group(0), _r), out)
+            if fixed != out:
+                out = fixed
+                probe = _probe_fold(out)
     return out
+
+
+#: whitespace other than the space character; the rest of a token
+_SPACE_NOT_BLANK = re.compile(r"[^\S ]")
+_TOKEN_REST = re.compile(r"\S*")
+
+
+def _spelling_candidates(low: str):
+    """(start, end) of each token of the lowercased ASCII text ``low`` that
+    holds a ``D.SPELLING_HIT``: one C-speed scan for the hits, and a token
+    boundary search around each."""
+    pos = 0
+    while (m := D.SPELLING_HIT.search(low, pos)) is not None:
+        hit = m.start()
+        start = max(low.rfind(" ", pos, hit) + 1, pos)
+        while (ws := _SPACE_NOT_BLANK.search(low, start, hit)) is not None:
+            start = ws.end()
+        pos = _TOKEN_REST.match(low, hit).end()
+        yield start, pos
 
 
 def normalize_spelling(
     text: str, spans: Optional[list[Span]] = None
 ) -> tuple[str, int, list[Span]]:
-    """Token-wise spelling modernization. The change count positionally zips
-    ``text.split()`` against the result's split and counts differing pairs up
-    to the shorter length — the reference's exact (under)counting
-    (spelling_normalizer.py:148-151), part of the numeric contract."""
+    """Token-wise spelling modernization: ``normalize_token_spelling`` on
+    every whitespace-delimited token, with a ``spelling`` span per changed
+    token and incoming spans remapped.
+
+    Only a token whose lowercase form contains ``j``, ``oe`` or ``ch`` can
+    change: every ``J_TO_Y`` key contains ``j``, every digraph rule needs
+    ``oe``, ``dj``, ``tj``, ``nj``, ``sj`` or ``ch``, and a
+    ``FOREIGN_WORDS`` hit is returned unchanged. For ASCII text one scan of
+    ``text.lower()`` finds those tokens (``_spelling_candidates``), and only
+    they run. Other text runs every token: its lowercase form need not line
+    up with it (``İ`` lowercases to two characters). Unchanged text between
+    changed tokens is one offset-map segment, which maps every offset as
+    the per-token segments it stands for would.
+
+    The change count is the number of changed tokens. The reference counts
+    the differing pairs of ``text.split()`` zipped positionally against the
+    result's split (spelling_normalizer.py:148-151); the two agree because
+    no replacement in ``SPELLING_RULES`` or ``J_TO_Y`` is empty or contains
+    whitespace, so each token becomes exactly one token.
+    """
     if not text:
         return text, 0, spans or []
-    spans = spans if spans is not None else []
-    track = bool(spans)
+    if text.isascii():
+        tokens = _spelling_candidates(text.lower())
+    else:
+        tokens = (m.span() for m in D.TOKEN.finditer(text))
+    pmap = PiecewiseMap() if spans else None
     pieces: list[str] = []
-    pmap = PiecewiseMap() if track else None
     new_spans: list[Span] = []
-    old = 0
-    out = 0
-    for token in D.TOKEN_SPLIT.findall(text):
-        if token.strip():
-            fixed = normalize_token_spelling(token)
-            if fixed != token:
-                new_spans.append((out, out + len(fixed), "spelling"))
-            if track:
-                pmap.add(old, old + len(token), out, out + len(fixed), fixed != token)
-            pieces.append(fixed)
-            out += len(fixed)
-        else:
-            if track:
-                pmap.add(old, old + len(token), out, out + len(token), False)
-            pieces.append(token)
-            out += len(token)
-        old += len(token)
+    pos = 0  # end of the last changed token, in text
+    out = 0  # the same position in the result
+    for s, e in tokens:
+        token = text[s:e]
+        fixed = normalize_token_spelling(token)
+        if fixed == token:
+            continue
+        if s > pos:
+            pieces.append(text[pos:s])
+            if pmap is not None:
+                pmap.add(pos, s, out, out + (s - pos), False)
+            out += s - pos
+        pieces.append(fixed)
+        new_spans.append((out, out + len(fixed), "spelling"))
+        if pmap is not None:
+            pmap.add(s, e, out, out + len(fixed), True)
+        out += len(fixed)
+        pos = e
+    if pos < len(text):
+        pieces.append(text[pos:])
+        if pmap is not None:
+            pmap.add(pos, len(text), out, out + (len(text) - pos), False)
     normalized = "".join(pieces)
-    changes = sum(
-        1 for o, n in zip(text.split(), normalized.split()) if o != n
-    )
-    if track:
-        return normalized, changes, pmap.remap(spans) + new_spans
-    return normalized, changes, new_spans
+    if pmap is not None:
+        return normalized, len(new_spans), pmap.remap(spans) + new_spans
+    return normalized, len(new_spans), new_spans
 
 
 # ---------------------------------------------------------------------------
@@ -544,7 +589,17 @@ def quality_score(
     0.30*(100 - correction rate), int-TRUNCATED (not rounded) then clamped;
     labels Excellent>=85 / Good>=70 / Fair>=50 / else Poor. Empty confidence
     list defaults to 75; 0-1-range means are rescaled to 0-100."""
-    words = D.LETTER_RUN.findall(text.lower()) if text else []
+    return _quality(_words(text), confidences, corrections, _effective_kamus(extra_kamus))
+
+
+def _words(text: str) -> list[str]:
+    """The lowercased >=3-letter runs that A6 scores and T7 tracks."""
+    return D.LETTER_RUN.findall(text.lower()) if text else []
+
+
+def _quality(
+    words: list[str], confidences: Optional[list[float]], corrections: int, kamus: frozenset
+) -> dict:
     total = len(words)
 
     if confidences:
@@ -555,9 +610,8 @@ def quality_score(
     else:
         conf = 75.0
 
-    kamus = _effective_kamus(extra_kamus)
     if total > 0:
-        matched = sum(1 for w in words if w in kamus)
+        matched = sum(map(kamus.__contains__, words))
         dict_match = matched / total * 100
     else:
         matched, dict_match = 0, 100.0
@@ -597,11 +651,11 @@ def unknown_words(text: str, extra_kamus: Optional[frozenset] = None) -> list[st
     Returned sorted (the reference returns set order, which is
     hash-seed-dependent; downstream is a groupBy so order is immaterial —
     we pin a stable one)."""
-    if not text:
-        return []
-    kamus = _effective_kamus(extra_kamus)
-    seen = set(D.LETTER_RUN.findall(text.lower()))
-    return sorted(w for w in seen if w not in kamus)
+    return _unknown(_words(text), _effective_kamus(extra_kamus))
+
+
+def _unknown(words: list[str], kamus: frozenset) -> list[str]:
+    return sorted(set(words).difference(kamus))
 
 
 # ---------------------------------------------------------------------------
@@ -638,14 +692,16 @@ def extract_turn(
         normalized, n_spell = corrected, 0
 
     final = normalized if normalized else corrected
-    score_input = final if final else raw
+    # A6 and T7 share one word pass and one kamus
+    words = _words(final if final else raw)
+    kamus = _effective_kamus(extra_kamus)
 
     return {
         "extracted_text": corrected,
         "normalized_text": normalized,
         "dictionary_corrections": n_corr,
         "spelling_changes": n_spell,
-        "quality": quality_score(score_input, confidences, n_corr, extra_kamus),
-        "unknown_words": unknown_words(score_input, extra_kamus),
+        "quality": _quality(words, confidences, n_corr, kamus),
+        "unknown_words": _unknown(words, kamus),
         "spans": spans,
     }

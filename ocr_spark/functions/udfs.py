@@ -5,7 +5,9 @@ One fused scalar pandas UDF carries the whole per-turn pipeline
 T5 spelling -> A6 scoring -> T7 unknown words, returning a single struct so
 each turn crosses the JVM<->Python boundary exactly once. Iterator-of-series
 form amortizes per-task setup (the compiled rule tables import once per
-Python worker process, not per batch).
+Python worker process, not per batch), and the workers come from
+``ocr_spark._daemon``, which imports pyspark from site-packages, so a task's
+setup does not re-read ``pyspark.zip``.
 
 No per-row Python crosses the boundary — batches arrive as Arrow record
 batches and the struct result returns as one Arrow array (input_hint: "no

@@ -1016,7 +1016,8 @@ def curriculum_bins(
     recipe, precomputed as a column so a downstream epoch scheduler reads
     tiers off a plain filter instead of sorting the corpus per epoch.
 
-    Returns ``(id, value, bin)`` with ``bin ∈ [0, n_bins)``; bin b holds
+    Returns ``(id, value, bin)`` with ``bin ∈ [0, n_bins)``, NULL for a
+    NULL value (no value is no evidence of difficulty); bin b holds
     values in ``(t_b-1, t_b]`` where ``t_i`` is the exact interpolated
     ``i/n_bins`` quantile. On heavily tied value distributions adjacent
     thresholds coincide and the bins between them are empty — quantile
@@ -1047,20 +1048,17 @@ def curriculum_bins(
         F.percentile(v, F.array(*[F.lit(q) for q in fracs])).alias("t")
     ).collect()[0]
     thresholds = list(row["t"] or [])
-    if not thresholds:  # empty input: no quantiles, everything bin 0
-        return df.select(
-            F.col(id_col).alias("id"),
-            F.col(value_col).alias("value"),
-            F.lit(0).alias("bin"),
+    if not thresholds:  # no non-NULL value, so every bin is NULL
+        bin_expr = F.lit(0)
+    else:
+        ts = F.array(*[F.lit(float(t)) for t in thresholds])
+        bin_expr = F.aggregate(
+            ts,
+            F.lit(0),
+            lambda acc, t: acc + F.when(v > t, F.lit(1)).otherwise(F.lit(0)),
         )
-    ts = F.array(*[F.lit(float(t)) for t in thresholds])
-    bin_expr = F.aggregate(
-        ts,
-        F.lit(0),
-        lambda acc, t: acc + F.when(v > t, F.lit(1)).otherwise(F.lit(0)),
-    )
     return df.select(
         F.col(id_col).alias("id"),
         F.col(value_col).alias("value"),
-        bin_expr.cast("int").alias("bin"),
+        F.when(v.isNotNull(), bin_expr).cast("int").alias("bin"),
     )

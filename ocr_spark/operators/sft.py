@@ -81,9 +81,9 @@ def assemble_context(
     Returns ``(conv_id, turn_idx, n_context, context, target)`` where
     ``n_context`` is the number of turns actually present in the frame
     (< k at the head of a conversation) and ``target`` is the assistant
-    turn's text. NULL texts render as empty strings (the extraction
-    contract upstream may emit empty turns; they still occupy a context
-    slot). An assistant turn at ``turn_idx`` head position gets
+    turn's text. NULL roles and texts render as empty strings (the
+    extraction contract upstream may emit empty turns; they still occupy a
+    context slot), so ``n_context`` is the number of joined segments. An assistant turn at ``turn_idx`` head position gets
     ``n_context = 0`` and ``context = ''`` — explicitly, on both engines,
     so the empty-frame ``collect_list``/``list()`` divergence (Spark
     ``[]`` vs DuckDB ``NULL``) never reaches the output.
@@ -96,7 +96,7 @@ def assemble_context(
         .rowsBetween(-k, -1)
     )
     rendered = F.concat(
-        F.col(role_col),
+        F.coalesce(F.col(role_col), F.lit("")),
         F.lit(": "),
         F.coalesce(F.col(text_col), F.lit("")),
     )

@@ -4,13 +4,18 @@ Every knob here is chosen for the 100 TB design point and merely *tested*
 on local[N]: AQE for runtime re-planning and skew-join splitting, Arrow for
 the Python exchange, bounded Arrow batches so multi-MB transcript turns
 don't blow executor-python memory, and a shuffle-partition count that the
-caller scales with cluster size.
+caller scales with cluster size. Python workers start from
+``ocr_spark._daemon``, which imports pyspark from site-packages when it is
+the JVM's version.
 """
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+from ocr_spark._daemon import VERSION_ENV
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -33,28 +38,28 @@ def get_spark(
     path = os.environ.get("PYTHONPATH")
     if root not in (path or "").split(os.pathsep):
         os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (root, path) if p)
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    conf = (
+        SparkConf().setAppName(app_name)
+        .setMaster(master)
+        .set("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: coalesce tiny shuffle partitions, split skewed ones at runtime
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .set("spark.sql.adaptive.enabled", "true")
+        .set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .set("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow exchange for pandas UDFs; bound batch size for long turns
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .set("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 2048 measured best on the 1.9M-turn job (108.7 s vs 123.6 s at
         # 1024 and 131.4 s at 8192, same box/day): big batches serialize
         # the JVM->Python pipeline into lumpy tails, tiny ones pay
         # per-batch overhead
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_ARROW_BATCH", "2048"))
+        .set("spark.sql.execution.arrow.maxRecordsPerBatch",
+             os.environ.get("SPARK_ARROW_BATCH", "2048"))
         # target split size for the initial scan: extraction does ~1000x
         # more compute per byte than a plain scan, so splits must be sized
         # for CPU balance, not IO efficiency — 16 MB keeps every core busy
         # from the first stage (128 MB coalesced a 300 MB input to 3 tasks,
         # serializing the scan+shuffle stage; measured 2026-08-17)
-        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
+        .set("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         # lz4 parquet sink: encode CPU is the asymmetric cost when cores
         # are scarce — at 12 Python-UDF slots on the 32-core box the sink
         # eats ~14% of full-job throughput (vs ~5% at 3 slots), and
@@ -63,9 +68,9 @@ def get_spark(
         # within noise. At 100 TB the same arithmetic holds wherever
         # executor cores are the binding resource; text compresses
         # comparably under either codec.
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_PARQUET_CODEC", "lz4"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .set("spark.sql.parquet.compression.codec",
+             os.environ.get("SPARK_PARQUET_CODEC", "lz4"))
+        .set("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # pre-commit and pre-touch the heap: the first big-shuffle stage
         # otherwise pays the heap-growth tax — threads stall off-CPU in
         # allocation/page faults while the JVM grows from its initial
@@ -74,14 +79,27 @@ def get_spark(
         # drops 112-292 s -> 48 s with a pre-touched heap). Pre-touch
         # costs seconds once at startup, linear in heap size. In
         # spark-submit deployments the driver JVM is already up when
-        # this builder runs — set the same flags on the submit command.
-        .config(
+        # this function runs — set the same flags on the submit command.
+        .set(
             "spark.driver.extraJavaOptions",
             "-Xms" + os.environ.get("SPARK_DRIVER_MEMORY", "8g")
             + " -XX:+AlwaysPreTouch",
         )
-        .config("spark.ui.enabled", "false")
+        .set("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+        conf.set(k, v)
+    # Python workers start from ocr_spark/_daemon.py, which imports pyspark
+    # from site-packages when it is the JVM's version: start the JVM first
+    # to read it. A worker imports that module before any task ships code,
+    # so only a local JVM with this package's directory on its PYTHONPATH
+    # qualifies (set above when this call starts the JVM; not so under
+    # spark-submit --py-files)
+    SparkContext._ensure_initialized(conf=conf)
+    jvm = SparkContext._jvm
+    worker_path = (jvm.java.lang.System.getenv("PYTHONPATH") or "").split(os.pathsep)
+    local = conf.get("spark.master").startswith("local")
+    if local and os.path.isdir(root) and root in worker_path:
+        conf.set("spark.python.daemon.module", "ocr_spark._daemon")
+        conf.set(f"spark.executorEnv.{VERSION_ENV}", jvm.org.apache.spark.package.SPARK_VERSION())
+    return SparkSession.builder.config(conf=conf).getOrCreate()

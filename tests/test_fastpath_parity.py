@@ -2,8 +2,8 @@
 
 Every probe in ``ocr_spark.functions.textops`` (the T1 multi-word gate and
 rule probes, the T3 identity shortcut, the T4 per-rule currency probes, the T5
-digraph probe, and the ``_probe_fold`` haystack they share) only decides
-whether a regex scan may be skipped. ``extract_turn_probe_free`` below runs
+candidate-token scan and digraph probe, and the ``_probe_fold`` haystack they
+share) only decides whether a regex scan may be skipped. ``extract_turn_probe_free`` below runs
 the same pipeline with every rule applied and no probe, so any probe that
 is not a true necessary condition shows up as a difference — without the
 reference implementation.
@@ -57,6 +57,28 @@ def _token_spelling_all(token):
     return token
 
 
+def _spelling_all(text, spans=None):
+    """T5 token by token: every token through ``_token_spelling_all``, one
+    offset-map segment per token, and the change count as the reference
+    computes it, the differing pairs of the positional ``split()`` zip."""
+    if not text:
+        return text, 0, spans or []
+    pmap = T.PiecewiseMap()
+    pieces, new_spans = [], []
+    old = out = 0
+    for token in D.TOKEN_SPLIT.findall(text):
+        fixed = _token_spelling_all(token) if token.strip() else token
+        if fixed != token:
+            new_spans.append((out, out + len(fixed), "spelling"))
+        pmap.add(old, old + len(token), out, out + len(fixed), fixed != token)
+        pieces.append(fixed)
+        old += len(token)
+        out += len(fixed)
+    normalized = "".join(pieces)
+    changes = sum(1 for o, n in zip(text.split(), normalized.split()) if o != n)
+    return normalized, changes, pmap.remap(spans or []) + new_spans
+
+
 #: matches every text, so the T3 identity shortcut is never taken
 _ALWAYS = re.compile("")
 
@@ -67,7 +89,7 @@ def extract_turn_probe_free(text, **kwargs):
         T,
         apply_multiword=_multiword_all,
         normalize_currency=_currency_all,
-        normalize_token_spelling=_token_spelling_all,
+        normalize_spelling=_spelling_all,
     ), mock.patch.object(D, "PHRASE_KEY_PROBE", _ALWAYS):
         return T.extract_turn(text, **kwargs)
 
@@ -212,6 +234,101 @@ def test_probe_free_bypasses_every_gate(text):
     with mock.patch.multiple(D, MULTI_WORD_PROBE=_NEVER, DIGIT_GLUE_PROBE=_NEVER):
         assert extract_turn_probe_free(text) == want
         assert T.extract_turn(text) != want
+
+
+def test_probe_free_bypasses_the_spelling_candidates():
+    text = "djalan oetama"
+    want = extract_turn_probe_free(text)
+    with mock.patch.object(D, "SPELLING_HIT", _NEVER):
+        assert extract_turn_probe_free(text) == want
+        assert T.extract_turn(text) != want
+
+
+# ---------------------------------------------------------------------------
+# T5 candidate dispatch: on ASCII text only tokens with j, oe or ch run.
+# ---------------------------------------------------------------------------
+
+
+def test_spelling_tables_allow_candidate_dispatch():
+    """The conditions ``normalize_spelling`` relies on: a J_TO_Y key holds
+    ``j``, a digraph rule is one of ``?j``, ``oe`` or ``ch``, and no replacement
+    is empty or holds whitespace (each token stays exactly one token)."""
+    assert all("j" in key for key in D.J_TO_Y)
+    for rule, _ in D.SPELLING_RULES:
+        assert re.fullmatch("[a-z]j|oe|ch", rule), rule  # a literal: its own probe
+    for repl in [r for _, r in D.SPELLING_RULES] + list(D.J_TO_Y.values()):
+        assert repl and not any(c.isspace() for c in repl), repl
+
+
+_MW_KEY = sorted(D.MULTI_WORD_MAP)[0]
+_PHRASE_KEY = sorted(D.PHRASE_MAP)[0]
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "djalan,", "(tjara)", "Djalan, (TJARA) njonja.", "x,djalan", "sjarat;chusus",
+        # a rule that fires can make a later one match: dj -> j, then nj
+        "ndjalan", "NDJOEANG",
+        # whole-token lookups: a trailing comma defeats both
+        "project", "project,", "Project,", "PROJECT", "subject: reject!",
+        "jang", "jang,", "Jang,", "JANG", "ja, Ja ja,", "jaitoe,", "Jangan JANGAN",
+        # every ASCII separator str.split() knows
+        "djalan\ttjara\nnjonja\x1csjarat\x1dchusus\x1eoetama\x1fjang",
+        "\x1cjang\x1f", "\x0bdjalan\x0c\r oe ",
+        # non-ASCII text takes the every-token loop
+        "djalan \u017fjarat", "tjinta \u00f1oe", "\u00e9 djalan", "\u017fch",
+        "djalan\u00a0tjara", "oetama\u2003jang\x85ja", "\u0130JANG dj\u0130",
+        # spans from T1, T3 and T4 carried across T5
+        f"{_MW_KEY} djalan", f"djalan {_PHRASE_KEY} tjara", "Rp 5OO,-- djalan",
+        f"{_MW_KEY.upper()}, jang {_PHRASE_KEY}. djalan 4 juni 962",
+        "",
+    ],
+)
+def test_spelling_cases_match_probe_free(text):
+    for use_dict in (False, True):
+        for use_spell in (False, True):
+            kw = {"use_dictionary": use_dict, "use_spelling": use_spell}
+            assert T.extract_turn(text, **kw) == extract_turn_probe_free(text, **kw)
+
+
+def test_spelling_carries_spans_from_earlier_stages():
+    got = T.extract_turn(f"{_MW_KEY} djalan Rp 5OO,-- {_PHRASE_KEY} tjara")
+    kinds = {kind for _, _, kind in got["spans"]}
+    assert {"phrase", "word", "currency", "spelling"} <= kinds
+    for s, e, _ in got["spans"]:
+        assert 0 <= s < e <= len(got["normalized_text"])
+
+
+_T5_FRAGMENTS = (
+    ["djalan", "tjinta", "njonja", "sjarat", "chusus", "oetama", "OE", "Ch", "dj", "x"]
+    + sorted(D.J_TO_Y) + sorted(D.FOREIGN_WORDS)[:8]
+    + [",", "(", ")", ".", "\u017f", "\u0130", "\u00e9"]
+)
+_T5_SEPARATORS = ["", " ", "  ", "\t", "\n", "\x1c", "\x1d", "\x1e", "\x1f", "\u00a0"]
+_t5_texts = st.lists(
+    st.tuples(
+        st.builds(_mutate, st.sampled_from(_T5_FRAGMENTS), st.integers(0, 2**16 - 1)),
+        st.sampled_from(_T5_SEPARATORS),
+    ),
+    max_size=12,
+).map(lambda parts: "".join(f + sep for f, sep in parts))
+
+
+@_parity_settings
+@given(_t5_texts, st.data())
+def test_spelling_matches_token_loop(text, data):
+    """Same text, spans and change count as the every-token loop, whose
+    count is the reference's ``split()`` zip; that count is the number of
+    changed tokens."""
+    bounds = st.integers(0, len(text))
+    spans = [
+        (min(a, b), max(a, b), "x") for a, b in data.draw(st.lists(st.tuples(bounds, bounds)))
+    ]
+    got = T.normalize_spelling(text, spans)
+    assert got == _spelling_all(text, spans)
+    changed = sum(1 for o, n in zip(text.split(), got[0].split()) if o != n)
+    assert got[1] == changed == sum(1 for *_, kind in got[2] if kind == "spelling")
 
 
 # ---------------------------------------------------------------------------

@@ -124,6 +124,17 @@ def test_bins_validation_and_empty(spark):
     assert curriculum_bins(empty, n_bins=4).count() == 0
 
 
+def test_bins_null_value_gets_null_bin(spark):
+    df = spark.createDataFrame(
+        [(0, 10), (1, None), (2, 30), (3, 20), (4, None)], "doc_id int, n_chars int"
+    )
+    got = {r["id"]: r["bin"] for r in curriculum_bins(df, n_bins=2).collect()}
+    # the median of the non-NULL values is 20; a NULL value is not bin 0
+    assert got == {0: 0, 1: None, 2: 1, 3: 0, 4: None}
+    only_null = df.filter("n_chars IS NULL")
+    assert [r["bin"] for r in curriculum_bins(only_null, n_bins=2).collect()] == [None, None]
+
+
 def test_bins_assignment_is_narrow(spark):
     df = spark.createDataFrame(
         [(i, i * 3 % 17) for i in range(40)], ["doc_id", "n_chars"]

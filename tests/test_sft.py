@@ -114,6 +114,17 @@ def test_context_rows_and_rendering(transcripts):
     assert out[("c3", 5)]["context"] == "tool: r2\ntool: r3"
 
 
+def test_context_null_role_is_a_segment(spark):
+    rows = [
+        _turn("n1", 0, "user", "q"),
+        _turn("n1", 1, None, "lost role"),
+        _turn("n1", 2, "assistant", "a"),
+    ]
+    (out,) = assemble_context(spark.createDataFrame(rows, SCHEMA), k=4).collect()
+    assert out["context"] == "user: q\n: lost role"
+    assert out["n_context"] == len(out["context"].split("\n")) == 2
+
+
 def test_context_k_validation(transcripts):
     with pytest.raises(ValueError, match="k must be >= 1"):
         assemble_context(transcripts, k=0)
