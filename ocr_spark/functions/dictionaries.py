@@ -14,8 +14,10 @@ corrections, 277 multi-word corrections, 27 foreign words, 6 spelling rules,
 """
 from __future__ import annotations
 
+import functools
 import json
 import re
+from bisect import bisect_right
 from importlib import resources
 from typing import Callable
 
@@ -52,6 +54,23 @@ def _multiword_pattern(key: str) -> re.Pattern:
     return re.compile(re.escape(key).replace(r"\ ", " ").replace(" ", r"\s+"), re.IGNORECASE)
 
 
+def fold_pattern(pattern: re.Pattern) -> re.Pattern:
+    r"""``pattern`` case-sensitive, with the letters of its source lowered
+    (escape sequences such as ``\S`` kept as they are).
+
+    For a pattern whose literals and classes are ASCII, an IGNORECASE match
+    on a text and a match of this pattern on the text's
+    ``textops._probe_fold`` have the same span and group spans: the fold
+    maps exactly the characters sre folds onto an ASCII letter to that
+    letter, keeps every other character's ``\w``, ``\s`` and ``\d`` class,
+    and maps no character to a different position.
+    """
+    source = re.sub(
+        r"\\.|[A-Z]", lambda m: m[0] if len(m[0]) == 2 else m[0].lower(), pattern.pattern
+    )
+    return re.compile(source, pattern.flags & ~re.IGNORECASE)
+
+
 def trie_pattern(words) -> str:
     """A regex matching exactly the strings in ``words``, factored as a trie.
 
@@ -84,20 +103,27 @@ def trie_pattern(words) -> str:
 class MultiWordRule:
     """One precompiled multi-word correction rule.
 
-    ``probe`` is the longest space-free chunk of the key, lowercased: a rule
-    can only match a string whose ``_probe_fold`` contains that chunk (the
-    pattern's non-whitespace parts are literal and IGNORECASE folds them to
-    what ``_probe_fold`` produces). ``MULTI_WORD_PROBE`` below scans for all
-    probes at once; a rule's own probe is tested only when that scan finds
-    one, and its regex runs only when its probe is present.
+    Two invariants let T1 scan the fold instead of the text, both checked by
+    ``tests/test_fastpath_parity.py``:
+
+    - ``fold_pattern`` (see ``fold_pattern``) finds, case-sensitively in
+      the text's ``textops._probe_fold``, the spans ``pattern`` (the
+      reference's IGNORECASE pattern) finds in the text: every key is
+      ASCII;
+    - a T1 match contains its probe. ``probe`` is the longest space-free
+      chunk of the key, lowercased, and the pattern's non-whitespace parts
+      are the key's literal chunks, so the fold of the matched text holds
+      ``probe``. ``MULTI_WORD_PROBE`` below finds the probes in a fold, and
+      a rule runs only when its probe occurs there.
     """
 
-    __slots__ = ("key", "replacement", "pattern", "probe")
+    __slots__ = ("key", "replacement", "pattern", "fold_pattern", "probe")
 
     def __init__(self, key: str, replacement: str):
         self.key = key
         self.replacement = replacement
         self.pattern = _multiword_pattern(key)
+        self.fold_pattern = fold_pattern(self.pattern)
         self.probe = max(key.lower().split(" "), key=len) if key else ""
 
 
@@ -110,17 +136,58 @@ MULTI_WORD_RULES: list[MultiWordRule] = [
 
 #: Finds a rule probe in a ``_probe_fold`` text: a necessary condition for
 #: any multi-word rule to match, since each rule needs its own probe there.
+#: At each position it matches the longest probe that starts there.
 #: Passes every text if some rule has an empty probe.
 MULTI_WORD_PROBE: re.Pattern = re.compile(trie_pattern({r.probe for r in MULTI_WORD_RULES}))
+
+
+#: the rules of each probe, as indices into ``MULTI_WORD_RULES``
+MULTI_WORD_BY_PROBE: dict[str, list[int]] = {}
+for _i, _rule in enumerate(MULTI_WORD_RULES):
+    MULTI_WORD_BY_PROBE.setdefault(_rule.probe, []).append(_i)
+
+
+def _probe_overlaps(probes: dict[str, list[int]]):
+    # A scan for MULTI_WORD_PROBE matches, at each position it tries, the
+    # longest probe q starting there, and skips the positions q covers. A
+    # probe that starts within q either ends within q (a substring of q:
+    # present wherever q is) or runs past q's end (it starts with a suffix
+    # q[k:] of q: present only if the text goes on as it does).
+    ordered = sorted(probes)
+    within, across = {}, {}
+    for q in probes:
+        inside = {q[a:b] for a in range(len(q)) for b in range(a + 1, len(q) + 1)}
+        within[q] = frozenset(i for p in inside.intersection(probes) for i in probes[p])
+        offsets = []
+        for k in range(1, len(q)):
+            i = bisect_right(ordered, q[k:])
+            if i < len(ordered) and ordered[i].startswith(q[k:]):
+                offsets.append(k)
+        across[q] = tuple(offsets)
+    return within, across
+
+
+#: For each probe ``q`` that ``MULTI_WORD_PROBE`` can match: the rules
+#: whose probe is a substring of ``q`` (``WITHIN``, indices into
+#: ``MULTI_WORD_RULES``: present wherever ``q`` is), and the offsets into
+#: ``q`` at which a longer probe may start (``ACROSS``). A scan for the
+#: probes and a probe match at those offsets of each probe it finds name
+#: every probe in a text: each position the scan skips lies inside a probe
+#: it found.
+MULTI_WORD_WITHIN, MULTI_WORD_ACROSS = _probe_overlaps(MULTI_WORD_BY_PROBE)
+
+#: the longest probe: an edit can make or break a probe occurrence only
+#: within this many characters, less one, on either side
+MULTI_WORD_PROBE_MAX: int = max(map(len, MULTI_WORD_BY_PROBE))
 
 #: Spelling digraph rules, precompiled case-insensitive.
 SPELLING_PATTERNS: list[tuple[re.Pattern, str]] = [
     (re.compile(p, re.IGNORECASE), r) for p, r in SPELLING_RULES
 ]
 
-#: In a lowercased ASCII text, marks a token the spelling stage may change:
-#: every J_TO_Y key contains ``j`` and every digraph rule is ``oe``, ``ch``
-#: or a ``?j``.
+#: In the ``_probe_fold`` of a text, marks a token the spelling stage may
+#: change: every J_TO_Y key contains ``j`` and every digraph rule is ``oe``,
+#: ``ch`` or a ``?j``.
 SPELLING_HIT: re.Pattern = re.compile(r"j|oe|ch")
 
 # ---------------------------------------------------------------------------
@@ -157,7 +224,10 @@ Replacement = str | Callable[[re.Match], str]
 
 
 class CurrencyRule:
-    r"""One currency/number rule and the probe that gates its regex scan.
+    r"""One currency/number rule, the probe that gates it, and the scan that
+    finds where its pattern may match. Both are necessary conditions, so
+    T4 gives the pattern's own matches (checked by
+    ``tests/test_fastpath_parity.py``).
 
     The probe is a necessary condition: it may pass text the pattern does
     not match, but never fails text it does. It tests literals the pattern
@@ -165,17 +235,42 @@ class CurrencyRule:
 
     - ``\d`` in a pattern is Unicode, so ``digit`` comes from a ``\d``
       search, not from ASCII digits;
-    - an IGNORECASE pattern matches every sre case variant of its ASCII
-      letters (the Kelvin sign for k, ſ for s, ı and İ for i), which
-      ``_probe_fold`` maps back to ASCII, so its literals are tested on
-      ``low``;
+    - an IGNORECASE pattern's literals are tested on the fold ``low``,
+      which maps every sre case variant of an ASCII letter (the Kelvin
+      sign for k, ſ for s, ı and İ for i) to that letter;
     - a case-sensitive pattern's literals are tested on ``text`` as is.
+
+    ``scan`` finds where a match of ``pattern`` may start, and is cheap to
+    search for: sre finds its first character or literal prefix at C speed.
+    It runs case-sensitively on the fold for an IGNORECASE rule
+    (``on_fold``) and on the text for a case-sensitive one (``flags=0``).
+    Every match starts ``offset`` characters after a scan hit (at 0 if that
+    is before the text). By default the scan is the pattern (for an
+    IGNORECASE rule its ``fold_pattern``, whose matches on the fold are the
+    pattern's matches on the text, since its literals and classes are
+    ASCII) less a leading ``\b``, which would make sre try a match at
+    every position; ``scan=`` gives a lowercase pattern in its place.
+    ``pattern.match(text, start)`` at each such start then decides, seeing
+    the whole text for ``^``, ``\b`` and lookbehind. No rule matches the
+    empty string.
     """
 
-    __slots__ = ("pattern", "repl", "probe")
+    __slots__ = ("pattern", "scan", "offset", "on_fold", "repl", "probe")
 
-    def __init__(self, pattern: str, repl: Replacement, probe: Probe, flags=re.IGNORECASE):
+    def __init__(
+        self,
+        pattern: str,
+        repl: Replacement,
+        probe: Probe,
+        flags=re.IGNORECASE,
+        scan: str = "",
+        offset: int = 0,
+    ):
         self.pattern = re.compile(pattern, flags)
+        self.on_fold = bool(flags & re.IGNORECASE)
+        lead = fold_pattern(self.pattern) if self.on_fold else self.pattern
+        self.scan = re.compile(scan or lead.pattern.removeprefix(r"\b"), lead.flags)
+        self.offset = offset
         self.repl = repl
         self.probe = probe
 
@@ -185,8 +280,11 @@ MONTH_NAMES = (
     "agustus", "september", "oktober", "november", "desember",
 )
 _MONTHS = "(" + "|".join(MONTH_NAMES) + ")"
+#: the scan of a rule whose matches start with a month name
+_MONTH_SCAN = trie_pattern(MONTH_NAMES)
 
 
+@functools.lru_cache(maxsize=1)  # the month rules probe one fold in turn
 def _has_month(low: str) -> bool:
     return any(m in low for m in MONTH_NAMES)
 
@@ -219,15 +317,24 @@ CURRENCY_RULES: list[CurrencyRule] = [
         r"(^|\s)[.:]+(\d+(?:[.,]\d+)*)(?=\s|$|[-.,])",
         r"\1Rp \2",
         lambda t, low, d: d and ("." in t or ":" in t),
+        # a run of dots before a digit, at the start or after whitespace
+        scan=r"[.:](?<!\S[.:])[.:]*\d",
+        offset=-1,
     ),
     # Year repair, month context: "september 962" -> "september 1962"
-    CurrencyRule(_MONTHS + r"\s*[,.]*\s*([98]\d{2})(?!\d)", r"\1 1\2", _month_year),
+    CurrencyRule(
+        _MONTHS + r"\s*[,.]*\s*([98]\d{2})(?!\d)", r"\1 1\2", _month_year, scan=_MONTH_SCAN
+    ),
     # "97l" -> "1971" (trailing l/I/1 read as the last digit)
-    CurrencyRule(_MONTHS + r"\s*[,.]*\s*([98]\d)[lI1](?!\d)", r"\1 1\g<2>1", _month_year),
+    CurrencyRule(
+        _MONTHS + r"\s*[,.]*\s*([98]\d)[lI1](?!\d)", r"\1 1\g<2>1", _month_year, scan=_MONTH_SCAN
+    ),
     # "ll Maret" -> "11 Maret" (the only month rule that needs no digit)
     CurrencyRule(r"\b([lI]{2})\s+" + _MONTHS, r"11 \2", lambda t, low, d: _has_month(low)),
     # Split year "19 71" -> "1971", month context only
-    CurrencyRule(_MONTHS + r"\s*[,.]*\s*(19|20)\s+(\d{2})(?!\d)", r"\1 \2\3", _month_year),
+    CurrencyRule(
+        _MONTHS + r"\s*[,.]*\s*(19|20)\s+(\d{2})(?!\d)", r"\1 \2\3", _month_year, scan=_MONTH_SCAN
+    ),
     # Specific amount misread
     CurrencyRule(r"25\s*[,.]\s*[zZ]00", r"25.100", lambda t, low, d: "25" in t and "00" in t),
     # Spelled-number repairs
@@ -248,10 +355,20 @@ CURRENCY_RULES: list[CurrencyRule] = [
     CurrencyRule(r"\b[Mm]aineh\b", r"Mainah", lambda t, low, d: "maineh" in low),
     # Lookalike letters in the amount after "Rp " / "Rp." (case-sensitive)
     CurrencyRule(
-        r"(?<=Rp\s)[lOoIzZsS0-9.,]+", fix_digit_lookalikes, lambda t, low, d: "Rp" in t, flags=0
+        r"(?<=Rp\s)[lOoIzZsS0-9.,]+",
+        fix_digit_lookalikes,
+        lambda t, low, d: "Rp" in t,
+        flags=0,
+        scan=r"Rp\s",
+        offset=3,
     ),
     CurrencyRule(
-        r"(?<=Rp\.)[lOoIzZsS0-9.,]+", fix_digit_lookalikes, lambda t, low, d: "Rp." in t, flags=0
+        r"(?<=Rp\.)[lOoIzZsS0-9.,]+",
+        fix_digit_lookalikes,
+        lambda t, low, d: "Rp." in t,
+        flags=0,
+        scan=r"Rp\.",
+        offset=3,
     ),
     # Year-shaped tokens with lookalike letters (case-sensitive)
     CurrencyRule(
@@ -277,17 +394,19 @@ PUNCT_PEEL = re.compile(r"^([^\w]*)([\w\-\']+)([^\w]*)$")
 NUM_THEN_WORD = re.compile(r"^(\d+)([a-zA-Z]{3,})$")
 WORD_THEN_NUM = re.compile(r"^([a-zA-Z]{3,})(\d+)$")
 
-#: fast-path probes for the correction pass, each a necessary condition for
-#: the (non-fuzzy) word-correction loop to change a text. The loop edits a
-#: token only where a digit run is glued to a >=3-letter word
-#: (``DIGIT_GLUE_PROBE``; it needs a Unicode ``\d``, so ``HAS_DIGIT`` is the
+#: the probes of the correction pass, both run on the ``_probe_fold``: the
+#: (non-fuzzy) word-correction loop changes only a token that holds a hit
+#: of one of them. The loop edits a token only where a digit run is glued
+#: to a >=3-letter word (``DIGIT_GLUE_PROBE``; ASCII letters stay letters
+#: in the fold, and it needs a Unicode ``\d``, so ``HAS_DIGIT`` is the
 #: cheaper first test) or where a word it looks up is a phrase-map key
-#: (``PHRASE_KEY_PROBE``, on ``text.lower()``: keys are lowercase). Outside
-#: digit-glued tokens, a looked-up word never ends before a ``[\w\-']``
-#: character and never starts right after a word character; it can start
-#: right after a ``-`` or ``'``, which ``PUNCT_PEEL`` peels off a token's
-#: front as prefix punctuation.
-DIGIT_GLUE_PROBE = re.compile(r"\d[a-zA-Z]{3}|[a-zA-Z]{3}\d")
+#: (``PHRASE_KEY_PROBE``: keys are lowercase ASCII, and a word that
+#: lowercases to one folds to it at the same offsets). Outside digit-glued
+#: tokens, a looked-up word never ends before a ``[\w\-']`` character and
+#: never starts right after a word character; it can start right after a
+#: ``-`` or ``'``, which ``PUNCT_PEEL`` peels off a token's front as prefix
+#: punctuation. A glue hit starts at the digit, so sre tries only the digits.
+DIGIT_GLUE_PROBE = re.compile(r"\d(?:[a-zA-Z]{3}|(?<=[a-zA-Z]{3}\d))")
 PHRASE_KEY_PROBE = re.compile(r"(?<!\w)(?:" + trie_pattern(PHRASE_MAP) + r")(?![\w\-'])")
 #: mid-token symbol splitter (keeps delimiters).
 SYMBOL_SPLIT = re.compile(r"([^\w\-\']+)")

@@ -25,12 +25,50 @@ Reference semantics citations (into /root/reference/):
 from __future__ import annotations
 
 import re
+import sys
 from bisect import bisect_right
 from typing import Optional
 
 from ocr_spark.functions import dictionaries as D
 
 Span = tuple[int, int, str]  # (start, end, kind) — [start, end) char offsets
+
+
+# ---------------------------------------------------------------------------
+# The case fold every rule stage scans in place of IGNORECASE scans.
+# ---------------------------------------------------------------------------
+
+#: (text, fold) for the last ``_probe_fold`` call
+_fold_memo: tuple[str, str] = ("", "")
+
+
+def _probe_fold(s: str) -> str:
+    r"""The case fold every rule stage scans: ``s`` lowercased, except that
+    the letters sre's IGNORECASE matches as an ASCII letter that ``lower()``
+    does not give map to that letter (DOTTED CAPITAL I U+0130 and DOTLESS I
+    U+0131 to i, LONG S U+017F to s; the Kelvin sign lowercases to k).
+
+    It is exact for a pattern whose literals and classes are ASCII. U+0130
+    is the only character whose ``lower()`` is longer than one character,
+    and it is mapped first, so the fold has one character per character of
+    ``s``, each of the same ``\w``, ``\s`` and ``\d`` class; and a
+    character folds to an ASCII letter exactly when IGNORECASE matches it
+    as that letter. So such a pattern's IGNORECASE matches in ``s`` are its
+    ``D.fold_pattern``'s matches in the fold, at the same offsets, and a
+    token of the fold bounds the same characters in ``s``.
+    ``tests/test_fastpath_parity.py`` checks the three properties over every
+    code point.
+
+    The last fold is kept with its string: a stage that leaves its text as
+    it is hands the next stage the same string, whose fold is then not
+    taken again.
+    """
+    global _fold_memo
+    if _fold_memo[0] is s:
+        return _fold_memo[1]
+    fold = s.replace("\u0130", "i").lower().replace("\u017f", "s").replace("\u0131", "i")
+    _fold_memo = (s, fold)
+    return fold
 
 
 # ---------------------------------------------------------------------------
@@ -65,63 +103,100 @@ class PiecewiseMap:
         return new_s if p < old_e else new_e
 
     def remap(self, spans: list[Span]) -> list[Span]:
+        """``map`` both ends of each span, dropping spans that map empty.
+        An offset up to the first rewritten segment keeps its value and
+        one from the end of the last shifts by the change in length, so
+        only offsets between them are looked up."""
+        changed = [seg for seg in self.segs if seg[4]]
+        if changed:
+            lo, hi = changed[0][0], changed[-1][1]
+            shift = self.segs[-1][3] - self.segs[-1][1]
+        else:
+            lo = hi = sys.maxsize
+            shift = 0
         out = []
         for s, e, kind in spans:
-            ns, ne = self.map(s), self.map(e)
+            ns = s if s <= lo else s + shift if s >= hi else self.map(s)
+            ne = e if e <= lo else e + shift if e >= hi else self.map(e)
             if ns < ne:
                 out.append((ns, ne, kind))
         return out
 
 
-def _sub_tracked(
-    pattern: re.Pattern,
-    repl,
-    text: str,
-    spans: list[Span],
-    kind: Optional[str] = None,
-) -> tuple[str, list[Span], bool]:
-    """``pattern.sub(repl, text)`` that also remaps ``spans`` into the result
-    and (when ``kind`` is given) records a new span per effective edit.
-
-    ``repl`` is a template string (``Match.expand``) or a callable.
-    Returns (new_text, new_spans, changed). Zero-match inputs return the
-    originals untouched (one C-speed scan, same cost as ``re.sub``).
-    """
-    matches = list(pattern.finditer(text))
-    if not matches:
-        return text, spans, False
-
-    pieces: list[str] = []
-    pmap = PiecewiseMap()
-    new_spans: list[Span] = []
-    pos = 0
-    out = 0
-    changed = False
+def _edits(text: str, matches, repl, kind: str) -> list:
+    """The edits ``_splice`` takes for each of ``matches`` (their spans
+    offsets into ``text``) whose replacement differs from what it matched:
+    (start, end, replacement, [a ``kind`` span over the replacement, unless
+    it is empty]). ``repl`` is a template string (``Match.expand``) or a
+    callable taking the match."""
+    edits = []
     for m in matches:
         s, e = m.span()
+        rep = repl(m) if callable(repl) else m.expand(repl)
+        if rep != text[s:e]:
+            edits.append((s, e, rep, [(0, len(rep), kind)] if rep else []))
+    return edits
+
+
+def _splice(text: str, edits: list, spans: list[Span]):
+    """Apply ``edits``, ascending and disjoint (start, end, replacement,
+    spans relative to the replacement), to ``text``.
+
+    Returns (new_text, ``spans`` remapped into it + the edits' spans). Only
+    the edits and the unchanged text between them enter the offset map; one
+    unchanged segment maps every offset as the per-token or per-match
+    segments it stands for would.
+    """
+    pmap = PiecewiseMap() if spans else None
+    pieces: list[str] = []
+    new_spans: list[Span] = []
+    pos = 0  # end of the last edit, in text
+    out = 0  # the same position in the result
+    for s, e, rep, rep_spans in edits:
         if s > pos:
             pieces.append(text[pos:s])
-            pmap.add(pos, s, out, out + (s - pos), False)
+            if pmap is not None:
+                pmap.add(pos, s, out, out + (s - pos), False)
             out += s - pos
-        rep = repl(m) if callable(repl) else m.expand(repl)
-        original = text[s:e]
         pieces.append(rep)
-        if rep != original:
-            changed = True
+        if pmap is not None:
             pmap.add(s, e, out, out + len(rep), True)
-            if kind is not None and rep:  # deletions have no output extent
-                new_spans.append((out, out + len(rep), kind))
-        else:
-            pmap.add(s, e, out, out + len(rep), False)
+        for a, b, kind in rep_spans:
+            new_spans.append((out + a, out + b, kind))
         out += len(rep)
         pos = e
-    if pos < len(text):
-        pieces.append(text[pos:])
+    if pmap is None:
+        spans = new_spans
+    else:
         pmap.add(pos, len(text), out, out + (len(text) - pos), False)
+        spans = pmap.remap(spans) + new_spans
+    if not pieces:
+        return text, spans
+    pieces.append(text[pos:])
+    return "".join(pieces), spans
 
-    if not changed:
-        return text, spans, False
-    return "".join(pieces), pmap.remap(spans) + new_spans, True
+
+#: whitespace other than the space character; the rest of a token
+_SPACE_NOT_BLANK = re.compile(r"[^\S ]")
+_TOKEN_REST = re.compile(r"\S*")
+
+
+def _hit_tokens(fold: str, hit: re.Pattern):
+    """(start, end) of each whitespace-delimited token of ``fold`` in which
+    a match of ``hit`` starts, in order: one C-speed search for a hit, a
+    token boundary search around it, and the next search from the token's
+    end."""
+    pos = 0
+    while pos <= len(fold) and (m := hit.search(fold, pos)) is not None:
+        at = m.start()
+        start = max(fold.rfind(" ", pos, at) + 1, pos)
+        while (ws := _SPACE_NOT_BLANK.search(fold, start, at)) is not None:
+            start = ws.end()
+        pos = _TOKEN_REST.match(fold, at).end()
+        if pos == at:  # a hit at whitespace starts in no token
+            pos += 1
+        else:
+            yield start, pos
 
 
 # ---------------------------------------------------------------------------
@@ -137,56 +212,65 @@ def _preserve_case_phrase(matched: str, replacement: str) -> str:
     return replacement
 
 
-#: re.IGNORECASE folds by CPython sre's equivalence table, which pairs
-#: these non-ASCII letters with ASCII ones that str.lower() does NOT
-#: produce (LONG S U+017F ↔ s, DOTLESS I U+0131 ↔ i). The Kelvin sign
-#: U+212A already lowercases to k; DOTTED CAPITAL I U+0130 lowercases to
-#: i + COMBINING DOT ABOVE U+0307, collapsed to i below.
-_SRE_EXTRA_FOLDS = str.maketrans({"ſ": "s", "ı": "i"})
-
-
-def _probe_fold(s: str) -> str:
-    """Lowercase plus the sre equivalence folds: a haystack in which every
-    ASCII literal an IGNORECASE rule matches in ``s`` occurs as a substring.
-    A necessary condition only — the folds may also join substrings the
-    rule would not match (a real i + U+0307 collapses to i too). ASCII
-    text, the hot path, returns after one lower() and an O(1) check."""
-    low = s.lower()
-    if low.isascii():
-        return low
-    if "ſ" in low or "ı" in low:
-        low = low.translate(_SRE_EXTRA_FOLDS)
-    if "\u0307" in low:
-        low = low.replace("i\u0307", "i")
-    return low
+def _multiword_candidates(fold: str, start: int = 0, end: Optional[int] = None) -> set[int]:
+    """Indices into ``D.MULTI_WORD_RULES`` of the rules whose probe occurs
+    within ``fold[start:end]``: one scan for the probes, and a probe match
+    at each offset into a found probe where another may start and run past
+    its end (``D.MULTI_WORD_ACROSS``)."""
+    end = len(fold) if end is None else end
+    probe = D.MULTI_WORD_PROBE
+    found = set()
+    for m in probe.finditer(fold, start, end):
+        found.add(m.group())
+        for k in D.MULTI_WORD_ACROSS[m.group()]:
+            if (n := probe.match(fold, m.start() + k, end)) is not None:
+                found.add(n.group())
+    return set().union(*[D.MULTI_WORD_WITHIN[q] for q in found])
 
 
 def apply_multiword(text: str, spans: Optional[list[Span]] = None) -> tuple[str, list[Span]]:
     """Apply the 277 multi-word rules longest-key-first, sequentially on the
     mutated string (chained corrections compound), case-insensitively with
-    case-style-preserving replacement. 9 keys delete garbage (map to "")."""
+    case-style-preserving replacement. 9 keys delete garbage (map to "").
+
+    A rule can only match where the fold holds its probe, so only the rules
+    one probe scan of the fold names run, in rule order, each scanning the
+    fold with its ``fold_pattern``. After a rule fires, the fold is taken
+    again and the probes are looked for only within
+    ``D.MULTI_WORD_PROBE_MAX - 1`` characters of its edits: anywhere else a
+    probe occurrence was there before, and its rules are already named.
+    """
     spans = spans if spans is not None else []
-    # one scan for every rule's probe: if none occurs, no rule can match
-    lower = _probe_fold(text)
-    if D.MULTI_WORD_PROBE.search(lower) is None:
+    fold = _probe_fold(text)
+    # most clean text holds no probe: one search, which stops at the first
+    if D.MULTI_WORD_PROBE.search(fold) is None:
         return text, spans
-    result = text
-    for rule in D.MULTI_WORD_RULES:
-        if lower is None:
-            lower = _probe_fold(result)
-        # cheap necessary-condition probe before the regex scan
-        if rule.probe and rule.probe not in lower:
-            continue
-        result, spans, fired = _sub_tracked(
-            rule.pattern,
-            lambda m, _r=rule.replacement: _preserve_case_phrase(m.group(0), _r),
-            result,
-            spans,
-            kind="phrase",
-        )
-        if fired:
-            lower = None
-    return result, spans
+    todo = sorted(_multiword_candidates(fold))
+    reach = D.MULTI_WORD_PROBE_MAX - 1
+    k = 0
+    while k < len(todo):
+        i = todo[k]
+        k += 1
+        rule = D.MULTI_WORD_RULES[i]
+
+        def repl(m: re.Match, _text=text, _to=rule.replacement) -> str:
+            return _preserve_case_phrase(_text[m.start() : m.end()], _to)
+
+        edits = _edits(text, rule.fold_pattern.finditer(fold), repl, "phrase")
+        if edits:
+            text, spans = _splice(text, edits, spans)
+            fold = _probe_fold(text)
+            new = set()
+            shift = 0  # where the text after an edit has moved to
+            for s, e, rep, _ in edits:
+                at = s + shift
+                new |= _multiword_candidates(fold, max(0, at - reach), at + len(rep) + reach)
+                shift += len(rep) - (e - s)
+            new = {j for j in new if j > i}.difference(todo[k:])
+            if new:
+                todo = sorted(new.union(todo[k:]))
+                k = 0
+    return text, spans
 
 
 # ---------------------------------------------------------------------------
@@ -318,131 +402,118 @@ def correct_word(
 # T2+T3+T6: tokenize, correct, count, emit spans.
 # ---------------------------------------------------------------------------
 
+def _correct_token(
+    token: str, fuzzy: bool, extra_kamus: Optional[frozenset]
+) -> tuple[str, list[Span]]:
+    """One whitespace-delimited token through word correction: split glued
+    digits+word / word+digits (>=3-letter word part), else peel punctuation
+    around the word core, else fall back to a symbol-preserving sub-split.
+    Returns (result, ``word`` spans relative to the result), one span per
+    corrected word."""
+    m = D.NUM_THEN_WORD.match(token)
+    if m:
+        num, word = m.groups()
+        head, tail = num + " ", ""
+    elif m := D.WORD_THEN_NUM.match(token):
+        word, num = m.groups()
+        head, tail = "", " " + num
+    elif m := D.PUNCT_PEEL.match(token):
+        head, word, tail = m.groups()
+    if m:
+        fixed = correct_word(word, fuzzy, extra_kamus)
+        if fixed == word:
+            return head + fixed + tail, []
+        return head + fixed + tail, [(len(head), len(head) + len(fixed), "word")]
+    # mid-token symbols (e.g. "Dopartoron/wta"): split, correct the word
+    # sub-tokens, keep delimiters verbatim
+    pieces: list[str] = []
+    spans: list[Span] = []
+    at = 0
+    for sub in D.SYMBOL_SPLIT.split(token):
+        if D.WORD_CORE.match(sub):
+            fixed = correct_word(sub, fuzzy, extra_kamus)
+            if fixed != sub:
+                spans.append((at, at + len(fixed), "word"))
+            sub = fixed
+        pieces.append(sub)
+        at += len(sub)
+    return "".join(pieces), spans
+
+
 def correct_with_stats(
     text: str, fuzzy: bool = False, extra_kamus: Optional[frozenset] = None
 ) -> tuple[str, int, list[Span]]:
     """Full dictionary-correction pass over one turn's text.
 
-    Lossless token/whitespace split; per word token: split glued
-    digits+word / word+digits (>=3-letter word part), else peel punctuation
-    around the word core, else fall back to a symbol-preserving sub-split.
-    Every changed word increments the correction count and yields a
-    ``word`` span in output coordinates. Multi-word rules run first.
+    Multi-word rules run first. Then each whitespace-delimited token goes
+    through ``_correct_token``; every changed word increments the
+    correction count and yields a ``word`` span in output coordinates.
+
+    Without fuzzy matching a token can change only where it holds a hit of
+    ``D.PHRASE_KEY_PROBE`` (on the fold) or ``D.DIGIT_GLUE_PROBE`` (see
+    there), so only the tokens around those hits run; every other token
+    would come back as it is. Fuzzy matching can touch any unknown word, so
+    then every token runs.
     """
     if not text:
         return text, 0, []
 
     text, mw_spans = apply_multiword(text)
-
-    # fast identity path: when neither correction probe (see
-    # D.PHRASE_KEY_PROBE) fires, the token loop below provably reproduces
-    # the input verbatim with zero corrections (the tokenizer is lossless
-    # and every mutation site needs a digit-glued run or a phrase-map key
-    # word). Fuzzy mode can touch any unknown word, so it never takes the
-    # shortcut.
-    if (
-        not fuzzy
-        and (D.HAS_DIGIT.search(text) is None or D.DIGIT_GLUE_PROBE.search(text) is None)
-        and D.PHRASE_KEY_PROBE.search(text.lower()) is None
-    ):
-        return text, 0, mw_spans
-
-    pieces: list[str] = []
-    spans: list[Span] = []
-    # the offset map exists only to carry multiword spans across the token
-    # rebuild; with none to carry (the common case) its bookkeeping is waste
-    track = bool(mw_spans)
-    pmap = PiecewiseMap() if track else None
-    corrections = 0
-    old = 0
-    out = 0
-
-    if track:
-        def emit(old_len: int, piece: str, changed: bool) -> None:
-            nonlocal old, out
-            pieces.append(piece)
-            pmap.add(old, old + old_len, out, out + len(piece), changed)
-            old += old_len
-            out += len(piece)
+    if fuzzy:
+        tokens = map(re.Match.span, D.TOKEN.finditer(text))
     else:
-        def emit(old_len: int, piece: str, changed: bool) -> None:
-            nonlocal out
-            pieces.append(piece)
-            out += len(piece)
-
-    for token in D.TOKEN_SPLIT.findall(text):
-        if not token.strip():
-            emit(len(token), token, False)
-            continue
-        m = D.NUM_THEN_WORD.match(token)
-        if m:
-            num, word = m.groups()
-            fixed = correct_word(word, fuzzy, extra_kamus)
-            if fixed != word:
-                corrections += 1
-                spans.append((out + len(num) + 1, out + len(num) + 1 + len(fixed), "word"))
-            emit(len(token), num + " " + fixed, True)
-            continue
-        m = D.WORD_THEN_NUM.match(token)
-        if m:
-            word, num = m.groups()
-            fixed = correct_word(word, fuzzy, extra_kamus)
-            if fixed != word:
-                corrections += 1
-                spans.append((out, out + len(fixed), "word"))
-            emit(len(token), fixed + " " + num, True)
-            continue
-        m = D.PUNCT_PEEL.match(token)
-        if m:
-            prefix, word, suffix = m.groups()
-            fixed = correct_word(word, fuzzy, extra_kamus)
-            if fixed != word:
-                corrections += 1
-                spans.append((out + len(prefix), out + len(prefix) + len(fixed), "word"))
-            emit(len(token), prefix + fixed + suffix, fixed != word)
-            continue
-        # mid-token symbols (e.g. "Dopartoron/wta"): split, correct the word
-        # sub-tokens, keep delimiters verbatim
-        rebuilt: list[str] = []
-        sub_out = out
-        token_changed = False
-        for sub in D.SYMBOL_SPLIT.split(token):
-            if not sub:
-                continue
-            if D.WORD_CORE.match(sub):
-                fixed = correct_word(sub, fuzzy, extra_kamus)
-                if fixed != sub:
-                    corrections += 1
-                    token_changed = True
-                    spans.append((sub_out, sub_out + len(fixed), "word"))
-                rebuilt.append(fixed)
-                sub_out += len(fixed)
-            else:
-                rebuilt.append(sub)
-                sub_out += len(sub)
-        emit(len(token), "".join(rebuilt), token_changed)
-
-    if track:
-        return "".join(pieces), corrections, pmap.remap(mw_spans) + spans
-    return "".join(pieces), corrections, spans
+        fold = _probe_fold(text)
+        tokens = _hit_tokens(fold, D.PHRASE_KEY_PROBE)
+        if D.HAS_DIGIT.search(text) is not None:
+            tokens = sorted({*tokens, *_hit_tokens(fold, D.DIGIT_GLUE_PROBE)})
+    edits = []
+    corrections = 0
+    for s, e in tokens:
+        token = text[s:e]
+        fixed, word_spans = _correct_token(token, fuzzy, extra_kamus)
+        if fixed != token:
+            edits.append((s, e, fixed, word_spans))
+            corrections += len(word_spans)
+    if not edits:
+        return text, 0, mw_spans
+    text, spans = _splice(text, edits, mw_spans)
+    return text, corrections, spans
 
 
 # ---------------------------------------------------------------------------
 # T4: currency / number normalization.
 # ---------------------------------------------------------------------------
 
+def _scan_matches(rule: D.CurrencyRule, text: str, haystack: str):
+    """``rule.pattern.finditer(text)``, tried only ``rule.offset`` after
+    where ``rule.scan`` hits ``haystack`` (the text or its fold): every
+    match starts there, so no other position can start one."""
+    pos = 0
+    while (hit := rule.scan.search(haystack, pos)) is not None:
+        m = rule.pattern.match(text, max(hit.start() + rule.offset, 0))
+        if m is None:
+            pos = hit.start() + 1
+        else:
+            yield m
+            # the next match starts at or after this one's end
+            pos = max(hit.start() + 1, m.end() - rule.offset)
+
+
 def normalize_currency(
     text: str, spans: Optional[list[Span]] = None
 ) -> tuple[str, list[Span]]:
-    """Ordered currency/number repairs: Rp-format canonicalization, orphan
+    r"""Ordered currency/number repairs: Rp-format canonicalization, orphan
     amounts, month-context year repair, digit-lookalike translation after
     ``Rp``, year-token lookalike fixes. Spans of kind ``currency`` are added
-    per effective edit; incoming spans are offset-remapped."""
+    per effective edit; incoming spans are offset-remapped.
+
+    A rule runs only when its probe passes, and then only where its scan
+    hits (see ``D.CurrencyRule`` and ``_scan_matches``). The fold and the
+    probes' inputs change only when a rule fires.
+    """
     if not text:
         return text, spans or []
     spans = spans if spans is not None else []
-    # each rule's regex scan runs only when its probe passes (see
-    # D.CurrencyRule); the probe haystacks change only when a rule fires
     low = None
     for rule in D.CURRENCY_RULES:
         if low is None:
@@ -450,8 +521,10 @@ def normalize_currency(
             digit = D.HAS_DIGIT.search(text) is not None
         if not rule.probe(text, low, digit):
             continue
-        text, spans, fired = _sub_tracked(rule.pattern, rule.repl, text, spans, kind="currency")
-        if fired:
+        matches = _scan_matches(rule, text, low if rule.on_fold else text)
+        edits = _edits(text, matches, rule.repl, "currency")
+        if edits:
+            text, spans = _splice(text, edits, spans)
             low = None
     return text, spans
 
@@ -468,11 +541,12 @@ def _preserve_case_single(matched: str, replacement: str) -> str:
     return replacement
 
 
-def normalize_token_spelling(token: str) -> str:
+def normalize_token_spelling(token: str, fold: Optional[str] = None) -> str:
     """Modernize one whitespace-delimited token: whole-token foreign-word
     whitelist and j->y map first (both compare the full token, punctuation
     included — a trailing comma defeats them, matching the reference), then
-    the 6 digraph rules in order with case-preserving replacement."""
+    the 6 digraph rules in order with case-preserving replacement. ``fold``
+    is the token's ``_probe_fold``, when the caller has it."""
     lower = token.lower()
     if lower in D.FOREIGN_WORDS:
         return token
@@ -485,34 +559,17 @@ def normalize_token_spelling(token: str) -> str:
     # condition, refreshed after a rule fires (``dj`` -> ``j`` can make an
     # ``nj``). Probing the plain-lowered token is NOT exact (the sre
     # equivalence folds — see _probe_fold; 'ſj' must probe as 'sj')
-    probe = _probe_fold(token)
+    probe = _probe_fold(token) if fold is None else fold
     out = token
     for (digraph, repl), (pattern, _) in zip(D.SPELLING_RULES, D.SPELLING_PATTERNS):
         if digraph in probe:
             fixed = pattern.sub(lambda m, _r=repl: _preserve_case_single(m.group(0), _r), out)
             if fixed != out:
                 out = fixed
-                probe = _probe_fold(out)
+                # the fold of ``out``: the rule replaced each ``digraph`` of
+                # the fold with a case variant of the lowercase ``repl``
+                probe = probe.replace(digraph, repl)
     return out
-
-
-#: whitespace other than the space character; the rest of a token
-_SPACE_NOT_BLANK = re.compile(r"[^\S ]")
-_TOKEN_REST = re.compile(r"\S*")
-
-
-def _spelling_candidates(low: str):
-    """(start, end) of each token of the lowercased ASCII text ``low`` that
-    holds a ``D.SPELLING_HIT``: one C-speed scan for the hits, and a token
-    boundary search around each."""
-    pos = 0
-    while (m := D.SPELLING_HIT.search(low, pos)) is not None:
-        hit = m.start()
-        start = max(low.rfind(" ", pos, hit) + 1, pos)
-        while (ws := _SPACE_NOT_BLANK.search(low, start, hit)) is not None:
-            start = ws.end()
-        pos = _TOKEN_REST.match(low, hit).end()
-        yield start, pos
 
 
 def normalize_spelling(
@@ -522,15 +579,14 @@ def normalize_spelling(
     every whitespace-delimited token, with a ``spelling`` span per changed
     token and incoming spans remapped.
 
-    Only a token whose lowercase form contains ``j``, ``oe`` or ``ch`` can
-    change: every ``J_TO_Y`` key contains ``j``, every digraph rule needs
-    ``oe``, ``dj``, ``tj``, ``nj``, ``sj`` or ``ch``, and a
-    ``FOREIGN_WORDS`` hit is returned unchanged. For ASCII text one scan of
-    ``text.lower()`` finds those tokens (``_spelling_candidates``), and only
-    they run. Other text runs every token: its lowercase form need not line
-    up with it (``İ`` lowercases to two characters). Unchanged text between
-    changed tokens is one offset-map segment, which maps every offset as
-    the per-token segments it stands for would.
+    Only a token whose fold contains ``j``, ``oe`` or ``ch`` can change:
+    every ``J_TO_Y`` key contains ``j``, every digraph rule needs ``oe``,
+    ``dj``, ``tj``, ``nj``, ``sj`` or ``ch`` in the token's fold, and a
+    ``FOREIGN_WORDS`` hit is returned unchanged. One scan of the text's fold
+    for ``D.SPELLING_HIT`` finds those tokens, at the same offsets and with
+    the same bounds as in the text, and only they run. The changed tokens
+    are spliced here as ``_splice`` would splice them, without an edit
+    tuple per token: on clean text, where changes are dense, those cost.
 
     The change count is the number of changed tokens. The reference counts
     the differing pairs of ``text.split()`` zipped positionally against the
@@ -540,18 +596,15 @@ def normalize_spelling(
     """
     if not text:
         return text, 0, spans or []
-    if text.isascii():
-        tokens = _spelling_candidates(text.lower())
-    else:
-        tokens = (m.span() for m in D.TOKEN.finditer(text))
+    fold = _probe_fold(text)
     pmap = PiecewiseMap() if spans else None
     pieces: list[str] = []
     new_spans: list[Span] = []
     pos = 0  # end of the last changed token, in text
     out = 0  # the same position in the result
-    for s, e in tokens:
+    for s, e in _hit_tokens(fold, D.SPELLING_HIT):
         token = text[s:e]
-        fixed = normalize_token_spelling(token)
+        fixed = normalize_token_spelling(token, fold[s:e])
         if fixed == token:
             continue
         if s > pos:
@@ -565,14 +618,15 @@ def normalize_spelling(
             pmap.add(s, e, out, out + len(fixed), True)
         out += len(fixed)
         pos = e
-    if pos < len(text):
-        pieces.append(text[pos:])
-        if pmap is not None:
-            pmap.add(pos, len(text), out, out + (len(text) - pos), False)
-    normalized = "".join(pieces)
     if pmap is not None:
-        return normalized, len(new_spans), pmap.remap(spans) + new_spans
-    return normalized, len(new_spans), new_spans
+        pmap.add(pos, len(text), out, out + (len(text) - pos), False)
+        spans = pmap.remap(spans) + new_spans
+    else:
+        spans = new_spans
+    if not pieces:
+        return text, 0, spans
+    pieces.append(text[pos:])
+    return "".join(pieces), len(new_spans), spans
 
 
 # ---------------------------------------------------------------------------

@@ -11,8 +11,15 @@ one-line JSON job summary (the _SUMMARY.json content) on success.
 from __future__ import annotations
 
 import argparse
+import importlib.util
 import json
+import os
 import sys
+
+if __name__ == "__main__" and importlib.util.find_spec("ocr_spark") is None:
+    # run as a script, sys.path[0] is this file's directory, not the
+    # checkout's root that holds the package
+    sys.path.insert(1, os.path.abspath(os.path.join(os.path.dirname(__file__), "..", "..")))
 
 
 def main(argv=None) -> int:

@@ -7,6 +7,11 @@ don't blow executor-python memory, and a shuffle-partition count that the
 caller scales with cluster size. Python workers start from
 ``ocr_spark._daemon``, which imports pyspark from site-packages when it is
 the JVM's version.
+
+A local session is sized to the machine it starts on: one task slot per CPU
+this process may run on, and a driver heap of a third of the memory it can
+see, at most 8 GB, so that two sessions fit beside each other.
+``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY`` override the two.
 """
 from __future__ import annotations
 
@@ -17,7 +22,42 @@ from pyspark.sql import SparkSession
 
 from ocr_spark._daemon import VERSION_ENV
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def visible_memory_bytes() -> int | None:
+    """The memory this process can use: the cgroup (v2) ``memory.max``
+    limit or the machine's ``MemTotal``, whichever is smaller; None when
+    neither can be read."""
+    sizes = []
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+        if limit != "max":
+            sizes.append(int(limit))
+    except (OSError, ValueError):
+        pass
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    sizes.append(int(line.split()[1]) * 1024)
+                    break
+    except (OSError, ValueError):
+        pass
+    return min(sizes) if sizes else None
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else a third of the visible memory,
+    between 1 GB and 8 GB (8 GB when the memory cannot be read)."""
+    explicit = os.environ.get("SPARK_DRIVER_MEMORY")
+    if explicit:
+        return explicit
+    total = visible_memory_bytes()
+    if total is None:
+        return "8g"
+    return f"{min(max(total // 3 >> 20, 1024), 8192)}m"
 
 
 def get_spark(
@@ -27,6 +67,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = DEFAULT_CPUS
+    heap = default_driver_memory()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -70,7 +111,7 @@ def get_spark(
         # comparably under either codec.
         .set("spark.sql.parquet.compression.codec",
              os.environ.get("SPARK_PARQUET_CODEC", "lz4"))
-        .set("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .set("spark.driver.memory", heap)
         # pre-commit and pre-touch the heap: the first big-shuffle stage
         # otherwise pays the heap-growth tax — threads stall off-CPU in
         # allocation/page faults while the JVM grows from its initial
@@ -82,8 +123,7 @@ def get_spark(
         # this function runs — set the same flags on the submit command.
         .set(
             "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_DRIVER_MEMORY", "8g")
-            + " -XX:+AlwaysPreTouch",
+            "-Xms" + heap + " -XX:+AlwaysPreTouch",
         )
         .set("spark.ui.enabled", "false")
     )

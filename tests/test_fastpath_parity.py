@@ -1,12 +1,14 @@
 """Reference-free parity for the extraction core's fast paths.
 
-Every probe in ``ocr_spark.functions.textops`` (the T1 multi-word gate and
-rule probes, the T3 identity shortcut, the T4 per-rule currency probes, the T5
-candidate-token scan and digraph probe, and the ``_probe_fold`` haystack they
-share) only decides whether a regex scan may be skipped. ``extract_turn_probe_free`` below runs
-the same pipeline with every rule applied and no probe, so any probe that
-is not a true necessary condition shows up as a difference — without the
-reference implementation.
+Every probe in ``ocr_spark.functions.textops`` (the T1 probe scan and the
+rules it names, the T3 candidate tokens, the T4 per-rule currency probes,
+the T5 candidate-token scan and digraph probe) only decides where a rule may
+run, and every rule stage scans the ``_probe_fold`` of its text with
+case-sensitive ``fold_pattern``s in place of IGNORECASE scans of the text.
+``extract_turn_probe_free`` below runs the same pipeline with every rule
+applied to the text itself, every token corrected and no probe, so any probe
+that is not a true necessary condition, and any place where the fold is not
+exact, shows up as a difference — without the reference implementation.
 """
 from __future__ import annotations
 
@@ -28,20 +30,21 @@ from ocr_spark.functions import textops as T
 def _multiword_all(text, spans=None):
     spans = spans if spans is not None else []
     for rule in D.MULTI_WORD_RULES:
-        text, spans, _ = T._sub_tracked(
-            rule.pattern,
-            lambda m, _r=rule.replacement: T._preserve_case_phrase(m.group(0), _r),
+        edits = T._edits(
             text,
-            spans,
-            kind="phrase",
+            rule.pattern.finditer(text),
+            lambda m, _r=rule.replacement: T._preserve_case_phrase(m.group(0), _r),
+            "phrase",
         )
+        text, spans = T._splice(text, edits, spans)
     return text, spans
 
 
 def _currency_all(text, spans=None):
     spans = spans if spans is not None else []
     for rule in D.CURRENCY_RULES:
-        text, spans, _ = T._sub_tracked(rule.pattern, rule.repl, text, spans, kind="currency")
+        edits = T._edits(text, rule.pattern.finditer(text), rule.repl, "currency")
+        text, spans = T._splice(text, edits, spans)
     return text, spans
 
 
@@ -79,18 +82,38 @@ def _spelling_all(text, spans=None):
     return normalized, changes, pmap.remap(spans or []) + new_spans
 
 
-#: matches every text, so the T3 identity shortcut is never taken
-_ALWAYS = re.compile("")
+def _correct_all(text, fuzzy=False, extra_kamus=None):
+    """T1, then T3 token by token: every token and whitespace run through
+    the word correction, one offset-map segment each."""
+    if not text:
+        return text, 0, []
+    text, mw_spans = _multiword_all(text)
+    pmap = T.PiecewiseMap()
+    pieces, spans = [], []
+    corrections = old = out = 0
+    for token in D.TOKEN_SPLIT.findall(text):
+        if token.strip():
+            fixed, token_spans = T._correct_token(token, fuzzy, extra_kamus)
+        else:
+            fixed, token_spans = token, []
+        corrections += len(token_spans)
+        spans += [(out + a, out + b, kind) for a, b, kind in token_spans]
+        pmap.add(old, old + len(token), out, out + len(fixed), fixed != token)
+        pieces.append(fixed)
+        old += len(token)
+        out += len(fixed)
+    return "".join(pieces), corrections, pmap.remap(mw_spans) + spans
 
 
 def extract_turn_probe_free(text, **kwargs):
-    """``extract_turn`` with T1, T3, T4 and T5 applying every rule."""
+    """``extract_turn`` with T1, T3, T4 and T5 applying every rule to every
+    token, with no probe and no fold."""
     with mock.patch.multiple(
         T,
-        apply_multiword=_multiword_all,
+        correct_with_stats=_correct_all,
         normalize_currency=_currency_all,
         normalize_spelling=_spelling_all,
-    ), mock.patch.object(D, "PHRASE_KEY_PROBE", _ALWAYS):
+    ):
         return T.extract_turn(text, **kwargs)
 
 
@@ -110,6 +133,9 @@ _FRAGMENTS = (
     # phrase keys behind punctuation that PUNCT_PEEL peels off a token's front
     + [p + k for p in ("-", "'", "(-", "\"'") for k in ("departntn", *sorted(D.PHRASE_MAP)[:3])]
     + ["\u0130", "\u0131", "\u017f", "\u212a", "\u0307", "\t", "\n", " ", "  ", "x"]
+    # real OCR mojibake and other non-ASCII text
+    + ["\u00e2\u20ac", "\u00e2\u20ac\u0153", "\u201c", "\u00e2\u20ac\u02dci", "\u00c3\u00a9"]
+    + ["\u00fcn\u00efcode \u2713", "\u2014", "\u00a0", "\u2003", "\u03a3\u0391\u03a3", "\u00e9"]
 )
 
 #: characters an IGNORECASE rule matches as an ASCII letter
@@ -152,13 +178,16 @@ def test_extract_turn_matches_probe_free(text, use_dict, use_spell):
 @_parity_settings
 @given(_dense_texts)
 def test_probes_are_necessary_conditions(text):
-    """Per rule: wherever the pattern matches, its probe passes; the trie
-    gates agree with the probes they stand for."""
+    """Per rule: wherever the pattern matches, its probe passes; the T1
+    probe scan names exactly the rules whose probe occurs; the trie gates
+    agree with the probes they stand for."""
     low = T._probe_fold(text)
     digit = D.HAS_DIGIT.search(text) is not None
     for rule in D.CURRENCY_RULES:
         if rule.pattern.search(text):
             assert rule.probe(text, low, digit), rule.pattern.pattern
+    named = T._multiword_candidates(low)
+    assert named == {i for i, rule in enumerate(D.MULTI_WORD_RULES) if rule.probe in low}
     for rule in D.MULTI_WORD_RULES:
         if rule.pattern.search(text):
             assert rule.probe in low, rule.key
@@ -331,6 +360,35 @@ def test_spelling_matches_token_loop(text, data):
     assert got[1] == changed == sum(1 for *_, kind in got[2] if kind == "spelling")
 
 
+def test_hit_tokens_are_whole_tokens():
+    text = "ab  cd\tef\n\x1cgh ij"
+    tokens = [m.span() for m in D.TOKEN.finditer(text)]
+    assert list(T._hit_tokens(text, re.compile(""))) == tokens
+    assert list(T._hit_tokens(text, re.compile(r"\s"))) == []
+    assert list(T._hit_tokens(text, re.compile("d|e|f|h"))) == [(4, 6), (7, 9), (11, 13)]
+
+
+_segments = st.lists(st.tuples(st.integers(1, 5), st.integers(0, 5), st.booleans()), max_size=8)
+
+
+@_parity_settings
+@given(_segments, st.data())
+def test_remap_maps_each_offset(segments, data):
+    """``remap``'s shortcuts before the first and after the last rewritten
+    segment give what ``map`` gives."""
+    pmap = T.PiecewiseMap()
+    old = new = 0
+    for old_len, new_len, changed in segments:
+        new_len = new_len if changed else old_len
+        pmap.add(old, old + old_len, new, new + new_len, changed)
+        old, new = old + old_len, new + new_len
+    bounds = st.integers(0, old)
+    ends = data.draw(st.lists(st.tuples(bounds, bounds)))
+    spans = [(min(a, b), max(a, b), "x") for a, b in ends]
+    want = [(pmap.map(a), pmap.map(b), k) for a, b, k in spans if pmap.map(a) < pmap.map(b)]
+    assert pmap.remap(spans) == want
+
+
 # ---------------------------------------------------------------------------
 # The İ fold: sre IGNORECASE matches İ (U+0130) as i, while str.lower()
 # turns it into i + U+0307.
@@ -357,6 +415,8 @@ def test_probe_fold_covers_sre_folds(text, needle):
     [
         "SİC", "ſic", "sıc", "4 junİ 962", "ll Junİ", "Rp 5OO,--",
         "deſember 19 71", "\u212aasm.nem",
+        # i + COMBINING DOT ABOVE is not an i to sre
+        "si\u0307c", "juni\u0307 962", "S\u0130\u0307C",
     ],
 )
 def test_fold_cases_match_probe_free(text):
@@ -364,6 +424,125 @@ def test_fold_cases_match_probe_free(text):
         for use_spell in (False, True):
             kw = {"use_dictionary": use_dict, "use_spelling": use_spell}
             assert T.extract_turn(text, **kw) == extract_turn_probe_free(text, **kw)
+
+
+# ---------------------------------------------------------------------------
+# The fold is exact for ASCII patterns: checked over every code point, and
+# rule by rule over the golden corpus and adversarial texts.
+# ---------------------------------------------------------------------------
+
+def test_probe_fold_is_exact_on_every_code_point():
+    code_points = [chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    folds = [T._probe_fold(x) for x in code_points]
+    assert all(len(f) == 1 for f in folds)
+    text, folded = "".join(code_points), "".join(folds)
+    for cls in (r"\w", r"\s", r"\d"):
+        at = [m.start() for m in re.finditer(cls, text)]
+        assert at == [m.start() for m in re.finditer(cls, folded)], cls
+    for c in "abcdefghijklmnopqrstuvwxyz":
+        matched = [m.start() for m in re.finditer(c, text, re.IGNORECASE)]
+        assert matched == [m.start() for m in re.finditer(c, folded)], c
+    # and no other character folds into ASCII
+    to_ascii = {x for x, f in zip(code_points, folds) if f.isascii() and not x.isascii()}
+    assert to_ascii == {"\u0130", "\u0131", "\u017f", "\u212a"}
+
+
+def _golden_inputs():
+    import json
+    import pathlib
+
+    path = pathlib.Path(__file__).parent / "fixtures" / "golden.json"
+    return sorted({fx["input"] for fx in json.loads(path.read_text()) if fx["input"]})
+
+
+_ADVERSARIAL = [
+    "S\u0130C \u017fic s\u0131c \u212aasm.nem si\u0307c jun\u0130 962",
+    "\u00e2\u20ac\u201dSC\u00e2\u20ac\u0153 DEPARTEMEN/WTA d\u0130 \u212aEMUDIAN Rp.5OO,--",
+    "\u0130I \u017fEPTEMBER 9 7l, \u0131l Maret, ll Jun\u0130, 19 71 oktober",
+    "\u03a3\u0391\u03a3 ke  lima  ribu s\u00f8ratus \u1e9e \u00df \u0149 \ufb01",
+    # orphan amounts at the start, after whitespace, in runs and back to back
+    "..277 x :12,5 y\n.:9 .5.6 x.7 ::8- \u0663",
+    ".5",
+    " :1 :2 ..3",
+    # lookalikes after Rp at the start and end
+    "Rp lO Rp.5S Rp\tzZ, Rp",
+]
+
+
+def _fold_corpus():
+    texts = _golden_inputs() + _ADVERSARIAL
+    folds = str.maketrans({"s": "\u017f", "i": "\u0131", "k": "\u212a", "I": "\u0130"})
+    return texts + [t.upper() for t in texts] + [t.title() for t in texts] + [
+        t.translate(folds) for t in texts
+    ]
+
+
+def test_fold_patterns_find_the_same_matches():
+    """Each IGNORECASE rule's lowered pattern (``D.fold_pattern``) on the
+    fold finds the spans and group spans of the rule's pattern on the text;
+    a T1 match contains its probe; a currency rule's scan finds each of its
+    matches; no rule matches the empty string."""
+    folded = [(r.pattern, r.fold_pattern) for r in D.MULTI_WORD_RULES] + [
+        (r.pattern, D.fold_pattern(r.pattern)) for r in D.CURRENCY_RULES if r.on_fold
+    ]
+    assert len(folded) == 277 + 16
+    for text in _fold_corpus():
+        fold = T._probe_fold(text)
+        for pattern, lowered in folded:
+            want = [m.regs for m in pattern.finditer(text)]
+            assert [m.regs for m in lowered.finditer(fold)] == want
+        for rule in D.MULTI_WORD_RULES:
+            for m in rule.pattern.finditer(text):
+                assert rule.probe in fold[m.start() : m.end()]
+        for rule in D.CURRENCY_RULES:
+            haystack = fold if rule.on_fold else text
+            for m in rule.pattern.finditer(text):
+                assert m.start() < m.end()
+            got = [m.regs for m in T._scan_matches(rule, text, haystack)]
+            assert got == [m.regs for m in rule.pattern.finditer(text)]
+
+
+# T1 chains: a rule's edit makes a later rule's match, whose probe was not
+# in the text before; the probes are looked for again around the edit
+_CHAINS = [
+    "ujang tertanda tunyangan",  # a replacement completes a later key
+    "di kebudayaan",
+    "kepu tsuaaptaadausan",  # a deletion joins a later key's probe
+    "dsuaaptaadaisampikan",
+    # edits before it in the same rule move the join past the rescan window
+    "suaaptaada suaaptaada suaaptaada suaaptaada " + "x" * 60 + " kepu tsuaaptaadausan",
+]
+
+
+def test_probe_scan_names_probes_across_a_found_one():
+    """Every probe that can start inside a probe the scan finds and run
+    past its end is named too: each such pair in the probe table."""
+    probes = D.MULTI_WORD_BY_PROBE
+    pairs = 0
+    for q in probes:
+        for k in range(1, len(q)):
+            for p in probes:
+                if len(p) > len(q) - k and p.startswith(q[k:]):
+                    text = q[:k] + p
+                    want = {i for i, r in enumerate(D.MULTI_WORD_RULES) if r.probe in text}
+                    assert T._multiword_candidates(text) == want, (q, p)
+                    pairs += 1
+    assert pairs
+
+
+def test_fold_pattern_lowers_letters_not_escapes():
+    lowered = D.fold_pattern(re.compile(r"Rp\S\W\D\B\b[A-Z]x\.", re.IGNORECASE))
+    assert lowered.pattern == r"rp\S\W\D\B\b[a-z]x\."
+    assert not lowered.flags & re.IGNORECASE
+
+
+@pytest.mark.parametrize("chain", _CHAINS)
+@pytest.mark.parametrize("pad", ["", "x" * 40 + " ", "agraria " * 6])
+def test_multiword_chains_match_probe_free(chain, pad):
+    for text in (chain, chain.upper(), pad + chain + " " + pad):
+        assert T.extract_turn(text) == extract_turn_probe_free(text)
+    assert T.apply_multiword(chain) == _multiword_all(chain)
+    assert T.apply_multiword(chain)[0] != chain
 
 
 # ---------------------------------------------------------------------------

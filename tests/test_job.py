@@ -121,3 +121,23 @@ def test_load_learned_resolves_versioned_pointer(spark, transcripts, tmp_path):
         spark, path, str(tmp_path / "out"), learned_words_path=learned
     )
     assert job.extra_kamus == frozenset({"zzyqx"})
+
+
+def test_run_extract_runs_as_a_script(transcripts, tmp_path):
+    """``python ocr_spark/plans/run_extract.py`` from outside the checkout,
+    with no PYTHONPATH, finds the package and completes the job."""
+    import os
+    import subprocess
+
+    path, n_rows = transcripts
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    res = subprocess.run(
+        [sys.executable, str(repo / "ocr_spark/plans/run_extract.py"),
+         "--input", path, "--output", str(tmp_path / "out"), "--groups", "1"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    summary = json.loads(res.stdout.strip().splitlines()[-1])
+    assert summary["turns"] == n_rows
