@@ -3989,7 +3989,7 @@ def _length_quantiles(spark, sf_dir):
     from ocr_spark.operators.textstats import length_quantiles
 
     docs = _t(spark, sf_dir, "documents").select("source", "n_chars")
-    return length_quantiles(docs, engine="exact")
+    return length_quantiles(docs)
 
 
 _LENGTH_QUANTILES_SQL = """

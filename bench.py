@@ -1,5 +1,6 @@
-"""Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+"""Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR in a local
+session sized by ``get_spark`` (one slot per usable CPU unless
+``SPARK_GRAFT_CPUS`` says otherwise); prints ONE JSON line.
 
 Headline set = the registry entries flagged ``bench`` in
 ``__spark_entry__.py``: the flagship fused-extraction pipeline (the north
@@ -29,7 +30,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
 #: flagship reps whose (max−min)/median exceeds this are re-run; still
@@ -52,10 +52,9 @@ def _force(df) -> int:
 
 def main() -> int:
     import __spark_entry__ as entrymod
-    from ocr_spark.session import get_spark
+    from ocr_spark.session import DEFAULT_CPUS, get_spark
 
-    spark = get_spark("ocr-spark-bench", master=f"local[{CPUS}]",
-                      shuffle_partitions=max(CPUS, 8))
+    spark = get_spark("ocr-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = {n: q.build for n, q in entrymod.REGISTRY.items()}
     headline = [n for n, q in entrymod.REGISTRY.items() if q.bench]
@@ -149,7 +148,7 @@ def main() -> int:
         "rep_spread": spread,
         "reps": REPS,
         "sf": _sf_from_dir(SF_DIR),
-        "cpus": CPUS,
+        "cpus": DEFAULT_CPUS,
         "flagship_docs": n_docs,
         "flagship_docs_per_sec": turns_per_sec,
         "flagship_reps": [round(t, 3) for t in flag],

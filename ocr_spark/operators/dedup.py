@@ -252,17 +252,23 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n_hashes: int = 16,
     k: int = 3,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, signature array<long>) — ``n_hashes`` MinHash values per doc.
 
     Single-pass construction: ONE md5 per shingle yields a 60-bit base
-    hash h; the per-position functions are a true 2-universal family
+    hash h (:func:`shingle_ids_from_tokens`, JVM-side); the per-position
+    functions are a true 2-universal family
     gᵢ(h) = (aᵢ·h + bᵢ) mod (2^61 − 1) (Carter-Wegman; Broder's minwise
     estimator needs the per-position RANKINGS to be ~independent
-    permutations). The multiply runs in decimal(38,0) — aᵢ·h < 2^122 ≈
-    2.7·10³⁶ fits exactly, so the arithmetic is exact and portable (the
-    SQL oracle reproduces it in HUGEINT).
+    permutations). The n_hashes mins run in ONE Arrow batch UDF
+    (:func:`_arrow_signatures`) as vectorized uint64 Mersenne mulmods
+    (:func:`_cw_mulmod`) — exact integer math, no floats, so the SQL
+    oracle reproduces every signature in HUGEINT. n_hashes vectorized
+    passes per batch instead of ~shingles×n_hashes interpreted
+    decimal(38,0) ops per doc: measured 59.1 → 11.8 s for 16 hashes over
+    50k docs (sf1) against the all-JVM aggregate+zip_with fold, which
+    pytest keeps as the bit-for-bit reference. A narrow map — no
+    shuffle, partitioning untouched.
 
     A NOTE ON THE FAMILY: the cheaper-looking gᵢ = h1 + i·h2 (Kirsch-
     Mitzenmacher double hashing, with h2 a 40-bit word of the same md5)
@@ -271,86 +277,34 @@ def minhash_signatures(
     every position, collapsing all n positions into ONE effective hash:
     two documents sharing just their min-h1 shingle score sig_sim = 1.0
     (measured: ~9×10⁵ false near-dup pairs on a 50k-doc corpus that has
-    ~3×10⁴ true ones — the sf1 tier caught it). The per-position minimum
-    folds over the shingle array with aggregate+zip_with, so the shingle
-    array is built once per row and the whole signature is one narrow
-    expression — n× less md5 hashing than the naive per-seed scan.
+    ~3×10⁴ true ones — the sf1 tier caught it).
     Jaccard(a,b) ≈ fraction of equal positions.
-
-    Two engines, bit-identical signatures (pytest-pinned):
-
-    ``arrow`` (default): the irreducible per-shingle md5 stays JVM-side
-    (:func:`shingle_ids_from_tokens` — the family's shared 60-bit base
-    hash), and the n_hashes Carter-Wegman mins run in ONE Arrow batch
-    UDF as vectorized uint64 Mersenne mulmods (:func:`_cw_mulmod`) with
-    a ``minimum.reduceat`` over the batch's concatenated hash array.
-    Exact integer math — no floats anywhere — so signatures equal the
-    decimal path bit-for-bit. Replaces ~shingles×n_hashes interpreted
-    decimal(38,0) ops/doc (CodegenFallback) with n_hashes vectorized
-    passes per batch: measured 59.1 → 11.8 s for 16 hashes over 50k
-    docs (sf1), oracle-hash-identical. Still a narrow map — no shuffle,
-    partitioning untouched.
-
-    ``hof``: the all-JVM higher-order fold (aggregate+zip_with over the
-    shingle array in decimal(38,0)). No Python workers in the plan — the
-    reference shape when a deployment can't take Arrow workers — at
-    ~5× the wall cost. NULL semantics are identical by construction:
-    ``least`` skips the NULL hash a NULL text yields, leaving INIT,
-    which the arrow path mirrors by dropping NULL elements.
     """
-    if engine not in ("arrow", "hof"):
-        raise ValueError(f"unknown engine {engine!r}")
     coeffs = minhash_coefficients(n_hashes)
     id_type = df.schema[id_col].dataType
     # stage the token array behind an eval barrier: the shingle expression
     # references it 4× and interpreted HOF trees re-run each reference, so
     # an inline tokenize costs 4 regexes per row (measured ~40% of the
     # sf0.1 near-dup wall time before this staging)
-    df = df.select(
+    hashed = df.select(
         F.col(id_col).alias("id"), tokens(text_col).alias("_mh_toks")
+    ).select(
+        "id",
+        shingle_ids_from_tokens(F.col("_mh_toks"), k).alias("_mh_base"),
     )
-    if engine == "arrow":
-        hashed = df.select(
-            "id",
-            shingle_ids_from_tokens(F.col("_mh_toks"), k).alias("_mh_base"),
-        )
-        return _arrow_signatures(hashed, id_type, coeffs)
-    sh = shingles_from_tokens(F.col("_mh_toks"), k)
-    per_shingle = F.transform(
-        sh,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
-        .cast("decimal(20,0)"),
-    )
-    init = F.array_repeat(F.lit(_MINHASH_INIT).cast("long"), n_hashes)
-    p = F.lit(MINHASH_P).cast("decimal(20,0)")
-    sig = F.aggregate(
-        per_shingle,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (
-                        (F.lit(a).cast("decimal(20,0)") * h + F.lit(b)) % p
-                    ).cast("long")
-                    for a, b in coeffs
-                ]
-            ),
-            lambda x, y: F.least(x, y),
-        ),
-    )
-    return df.select("id", sig.alias("signature"))
+    return _arrow_signatures(hashed, id_type, coeffs)
 
 
 def _arrow_signatures(hashed: DataFrame, id_type, coeffs) -> DataFrame:
     """MinHash mins over pre-hashed shingle arrays (see
-    ``minhash_signatures`` engine='arrow'). Per Arrow batch: concatenate
+    :func:`minhash_signatures`). Per Arrow batch: concatenate
     every row's base-hash array into one uint64 vector, run each
     Carter-Wegman function over it once (:func:`_cw_mulmod`), and
     ``minimum.reduceat`` at the row offsets — n_hashes vectorized passes
-    regardless of document count. NULL elements are dropped (the fold's
-    ``least`` skips NULLs); NULL/empty arrays yield the INIT sentinel
-    signature, exactly like the fold's untouched init."""
+    regardless of document count. NULL elements are dropped and
+    NULL/empty arrays yield the INIT sentinel signature — the NULL
+    semantics of a ``least`` fold from INIT, bit-identical to the
+    decimal(38,0) reference fold in pytest."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     out_schema = StructType(

@@ -30,10 +30,10 @@ known hazard is a HOT CHUNK (a boilerplate segment shared corpus-wide)
 making one join bucket quadratic — same failure mode as a hot LSH bucket;
 compose with :func:`ocr_spark.operators.curation.line_strip` upstream or
 cap chunk document-frequency (a cap breaks the exact-oracle contract, so
-it is not applied by default). The naive ``strategy='length'`` generator
-(length-bucket interval join — |Δlen| <= d is necessary for ED <= d) ships
-as the cross-check path; a length bucket concentrates the whole corpus at
-web scale, so 'segments' is the default.
+it is not applied by default). Plain length blocking (|Δlen| <= d is
+necessary for ED <= d) is exact too, but a length bucket concentrates the
+whole corpus at web scale, so it only serves the tiny-length slice the
+pigeonhole cannot cover.
 """
 from __future__ import annotations
 
@@ -203,7 +203,6 @@ def edit_distance_near_dup(
     max_dist: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "segments",
 ) -> DataFrame:
     """All unordered document pairs within ``max_dist`` unit-cost edits
     (insert/delete/substitute), exactly: ``(id_a, id_b, dist)`` with
@@ -211,35 +210,26 @@ def edit_distance_near_dup(
     excluded (no edit distance is defined against NULL); empty strings
     participate (ED('', t) = len(t)).
 
-    ``strategy='segments'`` (default): PassJoin pigeonhole candidates —
-    the 100 TB shape (see module docstring). ``strategy='length'``:
-    length-blocking only — exact but concentrates at scale; kept as the
-    independent cross-check generator (equality pinned in
-    tests/test_editdist.py).
-
-    Both strategies verify candidates with the same exact banded DP, so
-    the result is identical — and matches the DuckDB brute-force oracle
+    Candidates are PassJoin pigeonhole segments — the 100 TB shape (see
+    module docstring) — and every candidate is verified with the exact
+    banded DP, so the result matches the DuckDB brute-force oracle
     bit-for-bit (dist is an exact integer; no floats anywhere)."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    if strategy not in ("segments", "length"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     d = max_dist
     base = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
         .filter(F.col("text").isNotNull())
         .withColumn("len", F.length("text"))
     )
-    if strategy == "length":
-        cand = _length_candidates(base, d)
-    else:
-        cand = _segment_candidates(base, d)
-        # tiny-length channel: the pigeonhole needs the smaller string to
-        # have >= d+1 chars (else segments go empty); pairs whose smaller
-        # member is shorter route through the exact length generator over
-        # the (corpus-tiny) len <= 2d slice, where both members must live
-        tiny = base.filter(F.col("len") <= 2 * d)
-        cand = cand.union(_length_candidates(tiny, d)).distinct()
+    # tiny-length channel: the pigeonhole needs the smaller string to
+    # have >= d+1 chars (else segments go empty); pairs whose smaller
+    # member is shorter route through the exact length generator over
+    # the (corpus-tiny) len <= 2d slice, where both members must live
+    tiny = base.filter(F.col("len") <= 2 * d)
+    cand = _segment_candidates(base, d).union(
+        _length_candidates(tiny, d)
+    ).distinct()
 
     texts_a = base.select(
         F.col("id").alias("id_a"), F.col("text").alias("_ta")

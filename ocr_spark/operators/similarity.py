@@ -430,35 +430,32 @@ def train_ivf_centroids(
 
 #: score-matrix cells (rows × centroids) per numpy chunk inside the arrow
 #: assignment engine — bounds task memory at O(chunk) however large k is
-#: (the embedding_near_dup grouped-strategy precedent)
+#: (the embedding_near_duplicates pair-block precedent)
 _ARROW_ASSIGN_CELLS = 5_000_000
 
 
-#: k·dim at and above which ``engine='auto'`` stops building
+#: k·dim at and above which centroid assignment stops building
 #: literal-centroid expressions. BENCH/assign_engines.json (20k rows,
 #: dim 64) measures the literal path's Catalyst analyze/optimize/codegen
 #: cost growing superlinearly in plan-literal count — 12.8× slower than
 #: arrow at k·dim=4,096, 28× at 16,384, 46× at 65,536 — so from the
-#: k=256·dim=64 point (inclusive) 'auto' picks arrow. Below the
-#: boundary 'auto' keeps the literal plan even though arrow's measured
+#: k=256·dim=64 point (inclusive) assignment runs arrow. Below the
+#: boundary it keeps the literal plan even though arrow's measured
 #: wall is lower at bench scale there too (1.8× at k·dim=1,024): the
 #: sub-boundary deltas are sub-second one-time compile costs, while the
 #: literal plan stays whole-stage-codegen-fusable with surrounding JVM
 #: ops and needs no Python workers — the plan shape the repo's gate
 #: pins prefer. Every shipped-quantizer call site (k=22, dim=64 →
-#: k·dim=1,408) resolves to 'literal'; 'auto' changes behavior at the
+#: k·dim=1,408) resolves to 'literal'; arrow takes over at the
 #: k ≈ √N sizes :func:`derive_ivf_params` prescribes for N ≥ ~10⁶.
 _AUTO_ARROW_LITERALS = 16_384
 
 
-def _resolve_engine(engine: str, centroids: list[list[float]]) -> str:
-    """Resolve ``engine='auto'`` by plan-literal count (k·dim); pass
-    'literal'/'arrow' through unchanged. Both engines are bit-identical
-    (pytest-pinned), so resolution is a pure cost decision."""
-    if engine not in ("auto", "literal", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine != "auto":
-        return engine
+def _resolve_engine(centroids: list[list[float]]) -> str:
+    """The assignment engine for these centroids by plan-literal count
+    (k·dim): 'literal' below :data:`_AUTO_ARROW_LITERALS`, 'arrow' at and
+    above it. Both engines are bit-identical (pytest-pinned), so the
+    choice is a pure cost decision."""
     k = len(centroids)
     dim = len(centroids[0]) if k else 0
     return "arrow" if k * dim >= _AUTO_ARROW_LITERALS else "literal"
@@ -471,7 +468,7 @@ def _arrow_assign(
     cell_col: str,
     cos_col: str | None = None,
 ) -> DataFrame:
-    """engine='arrow' body shared by :func:`ivf_assign` /
+    """Arrow assignment engine shared by :func:`ivf_assign` /
     :func:`assign_with_centroid_cos` / :func:`kmeans_fit_distributed`:
     nearest-centroid argmax (and optionally raw cosine-to-assigned) as ONE
     ``mapInPandas`` pass, appending ``cell_col`` (+ ``cos_col``) to the
@@ -622,7 +619,6 @@ def ivf_assign(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     cell_col: str = "cell",
-    engine: str = "auto",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (max dot product — the
     centroids are unit-norm, so this is cosine assignment).
@@ -635,18 +631,15 @@ def ivf_assign(
     pruning and each query touches nprobe/n_cells of the bytes.
     NULL vectors get a NULL cell.
 
-    ``engine='literal'`` (default) is the pure-expression form above —
-    zero Python, whole-stage-codegen-able, the right shape while k·dim
-    stays in the thousands. ``engine='arrow'`` (:func:`_arrow_assign`)
-    carries the centroids as task data instead of O(k·dim) plan literals
-    — REQUIRED at the k ≈ √N sizes :func:`derive_ivf_params` prescribes
-    for N ≥ ~10⁶, where the literal plan hits Catalyst's compile cliff.
-    Bit-identical results (engine-equality pytest). The default
-    ``engine='auto'`` resolves by that same boundary — literal while
-    k·dim ≤ ``_AUTO_ARROW_LITERALS``, arrow past it — so
-    :func:`derive_ivf_params`-sized quantizers are safe by default."""
-    engine = _resolve_engine(engine, centroids)
-    if engine == "arrow":
+    The engine is chosen from k·dim (:func:`_resolve_engine`). Below
+    :data:`_AUTO_ARROW_LITERALS` it is the pure-expression form above —
+    zero Python, whole-stage-codegen-able. At and above it the arrow
+    engine (:func:`_arrow_assign`) carries the centroids as task data
+    instead of O(k·dim) plan literals — REQUIRED at the k ≈ √N sizes
+    :func:`derive_ivf_params` prescribes for N ≥ ~10⁶, where the literal
+    plan hits Catalyst's compile cliff. Bit-identical results
+    (engine-equality pytest)."""
+    if _resolve_engine(centroids) == "arrow":
         tmp = f"_vd_{vec_col}"
         # the double cast happens JVM-side either engine, so int/float32
         # inputs widen with identical semantics
@@ -837,7 +830,6 @@ def embedding_near_duplicates(
     dim: int | None = None,
     n_tables: int = 1,
     max_bucket_size: int | None = None,
-    strategy: str = "grouped",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via LSH bucketing + exact
     verification. Only same-bucket pairs are scored; ``n_planes`` trades
@@ -847,16 +839,16 @@ def embedding_near_duplicates(
     1-(1-p^planes)^tables at tables× the bucketing cost. Returns
     (id_a, id_b, cos) with cos ≥ threshold.
 
-    Two physical strategies, identical results (pytest-pinned equality):
-
-    ``grouped`` (default): one shuffle groups each bucket into an Arrow
-    batch and a pandas UDF scores the bucket's pair block with numpy —
-    vectorized over PAIRS but folding sequentially over DIMENSIONS
-    (``acc += V[:,j] * row_j`` is the same IEEE mul-then-add, in the same
-    index order, as the JVM ``zip_with``/``aggregate`` fold and DuckDB's
-    ``list_inner_product``), so raw cosines are BIT-IDENTICAL to the
-    streamed path; the exact ``round(·, 6)``/threshold/distinct stays
-    JVM-side on the UDF's conservative survivor superset (raw ≥
+    Physical shape: one shuffle groups each bucket into an Arrow batch and
+    a pandas UDF scores the bucket's pair block with numpy
+    (:func:`_grouped_bucket_pairs`) — vectorized over PAIRS but folding
+    sequentially over DIMENSIONS (``acc += V[:,j] * row_j`` is the same
+    IEEE mul-then-add, in the same index order, as the JVM
+    ``zip_with``/``aggregate`` fold of :func:`dot` and DuckDB's
+    ``list_inner_product``), so raw cosines are BIT-IDENTICAL to a bucket
+    self-join scored with :func:`dot`/:func:`norm` (pytest keeps that
+    join as the reference); the exact ``round(·, 6)``/threshold/distinct
+    stays JVM-side on the UDF's conservative survivor superset (raw ≥
     threshold − 1e-6, wider than any HALF_UP rounding step). Pair blocks
     are evaluated in row chunks of ~5M cells so task memory is
     O(chunk × members), never O(members²); the whole bucket's vectors do
@@ -865,29 +857,21 @@ def embedding_near_duplicates(
     ~O(candidate pairs) interpreted higher-order-function evaluations
     (CodegenFallback, ~µs each) with dim× vectorized array ops:
     measured 231.5 → 5.4 s warm / 12.0 s cold on the sf1 tier (20k×64,
-    8 buckets, ~25M candidates), oracle-hash-identical.
-
-    ``streamed``: bucket SELF-JOIN with per-row norms hoisted into the
-    narrow stage. Shuffles each vector once per side per table and
-    STREAMS pair enumeration, so task memory is O(bucket member) with NO
-    cap — the fallback when buckets are pathological and recall loss
-    from capping is unacceptable. Costs one interpreted 2·dim-op fold
-    per candidate pair. (A posting list — the skinny jaccard/minhash
-    pattern — is catastrophic here: a 2,500-member bucket of 64-dim
-    vectors is ~1.3 MB duplicated into every exploded row; measured
-    shuffle-server OOM on the sf1 hot bucket.)
+    8 buckets, ~25M candidates) against the self-join, oracle-hash-
+    identical. (A posting list — the skinny jaccard/minhash pattern — is
+    catastrophic here: a 2,500-member bucket of 64-dim vectors is
+    ~1.3 MB duplicated into every exploded row; measured shuffle-server
+    OOM on the sf1 hot bucket.)
 
     ``max_bucket_size`` is the family's hot-bucket cap: a degenerate
     bucket (mass-duplicated embedding) would emit n² pairs; over-cap
-    buckets are dropped whole before pair enumeration in BOTH strategies
-    (documented recall trade-off, inert at oracle scale).
+    buckets are dropped whole before pair enumeration (documented recall
+    trade-off, inert at oracle scale).
 
     Pass ``dim`` explicitly where known (the embedding width is part of the
     table contract) — it keeps the call plan-only. When omitted, ONE probe
     job samples a non-null vector; an empty/all-null input yields an empty
     result instead of a TypeError."""
-    if strategy not in ("grouped", "streamed"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     if dim is None:
         probe = (
             df.filter(F.col(vec_col).isNotNull()).select(vec_col).head(1)
@@ -916,53 +900,15 @@ def embedding_near_duplicates(
     )
     from ocr_spark.functions.explode import explode_nonnull
 
-    if strategy == "grouped":
-        bucketed = explode_nonnull(
-            df,
-            buckets,
-            "bucket",
-            F.col(id_col).alias("id"),
-            _as_double(vec_col).alias("vd"),
-        )
-        return _grouped_bucket_pairs(
-            bucketed, df.schema[id_col].dataType, threshold, max_bucket_size
-        )
-
-    # the bucket array is n_tables × n_planes dot products per row —
-    # explode_nonnull only (see functions/explode.py)
     bucketed = explode_nonnull(
         df,
         buckets,
         "bucket",
         F.col(id_col).alias("id"),
         _as_double(vec_col).alias("vd"),
-        norm(_as_double(vec_col)).alias("n"),
     )
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        bucketed = (
-            bucketed.withColumn(
-                "_bs", F.count(F.lit(1)).over(Window.partitionBy("bucket"))
-            )
-            .filter(F.col("_bs") <= max_bucket_size)
-            .drop("_bs")
-        )
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    cos = F.round(
-        dot(F.col("a.vd"), F.col("b.vd")) / (F.col("a.n") * F.col("b.n")), 6
-    )
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cos.alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-        .distinct()
+    return _grouped_bucket_pairs(
+        bucketed, df.schema[id_col].dataType, threshold, max_bucket_size
     )
 
 
@@ -973,10 +919,11 @@ def _grouped_bucket_pairs(
     max_bucket_size: int | None,
 ) -> DataFrame:
     """Score one LSH bucket's pair block per Arrow group (see
-    ``embedding_near_duplicates`` strategy='grouped').
+    :func:`embedding_near_duplicates`).
 
-    Bit-identity contract: every float op replicates the streamed path's
-    scalar sequence — norms fold ``acc + x·x`` in index order, dots fold
+    Bit-identity contract: every float op replicates the scalar sequence
+    of a bucket self-join scored with :func:`dot`/:func:`norm` — norms
+    fold ``acc + x·x`` in index order, dots fold
     ``acc + aᵢ·bᵢ`` in index order (one vectorized mul-then-add per
     dimension IS that fold, elementwise), cosine is one mul (nₐ·n_b) then
     one div. numpy float64 elementwise ops are IEEE-754 correctly rounded,
@@ -984,8 +931,8 @@ def _grouped_bucket_pairs(
     HALF_UP ``round(·, 6)`` + threshold + distinct run JVM-side on the
     survivor superset (raw ≥ threshold − 1e-6). Pair ordering: rows are
     sorted by id inside the group (UTF-8/codepoint order agree, and
-    numeric order is numeric), so upper-triangle ⇔ ``id_a < id_b`` exactly
-    as the streamed join's predicate."""
+    numeric order is numeric), so upper-triangle ⇔ ``id_a < id_b``, the
+    self-join's predicate."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     out_schema = StructType(
@@ -1073,7 +1020,6 @@ def assign_with_centroid_cos(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "auto",
 ) -> DataFrame:
     """Cell assignment plus cosine-to-assigned-centroid in one narrow pass:
     (id, vd, cell, centroid_cos). Assignment is :func:`ivf_assign`'s
@@ -1089,15 +1035,14 @@ def assign_with_centroid_cos(
     from a fused projection would re-evaluate all n_cells dot products per
     reference.
 
-    ``engine='arrow'`` routes the assignment + raw cosine through
-    :func:`_arrow_assign` (O(1) plan size in k — the large-k path; see
-    :func:`ivf_assign`); the 6-dp HALF_UP round stays JVM-side on the raw
-    value so both engines share the exact rounding op. Bit-identical
-    results (engine-equality pytest); ``engine='auto'`` (default) picks
-    by the :data:`_AUTO_ARROW_LITERALS` k·dim boundary."""
-    engine = _resolve_engine(engine, centroids)
+    At and above the :data:`_AUTO_ARROW_LITERALS` k·dim boundary the
+    assignment + raw cosine run through :func:`_arrow_assign` (O(1) plan
+    size in k — the large-k path; see :func:`ivf_assign`); the 6-dp
+    HALF_UP round stays JVM-side on the raw value so both engines share
+    the exact rounding op. Bit-identical results (engine-equality
+    pytest)."""
     v = _as_double(vec_col)
-    if engine == "arrow":
+    if _resolve_engine(centroids) == "arrow":
         base = df.select(F.col(id_col).alias("id"), v.alias("vd"))
         out = _arrow_assign(base, centroids, "vd", "cell", "_raw")
         return out.select(
@@ -1139,53 +1084,21 @@ def semantic_dedup_pairs(
     assigned: DataFrame,
     threshold: float = 0.95,
     max_cell_size: int | None = None,
-    strategy: str = "grouped",
 ) -> DataFrame:
     """Within-cell near-duplicate pairs (id_a, id_b, cos ≥ threshold) over
     the output of :func:`assign_with_centroid_cos`. The k-means cell plays
     the LSH bucket's role: only same-cell pairs are scored, so the all-pairs
     O(n²) collapses to Σ|cell|² — the SemDeDup candidate-generation shape.
-    Physical strategies are shared with :func:`embedding_near_duplicates`
-    (``grouped`` = one shuffle + vectorized per-cell pair block, bit-identical
-    scores; ``streamed`` = cell self-join, unbounded cells). At corpus scale
-    cells are ~N/√N ≈ √N wide — cap pathological cells with
-    ``max_cell_size`` exactly like hot LSH buckets."""
-    if strategy not in ("grouped", "streamed"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    live = assigned.filter(F.col("cell").isNotNull())
-    if strategy == "grouped":
-        bucketed = live.select(
-            F.col("cell").alias("bucket"), F.col("id"), F.col("vd")
-        )
-        return _grouped_bucket_pairs(
-            bucketed, assigned.schema["id"].dataType, threshold, max_cell_size
-        )
-    withn = live.select("cell", "id", "vd", norm(F.col("vd")).alias("n"))
-    if max_cell_size is not None:
-        from pyspark.sql import Window
-
-        withn = (
-            withn.withColumn(
-                "_cs", F.count(F.lit(1)).over(Window.partitionBy("cell"))
-            )
-            .filter(F.col("_cs") <= max_cell_size)
-            .drop("_cs")
-        )
-    a = withn.alias("a")
-    b = withn.alias("b")
-    cos = F.round(
-        dot(F.col("a.vd"), F.col("b.vd")) / (F.col("a.n") * F.col("b.n")), 6
+    The physical shape is :func:`embedding_near_duplicates`'s: one
+    shuffle + a vectorized per-cell pair block (:func:`_grouped_bucket_pairs`,
+    scores bit-identical to a cell self-join). At corpus scale cells are
+    ~N/√N ≈ √N wide — cap pathological cells with ``max_cell_size``
+    exactly like hot LSH buckets."""
+    bucketed = assigned.filter(F.col("cell").isNotNull()).select(
+        F.col("cell").alias("bucket"), F.col("id"), F.col("vd")
     )
-    return (
-        a.join(b, "cell")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cos.alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-        .distinct()
+    return _grouped_bucket_pairs(
+        bucketed, assigned.schema["id"].dataType, threshold, max_cell_size
     )
 
 
@@ -1197,9 +1110,7 @@ def semantic_dedup(
     vec_col: str = "embedding",
     keep: str = "far",
     max_cell_size: int | None = None,
-    strategy: str = "grouped",
     checkpoint_dir: str | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """SemDeDup: embedding-space deduplication via k-means cells. Assign
     every vector to its nearest shipped-quantizer centroid, score only
@@ -1210,8 +1121,8 @@ def semantic_dedup(
     D7-consistent canonical-minimum rule. Returns every input row as
     (id, cell, centroid_cos, cluster, keep).
 
-    Scale shape: assignment is narrow (literal centroids by default;
-    ``engine='arrow'`` for large k — see :func:`ivf_assign`); pair generation
+    Scale shape: assignment is narrow (literal centroids, or the arrow
+    engine for large k — see :func:`ivf_assign`); pair generation
     shuffles once on cell; components iterate over PAIR VERTICES only
     (tiny vs corpus); the keep ranking windows only those vertices and
     broadcast-joins the flags back — the corpus itself is never windowed
@@ -1221,10 +1132,8 @@ def semantic_dedup(
         raise ValueError(f"unknown keep rule {keep!r}")
     if centroids is None:
         centroids = load_ivf_centroids()
-    assigned = assign_with_centroid_cos(
-        df, centroids, id_col, vec_col, engine=engine
-    )
-    pairs = semantic_dedup_pairs(assigned, threshold, max_cell_size, strategy)
+    assigned = assign_with_centroid_cos(df, centroids, id_col, vec_col)
+    pairs = semantic_dedup_pairs(assigned, threshold, max_cell_size)
     from ocr_spark.operators.dedup import connected_components
 
     comp = connected_components(pairs, checkpoint_dir=checkpoint_dir)
@@ -1271,7 +1180,6 @@ def kmeans_fit_distributed(
     iters: int = 8,
     scale_bits: int = 20,
     sample_n: int | None = None,
-    engine: str = "auto",
 ) -> list[list[float]]:
     """Train a spherical k-means quantizer over the FULL corpus as a Spark
     job — the scale path behind :func:`train_ivf_centroids` (which trains
@@ -1300,11 +1208,12 @@ def kmeans_fit_distributed(
     cells keep their previous centroid. Normalization folds are strict
     index-order (:func:`norm`), identical in the reference.
 
-    ``engine='arrow'`` routes the per-iteration assignment through
-    :func:`_arrow_assign` (O(1) plan size in k) instead of rebuilding an
-    O(k·dim)-literal expression EVERY iteration — at the k ≈ √N sizes
-    :func:`derive_ivf_params` prescribes, the literal plan re-pays the
-    Catalyst compile cliff ``iters`` times. The fixed-point integer sum
+    At and above the :data:`_AUTO_ARROW_LITERALS` k·dim boundary the
+    per-iteration assignment runs through :func:`_arrow_assign` (O(1)
+    plan size in k) instead of rebuilding an O(k·dim)-literal expression
+    EVERY iteration — at the k ≈ √N sizes :func:`derive_ivf_params`
+    prescribes, the literal plan re-pays the Catalyst compile cliff
+    ``iters`` times. The fixed-point integer sum
     makes the update engine-independent by construction; the assignment
     argmax is the same index-order IEEE fold + first-max rule either way,
     so trained centroids are bit-identical (engine-equality pytest).
@@ -1313,8 +1222,6 @@ def kmeans_fit_distributed(
 
     from ocr_spark.operators.dedup import _free_checkpoint
 
-    if engine not in ("auto", "literal", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}")
     if n_cells <= 0:
         raise ValueError(f"n_cells must be positive, got {n_cells}")
     if iters <= 0:
@@ -1364,8 +1271,8 @@ def kmeans_fit_distributed(
                 f"{sample_n} ids for {n_cells} cells"
             )
 
-        # 'auto' resolves once — k·dim is constant across iterations
-        engine = _resolve_engine(engine, c)
+        # resolved once — k·dim is constant across iterations
+        engine = _resolve_engine(c)
         for _ in range(iters):
             if engine == "arrow":
                 assigned = _arrow_assign(

@@ -974,8 +974,6 @@ def length_quantiles(
     group_col: str = "source",
     value_col: str = "n_chars",
     probs: tuple[float, ...] = (0.25, 0.5, 0.75, 0.95),
-    engine: str = "exact",
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Per-group length-distribution quantiles — the corpus-profiling
     aggregate behind length-based quality cuts (where to put a min/max
@@ -984,20 +982,11 @@ def length_quantiles(
         (group, n_docs, p25, p50, p75, p95, ...)   one col per prob,
         linear-interpolated quantile rounded to 4 dp.
 
-    Two engines, same signature (the repo's dual-engine pattern):
-
-    - ``engine='exact'`` — Spark's exact ``percentile`` aggregate, which
-      buffers each group's values: right whenever one group fits an
-      executor (every test tier), and the oracle path (DuckDB
-      ``quantile_cont`` implements the same p·(n−1) linear-interpolation
-      definition).
-    - ``engine='approx'`` — ``percentile_approx`` (Greenwald-Khanna
-      sketch, mergeable, bounded memory at ANY group size): the 100 TB
-      path. Rank error ≤ 1/accuracy; pytest pins the error bound against
-      the exact engine rather than an oracle.
+    Spark's exact ``percentile`` aggregate, which buffers each group's
+    values: right whenever one group fits an executor, and exact against
+    the oracle (DuckDB ``quantile_cont`` implements the same p·(n−1)
+    linear-interpolation definition).
     """
-    if engine not in ("exact", "approx"):
-        raise ValueError(f"engine must be 'exact' or 'approx': {engine}")
     if not probs or any(not 0 <= p <= 1 for p in probs):
         raise ValueError(f"probs must be in [0, 1]: {probs}")
     plist = list(probs)
@@ -1008,14 +997,7 @@ def length_quantiles(
         raise ValueError(
             f"probs collide after column-name rounding: {probs} -> {names}"
         )
-    if engine == "exact":
-        q = F.percentile(F.col(value_col), F.array(*[F.lit(p) for p in plist]))
-    else:
-        q = F.percentile_approx(
-            F.col(value_col),
-            F.array(*[F.lit(p) for p in plist]),
-            F.lit(accuracy),
-        )
+    q = F.percentile(F.col(value_col), F.array(*[F.lit(p) for p in plist]))
     agg = df.groupBy(F.col(group_col).alias("grp")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"), q.alias("_q")
     )

@@ -3,7 +3,7 @@
   spark-submit --py-files ocr_spark.zip ocr_spark/plans/run_extract.py \
       --input /path/to/transcripts --output /path/to/extracted \
       [--groups 8] [--no-dictionary] [--no-spelling] [--no-resume] \
-      [--master local[32]] [--shuffle-partitions 32]
+      [--master local[4]] [--shuffle-partitions 8]
 
 Also runnable as plain ``python`` (creates its own local session). Prints a
 one-line JSON job summary (the _SUMMARY.json content) on success.

@@ -93,8 +93,7 @@ def get_spark(
         # 1024 and 131.4 s at 8192, same box/day): big batches serialize
         # the JVM->Python pipeline into lumpy tails, tiny ones pay
         # per-batch overhead
-        .set("spark.sql.execution.arrow.maxRecordsPerBatch",
-             os.environ.get("SPARK_ARROW_BATCH", "2048"))
+        .set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # target split size for the initial scan: extraction does ~1000x
         # more compute per byte than a plain scan, so splits must be sized
         # for CPU balance, not IO efficiency — 16 MB keeps every core busy
@@ -109,8 +108,7 @@ def get_spark(
         # within noise. At 100 TB the same arithmetic holds wherever
         # executor cores are the binding resource; text compresses
         # comparably under either codec.
-        .set("spark.sql.parquet.compression.codec",
-             os.environ.get("SPARK_PARQUET_CODEC", "lz4"))
+        .set("spark.sql.parquet.compression.codec", "lz4")
         .set("spark.driver.memory", heap)
         # pre-commit and pre-touch the heap: the first big-shuffle stage
         # otherwise pays the heap-growth tax — threads stall off-CPU in

@@ -621,31 +621,63 @@ def test_cw_mulmod_matches_python_ints():
         assert got == [(a * int(h) + b) % MINHASH_P for h in hs], (a, b)
 
 
+def _hof_signatures(df, n_hashes: int = 16, k: int = 3):
+    """Reference MinHash signatures: the all-JVM higher-order fold — per
+    shingle the 60-bit md5 base hash in decimal(20,0), then
+    aggregate+zip_with of ``least`` over the exact decimal(38,0)
+    Carter-Wegman values from an INIT-filled accumulator. ``least`` skips
+    the NULL hash a NULL text yields, leaving INIT."""
+    from ocr_spark.operators.dedup import (
+        _MINHASH_INIT,
+        MINHASH_P,
+        minhash_coefficients,
+        shingles_from_tokens,
+    )
+    from ocr_spark.operators.textstats import tokens
+
+    per_shingle = F.transform(
+        shingles_from_tokens(F.col("_mh_toks"), k),
+        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
+        .cast("decimal(20,0)"),
+    )
+    p = F.lit(MINHASH_P).cast("decimal(20,0)")
+    sig = F.aggregate(
+        per_shingle,
+        F.array_repeat(F.lit(_MINHASH_INIT).cast("long"), n_hashes),
+        lambda acc, h: F.zip_with(
+            acc,
+            F.array(
+                *[
+                    (
+                        (F.lit(a).cast("decimal(20,0)") * h + F.lit(b)) % p
+                    ).cast("long")
+                    for a, b in minhash_coefficients(n_hashes)
+                ]
+            ),
+            lambda x, y: F.least(x, y),
+        ),
+    )
+    return df.select(
+        F.col("doc_id").alias("id"), tokens("text").alias("_mh_toks")
+    ).select("id", sig.alias("signature"))
+
+
 def test_minhash_arrow_engine_matches_hof_bitwise(spark, corpus):
-    """engine='arrow' (vectorized uint64 mulmod + reduceat) must reproduce
-    engine='hof' (decimal(38,0) JVM fold) signature arrays bit-for-bit,
-    including the NULL-text INIT sentinel and the short-doc single-shingle
-    fallback."""
+    """minhash_signatures (vectorized uint64 mulmod + reduceat) must
+    reproduce the decimal(38,0) JVM fold (:func:`_hof_signatures`)
+    signature arrays bit-for-bit, including the NULL-text INIT sentinel
+    and the short-doc single-shingle fallback."""
     edge = spark.createDataFrame(
         [(100, None), (101, ""), (102, "ab cd"), (103, "onlyoneword")],
         "doc_id long, text string",
     )
     both = corpus.select("doc_id", "text").unionByName(edge)
-    hof = {
-        r["id"]: r["signature"]
-        for r in minhash_signatures(both, engine="hof").collect()
-    }
+    hof = {r["id"]: r["signature"] for r in _hof_signatures(both).collect()}
     arrow = {
-        r["id"]: r["signature"]
-        for r in minhash_signatures(both, engine="arrow").collect()
+        r["id"]: r["signature"] for r in minhash_signatures(both).collect()
     }
     assert arrow == hof
     assert hof[100] == [1 << 62] * 16  # NULL text -> untouched INIT
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="engine"):
-        minhash_signatures(both, engine="gpu")
 
 
 def test_winnow_near_dup_catches_partial_copy(spark):

@@ -1,7 +1,7 @@
 """Edit-distance near-dup: banded DP vs a textbook full-matrix reference,
-PassJoin segment candidates vs the naive length generator (strategy
-equality), completeness on planted pairs, tiny-string channel, and plan
-shape (candidate generation is an equi-join, never a cartesian)."""
+PassJoin candidates vs brute force, completeness on planted pairs,
+tiny-string channel, and plan shape (candidate generation is an
+equi-join, never a cartesian)."""
 import random
 
 import pytest
@@ -96,14 +96,11 @@ def test_exact_vs_bruteforce_both_strategies(spark, d):
     docs = _corpus(rng, max_d=max(d, 1))
     df = spark.createDataFrame(docs, "doc_id int, text string")
     expect = _brute(docs, d)
-    for strategy in ("segments", "length"):
-        got = {
-            (r.id_a, r.id_b, r.dist)
-            for r in edit_distance_near_dup(
-                df, max_dist=d, strategy=strategy
-            ).collect()
-        }
-        assert got == expect, (strategy, d, got ^ expect)
+    got = {
+        (r.id_a, r.id_b, r.dist)
+        for r in edit_distance_near_dup(df, max_dist=d).collect()
+    }
+    assert got == expect, (d, got ^ expect)
     assert expect, "corpus must plant at least one pair for the test to bite"
 
 
@@ -120,19 +117,16 @@ def test_candidate_plan_has_no_cartesian(spark):
         [(i, f"document number {i} content") for i in range(30)],
         "doc_id int, text string",
     )
-    for strategy in ("segments", "length"):
-        plan = (
-            edit_distance_near_dup(df, max_dist=2, strategy=strategy)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "CartesianProduct" not in plan, strategy
-        assert "BroadcastNestedLoopJoin" not in plan, strategy
+    plan = (
+        edit_distance_near_dup(df, max_dist=2)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_validation():
     with pytest.raises(ValueError):
         edit_distance_near_dup(None, max_dist=-1)
-    with pytest.raises(ValueError):
-        edit_distance_near_dup(None, strategy="bogus")

@@ -265,12 +265,11 @@ def test_knn_join_window_sees_partial_topk_not_cross_product(spark):
 
 
 def test_embedding_near_dup_never_builds_posting_buffer(spark):
-    """Neither embedding near-dup strategy may materialize a collect_list
-    posting: a posting duplicates the bucket's member array (bucket × dim
-    doubles) into every exploded member row — measured OOM on sf1's hot
-    bucket. The grouped default scores buckets in ONE FlatMapGroupsInPandas
-    (one Exchange on the bucket key, vectors move once); the streamed
-    fallback is the bucket-key equi-join that streams pair enumeration."""
+    """Embedding near-dup may not materialize a collect_list posting: a
+    posting duplicates the bucket's member array (bucket × dim doubles)
+    into every exploded member row — measured OOM on sf1's hot bucket. It
+    scores buckets in ONE FlatMapGroupsInPandas (one Exchange on the
+    bucket key, vectors move once)."""
     from ocr_spark.operators.similarity import embedding_near_duplicates
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -282,15 +281,6 @@ def test_embedding_near_dup_never_builds_posting_buffer(spark):
     assert "FlatMapGroupsInPandas" in grouped
     # exactly two shuffles: the bucket groupBy + the cross-table distinct
     assert grouped.count("Exchange") == 2
-
-    streamed = _plan(
-        embedding_near_duplicates(
-            emb, threshold=0.9, n_planes=4, dim=16, strategy="streamed"
-        )
-    )
-    assert "collect_list" not in streamed
-    assert "CartesianProduct" not in streamed
-    assert "Join" in streamed  # the bucket-key equi-join is the pair source
 
 
 def test_pii_redaction_is_narrow(docs):

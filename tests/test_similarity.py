@@ -179,39 +179,85 @@ def test_embedding_near_dup_explicit_dim_matches_probed(vectors):
     assert probed == explicit
 
 
+def _self_join_pairs(bucketed, key, threshold, cap=None):
+    """Reference near-dup pairs: a bucket SELF-JOIN on ``key`` over
+    (key, id, vd) rows, cosine from the package's JVM folds
+    (``dot``/``norm``, norms hoisted per row) rounded HALF_UP to 6 dp,
+    then the threshold and a distinct across buckets. Buckets with more
+    than ``cap`` members are dropped before the join."""
+    from pyspark.sql import Window
+
+    from ocr_spark.operators.similarity import dot, norm
+
+    withn = bucketed.withColumn("n", norm(F.col("vd")))
+    if cap is not None:
+        withn = (
+            withn.withColumn(
+                "_bs", F.count(F.lit(1)).over(Window.partitionBy(key))
+            )
+            .filter(F.col("_bs") <= cap)
+            .drop("_bs")
+        )
+    a, b = withn.alias("a"), withn.alias("b")
+    cos = F.round(
+        dot(F.col("a.vd"), F.col("b.vd")) / (F.col("a.n") * F.col("b.n")), 6
+    )
+    return (
+        a.join(b, key)
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            cos.alias("cos"),
+        )
+        .filter(F.col("cos") >= threshold)
+        .distinct()
+    )
+
+
 def test_embedding_near_dup_grouped_matches_streamed_bitwise(vectors):
-    """The grouped (pandas-per-bucket) strategy must reproduce the streamed
-    self-join BIT-for-bit — same pairs AND same cos doubles — including
-    when the hot-bucket cap partially fires and across multiple tables
-    (the sequential-over-dims numpy fold is the same IEEE op sequence as
-    the JVM zip_with/aggregate fold)."""
-    df, _ = vectors
+    """The pandas-per-bucket pair block must reproduce the bucket
+    self-join (:func:`_self_join_pairs`) BIT-for-bit — same pairs AND same
+    cos doubles — including when the hot-bucket cap partially fires and
+    across multiple tables (the sequential-over-dims numpy fold is the
+    same IEEE op sequence as the JVM zip_with/aggregate fold)."""
+    from ocr_spark.operators.similarity import sign_bucket
+
+    df, byid = vectors
+    dim = len(byid[0])
     for kw in (
         dict(threshold=0.9, n_planes=4),
         dict(threshold=0.3, n_planes=5, n_tables=2, max_bucket_size=20),
     ):
+        buckets = F.array(
+            *[
+                F.concat(
+                    F.lit(f"{t}:"),
+                    sign_bucket(
+                        F.col("embedding"),
+                        hyperplanes(dim, kw["n_planes"], 7 + t),
+                    ),
+                )
+                for t in range(kw.get("n_tables", 1))
+            ]
+        )
+        bucketed = df.select(
+            F.col("vec_id").alias("id"),
+            F.col("embedding").cast("array<double>").alias("vd"),
+            F.explode(buckets).alias("bucket"),
+        )
         streamed = sorted(
             (r["id_a"], r["id_b"], r["cos"])
-            for r in embedding_near_duplicates(
-                df, strategy="streamed", **kw
+            for r in _self_join_pairs(
+                bucketed, "bucket", kw["threshold"], kw.get("max_bucket_size")
             ).collect()
         )
         grouped = sorted(
             (r["id_a"], r["id_b"], r["cos"])
-            for r in embedding_near_duplicates(
-                df, strategy="grouped", **kw
-            ).collect()
+            for r in embedding_near_duplicates(df, **kw).collect()
         )
         assert grouped == streamed
         assert streamed  # the case must actually produce pairs
-
-
-def test_embedding_near_dup_rejects_unknown_strategy(vectors):
-    df, _ = vectors
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="strategy"):
-        embedding_near_duplicates(df, strategy="psychic")
 
 
 def test_hyperplanes_deterministic():
@@ -591,11 +637,13 @@ def test_semantic_dedup_grouped_matches_streamed(vectors, sem_centroids):
     assigned = assign_with_centroid_cos(df, sem_centroids)
     g = sorted(
         (r.id_a, r.id_b, r.cos)
-        for r in semantic_dedup_pairs(assigned, 0.5, strategy="grouped").collect()
+        for r in semantic_dedup_pairs(assigned, 0.5).collect()
     )
     s = sorted(
         (r.id_a, r.id_b, r.cos)
-        for r in semantic_dedup_pairs(assigned, 0.5, strategy="streamed").collect()
+        for r in _self_join_pairs(
+            assigned.filter(F.col("cell").isNotNull()), "cell", 0.5
+        ).collect()
     )
     assert g == s and len(g) > 0
 
@@ -666,29 +714,18 @@ def test_semantic_dedup_cell_cap_drops_pathological_cell(spark, sem_centroids):
     base = [1.0] * DIM  # identical vectors all land in one cell
     df = spark.createDataFrame([(i, base) for i in range(20)], schema)
     assigned = assign_with_centroid_cos(df, sem_centroids)
-    for strategy in ("grouped", "streamed"):
-        full = semantic_dedup_pairs(assigned, 0.99, strategy=strategy)
-        assert full.count() == 20 * 19 // 2
-        capped = semantic_dedup_pairs(
-            assigned, 0.99, max_cell_size=10, strategy=strategy
-        )
-        assert capped.count() == 0
+    full = semantic_dedup_pairs(assigned, 0.99)
+    assert full.count() == 20 * 19 // 2
+    capped = semantic_dedup_pairs(assigned, 0.99, max_cell_size=10)
+    assert capped.count() == 0
 
 
 def test_semantic_dedup_rejects_bad_args(vectors, sem_centroids):
-    from ocr_spark.operators.similarity import (
-        assign_with_centroid_cos,
-        semantic_dedup,
-        semantic_dedup_pairs,
-    )
+    from ocr_spark.operators.similarity import semantic_dedup
 
     df, _ = vectors
     with pytest.raises(ValueError):
         semantic_dedup(df, sem_centroids, keep="median")
-    with pytest.raises(ValueError):
-        semantic_dedup_pairs(
-            assign_with_centroid_cos(df, sem_centroids), strategy="posting"
-        )
 
 
 # ---------------------------------------------------------------------------

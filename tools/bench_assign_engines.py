@@ -6,6 +6,9 @@ DATA is fixed — Catalyst analysis/optimization walks every Literal node
 and codegen emits a score expression per centroid. The arrow engine
 (ocr_spark.operators.similarity._arrow_assign) carries the centroid
 matrix as task data: plan size O(1) in k, per-row cost a numpy matmul.
+Each engine is forced by moving the k·dim boundary
+(``similarity._AUTO_ARROW_LITERALS``: 0 for arrow, unreachable for
+literal), restored after each point.
 
 Fixed corpus (20k vectors, dim 64), sweep k ∈ {16, 64, 256, 1024}; each
 point is wall time of ivf_assign(...).groupBy(cell).count() end-to-end
@@ -38,6 +41,7 @@ def main() -> int:
 
     import numpy as np
 
+    from ocr_spark.operators import similarity
     from ocr_spark.operators.similarity import ivf_assign
     from ocr_spark.session import get_spark
 
@@ -56,18 +60,18 @@ def main() -> int:
     for k in ks:
         cents = [[float(x) for x in row] for row in vecs[:k]]
         point = {"k": k}
-        for engine in ("literal", "arrow"):
+        for engine, boundary in (("literal", 1 << 62), ("arrow", 0)):
             times = []
-            for _ in range(args.reps + 1):  # rep 0 = warmup, discarded
-                t0 = time.monotonic()
-                n = (
-                    ivf_assign(df, cents, engine=engine)
-                    .groupBy("cell")
-                    .count()
-                    .count()
-                )
-                times.append(time.monotonic() - t0)
-                assert n >= 1
+            saved = similarity._AUTO_ARROW_LITERALS
+            similarity._AUTO_ARROW_LITERALS = boundary
+            try:
+                for _ in range(args.reps + 1):  # rep 0 = warmup, discarded
+                    t0 = time.monotonic()
+                    n = ivf_assign(df, cents).groupBy("cell").count().count()
+                    times.append(time.monotonic() - t0)
+                    assert n >= 1
+            finally:
+                similarity._AUTO_ARROW_LITERALS = saved
             point[engine + "_sec"] = round(statistics.median(times[1:]), 2)
             print(f"k={k} {engine}: {point[engine + '_sec']} s "
                   f"(reps {[round(t, 2) for t in times]})", flush=True)

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import pathlib
 import sys
 import time
@@ -54,12 +53,6 @@ def main() -> int:
         if q.sf1 and not (args.skip_heavy and n == HEAVY)
     ]
     t0 = time.monotonic()
-    # size the local-mode driver heap for the tier: get_spark defaults to
-    # 8 GB (right for sf<=0.1), but the sf1 posting/pair shuffles allocate
-    # ~2 GB of unsafe rows across 32 executor threads in the SAME JVM —
-    # at 8 GB the winnow pair stage GC-thrashes (GCLocker retry warnings,
-    # 143 s in-sweep vs 43 s at 48 GB, and repeat runs OOM)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
     results = run(args.sf, names, extended=True, engine_time=True)
     wall = round(time.monotonic() - t0, 1)
     failed = [n for n, r in results.items() if r["failure"] is not None]
