@@ -892,14 +892,16 @@ def _simhash(spark, sf_dir):
 
 _SIMHASH_SQL = f"""
 WITH toks AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_distinct(regexp_extract_all(lower(text), '{WORD_RE}'))) AS t
-  FROM documents
+  SELECT doc_id, md5(t) AS h FROM (
+    SELECT DISTINCT doc_id,
+           unnest(list_distinct(regexp_extract_all(lower(text), '{WORD_RE}'))) AS t
+    FROM documents
+  )
 ),
 votes AS (
   SELECT doc_id, b.bit AS bit,
          CASE WHEN sum(CASE WHEN
-              ((strpos('0123456789abcdef', substr(md5(t), (b.bit // 4) + 1, 1)) - 1)
+              ((strpos('0123456789abcdef', substr(h, (b.bit // 4) + 1, 1)) - 1)
                >> (3 - (b.bit % 4))) & 1 = 1
               THEN 1 ELSE -1 END) > 0 THEN 1 ELSE 0 END AS v
   FROM toks CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS bit) b
@@ -975,6 +977,9 @@ def _simhash_near_dup(spark, sf_dir):
 # 16-bit blocks of bit_count(xor(block_a, block_b)) — exact, and it keeps
 # the DuckDB arithmetic in INTEGER range (no HUGEINT xor needed). The
 # unsigned view us = simhash + 2^64 (mod) reproduces shiftrightunsigned.
+# ``blocks`` is MATERIALIZED: inlined into each of its four references,
+# the query ran for minutes at sf1; computed once it takes about 9 s
+# there, with the same rows.
 _SIMHASH_NEAR_DUP_SQL = f"""
 WITH sh AS ({_SIMHASH_SQL}),
 u AS (
@@ -984,7 +989,7 @@ u AS (
                 ELSE 0 END AS us
   FROM sh
 ),
-blocks AS (
+blocks AS MATERIALIZED (
   SELECT doc_id, b.i AS block_idx,
          CAST((us // (CAST(1 AS HUGEINT) << (b.i * 16))) % 65536 AS INTEGER) AS bv
   FROM u CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) b

@@ -65,9 +65,9 @@ EXTRACT_SCHEMA = StructType(
 )
 
 
-#: fused boilerplate-strip + extraction output (block counters + content
-#: spans, then the full extraction struct fields)
-CONTENT_EXTRACT_SCHEMA = StructType(
+#: boilerplate-strip output (``functions.blocks.extract_main_content``):
+#: the main content, its {start, end} spans, then the block counters
+CONTENT_SCHEMA = StructType(
     [
         StructField("content_text", StringType()),
         StructField(
@@ -86,7 +86,11 @@ CONTENT_EXTRACT_SCHEMA = StructType(
         StructField("n_boilerplate_blocks", IntegerType()),
         StructField("content_words", IntegerType()),
     ]
-    + list(EXTRACT_SCHEMA.fields)
+)
+
+#: fused boilerplate-strip + extraction output
+CONTENT_EXTRACT_SCHEMA = StructType(
+    CONTENT_SCHEMA.fields + EXTRACT_SCHEMA.fields
 )
 
 

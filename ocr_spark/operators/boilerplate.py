@@ -13,28 +13,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-CONTENT_SPAN_SCHEMA = StructType(
-    [StructField("start", IntegerType()), StructField("end", IntegerType())]
-)
-
-CONTENT_SCHEMA = StructType(
-    [
-        StructField("content_text", StringType()),
-        StructField("content_spans", ArrayType(CONTENT_SPAN_SCHEMA)),
-        StructField("n_blocks", IntegerType()),
-        StructField("n_content_blocks", IntegerType()),
-        StructField("n_boilerplate_blocks", IntegerType()),
-        StructField("content_words", IntegerType()),
-    ]
-)
+from ocr_spark.functions.udfs import CONTENT_SCHEMA
 
 LAYOUT_SCHEMA = StructType(
     [
@@ -45,7 +26,7 @@ LAYOUT_SCHEMA = StructType(
     ]
 )
 
-CONTENT_COLUMNS = [f.name for f in CONTENT_SCHEMA.fields]
+CONTENT_COLUMNS = CONTENT_SCHEMA.fieldNames()
 
 
 @pandas_udf(CONTENT_SCHEMA)
@@ -56,16 +37,10 @@ def _content_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         cols: dict[str, list] = {name: [] for name in CONTENT_COLUMNS}
         for t in texts:
             out = extract_main_content(t if isinstance(t, str) else None)
-            cols["content_text"].append(out["content_text"])
-            cols["content_spans"].append(
-                [{"start": s, "end": e} for s, e in out["content_spans"]]
-            )
-            for k in (
-                "n_blocks",
-                "n_content_blocks",
-                "n_boilerplate_blocks",
-                "content_words",
-            ):
+            out["content_spans"] = [
+                {"start": s, "end": e} for s, e in out["content_spans"]
+            ]
+            for k in CONTENT_COLUMNS:
                 cols[k].append(out[k])
         yield pd.DataFrame(cols, columns=CONTENT_COLUMNS)
 

@@ -10,8 +10,8 @@ sampling — sharing work the naive operator chain recomputes:
   and the Jaccard posting lists, the anti-joins, the final projection —
   derives from that materialization, so the regex-heavy scoring and
   tokenize+md5 work (extraction-style, ~1000× compute per byte) never
-  re-executes (pass ``checkpoint_dir`` for reliable ``checkpoint`` on a
-  cluster — the same knob connected_components takes);
+  re-executes (reliable ``checkpoint`` instead when the session sets
+  ``spark.checkpoint.dir``, the same rule connected_components follows);
 * pair→cluster resolution and the final anti-join reuse the dedup
   operators unchanged.
 
@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import (
+    _checkpoint,
     connected_components,
     jaccard_pairs_from_exploded,
     shingle_ids_from_tokens,
@@ -45,7 +46,6 @@ def curate_corpus(
     strata_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Returns the curated corpus rows (id, stratum, lang_pred,
     quality_score): quality ≥ ``min_quality``, language ≠ ``drop_lang``,
@@ -78,9 +78,7 @@ def curate_corpus(
             shingle_ids_from_tokens(F.col("_toks"), k).alias("sh"),
         )
     )
-    from ocr_spark.operators.dedup import _checkpointer
-
-    kept = _checkpointer(kept, checkpoint_dir)(kept)
+    kept = _checkpoint(kept)
     # the shared shingle explosion: decontamination join + jaccard postings
     ex = kept.select(
         "id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle")
@@ -102,7 +100,7 @@ def curate_corpus(
 
     pairs = jaccard_pairs_from_exploded(clean_ex, jaccard_threshold, max_doc_freq)
     dropped = (
-        connected_components(pairs, checkpoint_dir=checkpoint_dir)
+        connected_components(pairs)
         .filter(F.col("cluster") != F.col("id"))
         .select("id")
     )
@@ -460,7 +458,7 @@ def _parse_byte_conf(v: str) -> int:
 
 
 def _should_broadcast_boiler(n_bytes: int, spark) -> bool:
-    """line_strip's 'auto' strategy: broadcast the boilerplate set only
+    """line_strip's join rule: broadcast the boilerplate set only
     when its UTF-8 payload fits the session's broadcast threshold with
     2x headroom (the UnsafeRow broadcast form roughly doubles string
     payloads). A non-positive threshold (broadcast disabled) always
@@ -477,7 +475,6 @@ def line_strip(
     delimiter: str = "\n",
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_boiler: bool | str = "auto",
 ) -> DataFrame:
     """Corpus-level line-frequency boilerplate strip (the CCNet/C4 gate:
     a line appearing verbatim in many documents is navigation chrome /
@@ -502,19 +499,18 @@ def line_strip(
     occurring in billions of documents never concentrates in one task;
     the strip itself is a broadcast LEFT ANTI join against the df>cap
     set, which is small by construction (≤ total_lines / max_doc_freq
-    distinct values, and in practice the boilerplate tail). The default
-    ``broadcast_boiler='auto'`` measures the set's actual bytes (one
-    eager localCheckpoint the join then reuses — no extra corpus pass)
-    and falls back to an AQE shuffle anti-join when it exceeds the
-    session broadcast threshold, so an aggressive ``max_doc_freq`` can
-    never OOM the driver; ``True``/``False`` force either plan (note
-    'auto' makes the call eager: it runs the df-count jobs at
-    construction time to make the plan decision). Reassembly is
-    ONE ``sort_array(collect_list(struct(pos, line)))`` per document —
-    bounded by lines-per-document, the same per-group contract as the T8
-    assembly (see extraction.assemble_docs' segmenting guard for the
-    pathological-document escape hatch). The delimiter is a literal, not
-    a regex (escaped before ``F.split``).
+    distinct values, and in practice the boilerplate tail). The plan
+    measures the set's actual bytes (one eager localCheckpoint the join
+    then reuses — no extra corpus pass) and falls back to an AQE shuffle
+    anti-join when it exceeds the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, so an aggressive
+    ``max_doc_freq`` can never OOM the driver. The measurement makes the
+    call eager: it runs the df-count jobs when the plan is built.
+    Reassembly is ONE ``sort_array(collect_list(struct(pos, line)))`` per
+    document — bounded by lines-per-document, the same per-group contract
+    as the T8 assembly (see extraction.assemble_docs' segmenting guard
+    for the pathological-document escape hatch). The delimiter is a
+    literal, not a regex (escaped before ``F.split``).
     """
     import re as _re
 
@@ -522,14 +518,6 @@ def line_strip(
         raise ValueError(f"max_doc_freq must be >= 1, got {max_doc_freq}")
     if delimiter == "":
         raise ValueError("delimiter must be non-empty")
-    if broadcast_boiler not in (True, False, "auto"):
-        # any other string is truthy — a typo like 'AUTO' or 'shuffle'
-        # would silently force-broadcast, the exact plan the size guard
-        # exists to prevent
-        raise ValueError(
-            f"broadcast_boiler must be True, False or 'auto', "
-            f"got {broadcast_boiler!r}"
-        )
     staged = docs.select(
         F.col(id_col).alias("id"),
         F.split(F.col(text_col), _re.escape(delimiter), -1).alias("_ls"),
@@ -546,27 +534,20 @@ def line_strip(
         .filter(F.col("_df") > max_doc_freq)
         .select("line")
     )
-    if broadcast_boiler == "auto":
-        # size-guarded default (round-4 advice): an aggressive
-        # max_doc_freq can make the df>cap set arbitrarily large, and
-        # force-broadcasting it would OOM the driver where a shuffle
-        # anti-join is the right plan. Materialize the set once
-        # (localCheckpoint — the anti-join reuses the same blocks, so
-        # the decision costs no extra corpus pass) and broadcast only
-        # when its measured bytes fit the session's broadcast threshold.
-        # The checkpoint blocks must outlive this function (the returned
-        # plan reads them), so there is no unpersist here; Spark's
-        # ContextCleaner reclaims them once the caller drops the frame.
-        # Note 'auto' makes plan CONSTRUCTION eager (it runs the df-count
-        # job to measure); pass True/False to stay fully lazy.
-        boiler = boiler.localCheckpoint(eager=True)
-        n_bytes = boiler.agg(
-            F.coalesce(F.sum(F.octet_length("line")), F.lit(0))
-        ).collect()[0][0]
-        broadcast_boiler = _should_broadcast_boiler(
-            int(n_bytes), docs.sparkSession
-        )
-    if broadcast_boiler:
+    # an aggressive max_doc_freq can make the df>cap set arbitrarily
+    # large, and force-broadcasting it would OOM the driver where a
+    # shuffle anti-join is the right plan. Materialize the set once
+    # (localCheckpoint — the anti-join reuses the same blocks, so the
+    # decision costs no extra corpus pass) and broadcast only when its
+    # measured bytes fit the session's broadcast threshold. The
+    # checkpoint blocks must outlive this function (the returned plan
+    # reads them), so there is no unpersist here; Spark's ContextCleaner
+    # reclaims them once the caller drops the frame.
+    boiler = boiler.localCheckpoint(eager=True)
+    n_bytes = boiler.agg(
+        F.coalesce(F.sum(F.octet_length("line")), F.lit(0))
+    ).collect()[0][0]
+    if _should_broadcast_boiler(int(n_bytes), docs.sparkSession):
         boiler = F.broadcast(boiler)
     kept = lines.join(boiler, "line", "left_anti")
     packed = F.struct(F.col("pos").alias("p"), F.col("line").alias("t"))
@@ -581,7 +562,7 @@ def line_strip(
     )
     # NULL text → 0 lines, stated explicitly: relying on size(NULL)
     # returning NULL (Spark 4 / ANSI) + coalesce would silently become
-    # -1 under legacy sizeOfNull semantics (round-4 advice)
+    # -1 under legacy sizeOfNull semantics
     totals = staged.select(
         "id",
         F.when(F.col("_ls").isNull(), F.lit(0))

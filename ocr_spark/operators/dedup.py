@@ -1324,9 +1324,9 @@ def _free_checkpoint(df: DataFrame) -> None:
     long-lived session the leaked blocks shrink execution memory and
     degrade every later query (measured on the bench suite: curate_corpus
     8.1 → 19.2 → 29.1 s over three consecutive reps, with persistent-RDD
-    count climbing 0 → 10 — the round-3 bench regression's root cause).
-    Best-effort: reliable checkpoints keep their files and merely drop
-    any block copies; non-LogicalRDD plans are a no-op."""
+    count climbing 0 → 10). Best-effort: reliable checkpoints keep their
+    files and merely drop any block copies; non-LogicalRDD plans are a
+    no-op."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
@@ -1335,17 +1335,16 @@ def _free_checkpoint(df: DataFrame) -> None:
         pass  # cleanup must never fail the query
 
 
-def _checkpointer(df: DataFrame, checkpoint_dir: str | None):
-    """Lineage-truncation strategy for iterative loops: ``localCheckpoint``
-    (executor-local blocks — fast, but an executor loss restarts the whole
-    loop) by default, or RELIABLE ``checkpoint`` into ``checkpoint_dir``
-    (HDFS/object-store path on a real cluster) when given — the documented
-    'swap on a real cluster' as a parameter instead of a code edit."""
-    if checkpoint_dir is None:
-        return lambda d: d.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
-    return lambda d: d.checkpoint(eager=True)
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Eager lineage truncation for iterative loops. RELIABLE
+    ``checkpoint`` when the session has a checkpoint directory
+    (``spark.checkpoint.dir`` at session start, or
+    ``SparkContext.setCheckpointDir``: an HDFS/object-store path on a
+    real cluster, where executor loss must not restart the whole loop);
+    otherwise ``localCheckpoint`` (executor-local blocks, fast)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)
 
 
 def connected_components(
@@ -1353,7 +1352,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over a pair list by iterated hash-min label
     propagation — pure DataFrame joins, no driver-side union-find, no
@@ -1369,15 +1367,14 @@ def connected_components(
     bucket-join cliques in 2. Convergence is detected by an any-label-
     changed probe (a join on the small vertex set — type-agnostic, so
     string/UUID ids work; a numeric sum witness would NULL out on them).
-    Lineage truncation per pass: ``localCheckpoint`` by default;
-    pass ``checkpoint_dir`` for reliable ``checkpoint`` on a real cluster
-    where executor loss must not restart the whole loop."""
-    ckpt = _checkpointer(pairs, checkpoint_dir)
+    Lineage truncation per pass: ``localCheckpoint``, or reliable
+    ``checkpoint`` when the session sets ``spark.checkpoint.dir`` (see
+    :func:`_checkpoint`)."""
     # materialize the pair list ONCE: edges and labels consume it in four
     # subtrees and the propagation loop re-reads edges every iteration —
     # without this the (possibly expensive) pair-generation pipeline would
     # re-execute per iteration
-    pairs = ckpt(pairs.select(id_a, id_b))
+    pairs = _checkpoint(pairs.select(id_a, id_b))
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -1387,7 +1384,7 @@ def connected_components(
         .distinct()
         .select("id", F.col("id").alias("cluster"))
     )
-    labels = ckpt(labels)
+    labels = _checkpoint(labels)
     for _ in range(max_iter):
         prop = edges.join(
             labels.withColumnRenamed("id", "src"), "src"
@@ -1412,7 +1409,7 @@ def connected_components(
                 ).alias("cluster"),
             )
         )
-        new_labels = ckpt(new_labels)
+        new_labels = _checkpoint(new_labels)
         # convergence witness: any label changed? A join on the (small)
         # vertex set — type-agnostic, unlike a numeric sum over ids (which
         # would be NULL for string/UUID ids and stop the loop on pass 1)
@@ -1444,7 +1441,6 @@ def resolve_clusters(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Full-corpus cluster assignment: (id, cluster, keep) for EVERY
     document — docs in no pair are their own singleton cluster; inside a
@@ -1456,7 +1452,7 @@ def resolve_clusters(
     Shape at 100 TB: the component computation touches only pair vertices
     (tiny vs the corpus); the corpus-wide assignment is one broadcast-able
     left join."""
-    comp = connected_components(pairs, id_a, id_b, checkpoint_dir=checkpoint_dir)
+    comp = connected_components(pairs, id_a, id_b)
     return (
         docs.select(F.col(id_col).alias("id"))
         .join(comp, "id", "left")
@@ -1472,13 +1468,12 @@ def dedup_corpus(
     pairs: DataFrame,
     docs: DataFrame,
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The materialized deduplicated corpus: keep one document (min id) per
     duplicate cluster, all columns preserved — docs anti-joined against the
     dropped member set."""
     dropped = (
-        connected_components(pairs, checkpoint_dir=checkpoint_dir)
+        connected_components(pairs)
         .filter(F.col("cluster") != F.col("id"))
         .select(F.col("id").alias(id_col))
     )

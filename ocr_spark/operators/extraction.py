@@ -11,18 +11,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark.functions.udfs import make_extract_udf
+from ocr_spark.functions.udfs import (
+    CONTENT_EXTRACT_SCHEMA,
+    EXTRACT_SCHEMA,
+    make_extract_udf,
+)
 
 #: columns added by extract_turns
-OUTPUT_COLUMNS = [
-    "extracted_text",
-    "normalized_text",
-    "dictionary_corrections",
-    "spelling_changes",
-    "quality",
-    "unknown_words",
-    "spans",
-]
+OUTPUT_COLUMNS = EXTRACT_SCHEMA.fieldNames()
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 16) -> DataFrame:
@@ -44,7 +40,6 @@ def extract_turns(
     use_dictionary: bool = True,
     use_spelling: bool = True,
     fuzzy: bool = False,
-    keep_struct: bool = False,
     extra_kamus: frozenset | None = None,
 ) -> DataFrame:
     """Apply the fused extraction UDF and flatten the result struct into the
@@ -53,22 +48,13 @@ def extract_turns(
     tracking, dictionary-match scoring, and the fuzzy candidate set)."""
     udf = make_extract_udf(use_dictionary, use_spelling, fuzzy, extra_kamus)
     out = df.withColumn("_x", udf(F.col(text_col)))
-    if keep_struct:
-        return out
     for name in OUTPUT_COLUMNS:
         out = out.withColumn(name, F.col(f"_x.{name}"))
     return out.drop("_x")
 
 
 #: columns added by extract_content_turns (fused pipeline)
-CONTENT_EXTRACT_COLUMNS = [
-    "content_text",
-    "content_spans",
-    "n_blocks",
-    "n_content_blocks",
-    "n_boilerplate_blocks",
-    "content_words",
-] + OUTPUT_COLUMNS
+CONTENT_EXTRACT_COLUMNS = CONTENT_EXTRACT_SCHEMA.fieldNames()
 
 
 def extract_content_turns(
@@ -102,7 +88,6 @@ def assemble_conversations(
     conv_col: str = "conv_id",
     idx_col: str = "turn_idx",
     text_col: str = "normalized_text",
-    with_headers: bool = True,
     max_turns: int | None = None,
 ) -> DataFrame:
     """Reassemble per-conversation documents under stable (conv_id, turn_idx)
@@ -121,14 +106,10 @@ def assemble_conversations(
     turns regardless of conversation length, same single shuffle, and
     concatenating a conversation's parts in part order with the same
     '\\n\\n' separator reconstructs the unsegmented document exactly
-    (tested). The default path (``max_turns=None``) is byte-identical to
-    before — segmenting is opt-in for corpora with pathological
+    (tested). The default (``max_turns=None``) builds one document per
+    conversation — segmenting is opt-in for corpora with pathological
     conversation lengths."""
-    unit = (
-        F.concat(page_header(F.col(idx_col)), F.lit("\n"), F.col(text_col))
-        if with_headers
-        else F.col(text_col)
-    )
+    unit = F.concat(page_header(F.col(idx_col)), F.lit("\n"), F.col(text_col))
     packed = F.struct(F.col(idx_col).alias("i"), unit.alias("t"))
     nonempty = df.filter(
         F.col(text_col).isNotNull() & (F.length(F.trim(F.col(text_col))) > 0)

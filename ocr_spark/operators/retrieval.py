@@ -299,7 +299,6 @@ def tfidf_topk_terms(
     k: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_df: bool = True,
 ) -> DataFrame:
     """Per-document top-k characteristic terms by tf·idf (Sparck Jones
     1972; the smooth-idf variant standardized by scikit-learn:
@@ -316,11 +315,9 @@ def tfidf_topk_terms(
 
     Scale shape: one hash aggregate on (id, term) builds the tf table
     (map-side combine absorbs within-doc repeats), one vocabulary-sized
-    aggregate derives df, the tf stream joins the df table (broadcast by
-    default — Zipf bounds real vocabularies ~10⁷ rows; set
-    ``broadcast_df=False`` to shuffle-join on the fixed-width term key),
-    then ONE per-document window over each doc's distinct terms. No UDF,
-    no driver state."""
+    aggregate derives df, the tf stream joins the broadcast df table
+    (Zipf bounds real vocabularies ~10⁷ rows), then ONE per-document
+    window over each doc's distinct terms. No UDF, no driver state."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     from pyspark.sql import Window
@@ -333,11 +330,10 @@ def tfidf_topk_terms(
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
-    maybe_b = F.broadcast if broadcast_df else (lambda d: d)
     idf = F.log((F.col("_n_docs") + 1.0) / (F.col("_df") + 1.0)) + 1.0
     w = Window.partitionBy("id").orderBy(F.col("score").desc(), F.col("term"))
     return (
-        tf.join(maybe_b(dfreq), "term")
+        tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(n_docs))
         .select("id", "term", "tf", F.round(F.col("tf") * idf, 4).alias("score"))
         .withColumn("rank", F.row_number().over(w))

@@ -283,7 +283,6 @@ def leakage_safe_split(
     docs: DataFrame,
     splits: tuple[tuple[str, int], ...] = DEFAULT_SPLITS,
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup-aware train/val/test assignment: hash the CLUSTER id, not
     the document id, so every member of a near-duplicate cluster lands in
@@ -303,9 +302,7 @@ def leakage_safe_split(
     """
     from ocr_spark.operators.dedup import resolve_clusters
 
-    resolved = resolve_clusters(
-        pairs, docs, id_col=id_col, checkpoint_dir=checkpoint_dir
-    )
+    resolved = resolve_clusters(pairs, docs, id_col=id_col)
     return resolved.select(
         F.col("id").alias(id_col),
         "cluster",

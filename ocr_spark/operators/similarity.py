@@ -1110,7 +1110,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     keep: str = "far",
     max_cell_size: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """SemDeDup: embedding-space deduplication via k-means cells. Assign
     every vector to its nearest shipped-quantizer centroid, score only
@@ -1136,7 +1135,7 @@ def semantic_dedup(
     pairs = semantic_dedup_pairs(assigned, threshold, max_cell_size)
     from ocr_spark.operators.dedup import connected_components
 
-    comp = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+    comp = connected_components(pairs)
     if keep == "min_id":
         flags = comp.select(
             "id", "cluster", (F.col("cluster") == F.col("id")).alias("keep")

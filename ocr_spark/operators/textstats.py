@@ -488,7 +488,6 @@ def with_bigram_nll(
     id_col: str = "doc_id",
     alpha: float = 1.0,
     lam: float = 0.75,
-    broadcast_counts: bool = True,
 ) -> DataFrame:
     """Per-document mean negative log-likelihood under an INTERPOLATED
     bigram LM — the CCNet/KenLM perplexity filter (Wenzek et al. 2020)
@@ -513,9 +512,7 @@ def with_bigram_nll(
 
     Shape at 100 TB: bigram + unigram counts are each ONE map-combined
     aggregate; scoring is the exploded pair stream joined against three
-    vocabulary-bounded tables (broadcast by default — real bigram tables
-    are ~10⁸ rows; set ``broadcast_counts=False`` to shuffle-join on the
-    fixed-width token keys instead) + one per-doc aggregate. No UDF, no
+    vocabulary-bounded broadcast tables + one per-doc aggregate. No UDF, no
     driver state."""
     if counts is None:
         counts = bigram_counts(df, text_col)
@@ -528,7 +525,6 @@ def with_bigram_nll(
     totals = uni.agg(
         F.sum("_u_cnt").alias("_lm_n"), F.count(F.lit(1)).alias("_lm_v")
     )
-    maybe_b = F.broadcast if broadcast_counts else (lambda d: d)
     scored = _bigram_stream(
         df.select(F.col(id_col).alias("id"), text_col), text_col, "id"
     )
@@ -540,9 +536,9 @@ def with_bigram_nll(
     )
     lp = F.log(F.lit(lam) * p_bi + F.lit(1.0 - lam) * p_uni)
     return (
-        scored.join(maybe_b(counts), ["prev", "cur"], "left")
-        .join(maybe_b(ctx), "prev", "left")
-        .join(maybe_b(uni), "cur", "left")
+        scored.join(F.broadcast(counts), ["prev", "cur"], "left")
+        .join(F.broadcast(ctx), "prev", "left")
+        .join(F.broadcast(uni), "cur", "left")
         .crossJoin(F.broadcast(totals))
         .groupBy("id")
         .agg(
@@ -557,7 +553,6 @@ def pmi_collocations(
     text_col: str = "text",
     min_count: int = 5,
     k: int = 20,
-    broadcast_counts: bool = True,
 ) -> DataFrame:
     """Top-k bigram collocations by pointwise mutual information
     (Church & Hanks, Computational Linguistics 1990) — the classic
@@ -579,9 +574,8 @@ def pmi_collocations(
 
     Shape at 100 TB: bigram and unigram counts are each ONE map-combined
     aggregate (outputs grow with vocabulary, not tokens — Zipf-bounded);
-    the min_count filter drops the hapax tail before the scoring joins
-    (broadcast by default; ``broadcast_counts=False`` shuffle-joins on
-    the fixed-width token keys for 10⁸⁺-row vocabularies); the global
+    the min_count filter drops the hapax tail before the broadcast
+    scoring joins; the global
     top-k is orderBy+limit → TakeOrderedAndProject (per-partition
     partial top-k), never a full sort. No UDF, no driver state.
     """
@@ -592,7 +586,6 @@ def pmi_collocations(
     bc = bigram_counts(df, text_col).filter(F.col("cnt") >= min_count)
     uni = unigram_counts(df, text_col)
     totals = uni.agg(F.sum("cnt").alias("_n"))
-    maybe_b = F.broadcast if broadcast_counts else (lambda d: d)
     prev_u = uni.select(
         F.col("token").alias("prev"), F.col("cnt").alias("_ca")
     )
@@ -605,8 +598,8 @@ def pmi_collocations(
         4,
     )
     return (
-        bc.join(maybe_b(prev_u), "prev")
-        .join(maybe_b(cur_u), "cur")
+        bc.join(F.broadcast(prev_u), "prev")
+        .join(F.broadcast(cur_u), "cur")
         .crossJoin(F.broadcast(totals))
         .select("prev", "cur", "cnt", pmi.alias("pmi"))
         .orderBy(F.desc("pmi"), F.asc("prev"), F.asc("cur"))

@@ -130,7 +130,6 @@ def sessionize_stream(
     stream: DataFrame,
     gap: str = "30 minutes",
     watermark: str = "1 hour",
-    with_headers: bool = True,
 ) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: assemble
     each conversation's turns into one document, emitting when the
@@ -159,13 +158,9 @@ def sessionize_stream(
         # filter BEFORE sorting: None text inside the sort key would raise
         # on a (same-idx, None) vs (same-idx, str) comparison
         nonempty = [(i, t) for i, t in turns if t is not None and t.strip()]
-        units = []
-        for i, t in sorted(nonempty):
-            if with_headers:
-                units.append(f"--- Halaman {i + 1} ---\n{t}")
-            else:
-                units.append(t)
-        return "\n\n".join(units)
+        return "\n\n".join(
+            f"--- Halaman {i + 1} ---\n{t}" for i, t in sorted(nonempty)
+        )
 
     def fn(key, pdfs, state: GroupState):
         if state.hasTimedOut:

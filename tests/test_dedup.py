@@ -550,25 +550,43 @@ def test_simhash_vectorized_matches_scalar_reference():
         assert v == scalar(toks or [])
 
 
-def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
-    """The checkpoint_dir knob swaps localCheckpoint for reliable
+@pytest.fixture
+def session_checkpoint_dir(spark, tmp_path):
+    """A checkpoint directory set on the shared session for one test, and
+    reset afterwards: left set, every later component test would
+    silently switch to reliable checkpoints."""
+    sc = spark.sparkContext
+    old = sc._jsc.sc().getCheckpointDir()
+    ckdir = tmp_path / "reliable_ck"
+    sc.setCheckpointDir(str(ckdir))
+    yield ckdir
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(old)
+
+
+def test_connected_components_reliable_checkpoint_path(
+    spark, session_checkpoint_dir
+):
+    """A session checkpoint directory (``spark.checkpoint.dir`` or
+    ``setCheckpointDir``) swaps localCheckpoint for reliable
     checkpointing (cluster deployments where executor loss must not
     restart the loop) — same labels, and checkpoint files actually land
-    in the given directory."""
-    import pathlib
-
+    in that directory."""
     from ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
-    ckdir = str(tmp_path / "reliable_ck")
     got = {
-        (r["id"], r["cluster"])
-        for r in connected_components(pairs, checkpoint_dir=ckdir).collect()
+        (r["id"], r["cluster"]) for r in connected_components(pairs).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    assert any(pathlib.Path(ckdir).rglob("*"))  # reliable files written
+    assert any(session_checkpoint_dir.rglob("*"))  # reliable files written
+
+
+def test_shared_session_has_no_checkpoint_dir(spark):
+    """Runs after the reliable-checkpoint test: its fixture must leave
+    the shared session on localCheckpoint."""
+    assert spark.sparkContext.getCheckpointDir() is None
 
 
 def test_minhash_family_positions_are_independent_permutations():

@@ -5,6 +5,8 @@ greater threshold boundary, and the identity property at an
 unreachable threshold."""
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from ocr_spark.operators.curation import line_strip
@@ -43,13 +45,20 @@ def _ref(docs, max_doc_freq, delim="\n"):
     return out
 
 
-def _run(spark, docs, **kw):
-    sdf = spark.createDataFrame(docs, "doc_id long, text string")
-    rows = line_strip(sdf, **kw).collect()
-    return {
+def _strip_plan(spark, docs, **kw):
+    """(rows, executed plan string) of one line_strip call."""
+    out = line_strip(
+        spark.createDataFrame(docs, "doc_id long, text string"), **kw
+    )
+    rows = {
         r["doc_id"]: (r["clean_text"], r["n_lines"], r["n_removed"])
-        for r in rows
+        for r in out.collect()
     }
+    return rows, out._jdf.queryExecution().executedPlan().toString()
+
+
+def _run(spark, docs, **kw):
+    return _strip_plan(spark, docs, **kw)[0]
 
 
 def test_matches_python_reference(spark):
@@ -118,61 +127,56 @@ def test_validations(spark):
         line_strip(sdf, delimiter="")
 
 
+@contextmanager
+def _broadcast_threshold(spark, value):
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value)
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_auto_strategy_size_guard(spark):
-    """'auto' (the default) must produce identical rows to both forced
-    plans at an aggressive threshold, and must NOT broadcast when the
-    session's broadcast threshold disables it."""
+    """The strip join follows the session's broadcast threshold: at -1
+    it is the shuffle anti-join, at 1g the broadcast, and both plans
+    return identical rows at an aggressive cap."""
     from ocr_spark.operators.curation import (
         _parse_byte_conf,
         _should_broadcast_boiler,
     )
 
     # aggressive cap: every shared line is boilerplate
-    want = _run(spark, DOCS, max_doc_freq=1, broadcast_boiler=True)
-    assert _run(spark, DOCS, max_doc_freq=1, broadcast_boiler="auto") == want
-    assert _run(spark, DOCS, max_doc_freq=1, broadcast_boiler=False) == want
+    with _broadcast_threshold(spark, "-1"):
+        assert not _should_broadcast_boiler(0, spark)
+        shuffled, plan = _strip_plan(spark, DOCS, max_doc_freq=1)
+        assert "LeftAnti" in plan
+        assert "BroadcastHashJoin" not in plan
+    with _broadcast_threshold(spark, "1g"):
+        broadcast, plan = _strip_plan(spark, DOCS, max_doc_freq=1)
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert shuffled == broadcast == _ref(DOCS, 1)
 
     assert _parse_byte_conf("10485760") == 10 << 20
     assert _parse_byte_conf("10MB") == 10 << 20
     assert _parse_byte_conf("1g") == 1 << 30
     assert _parse_byte_conf("512b") == 512
     assert _parse_byte_conf("-1") == -1
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert not _should_broadcast_boiler(0, spark)
-        sdf = spark.createDataFrame(DOCS, "doc_id long, text string")
-        plan = (
-            line_strip(sdf, max_doc_freq=1)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        # threshold disabled -> auto must route to the shuffle anti-join
-        assert "LeftAnti" in plan
-        assert "BroadcastHashJoin" not in plan
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64b")
+    with _broadcast_threshold(spark, "64b"):
         assert not _should_broadcast_boiler(64, spark)  # 2x headroom
         assert _should_broadcast_boiler(32, spark)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_plan_shape(spark):
-    """The strip join must be a broadcast anti-join (no shuffle on the
-    corpus side of the strip) and the df count a two-stage aggregate."""
-    sdf = spark.createDataFrame(DOCS, "doc_id long, text string")
-    plan = line_strip(sdf)._jdf.queryExecution().executedPlan().toString()
+    """The strip join is a broadcast anti-join (no shuffle on the corpus
+    side of the strip) while the boilerplate set fits the session's
+    threshold, and a shuffle anti-join once broadcasting is off."""
+    with _broadcast_threshold(spark, "1g"):
+        _, plan = _strip_plan(spark, DOCS)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    sdf2 = spark.createDataFrame(DOCS, "doc_id long, text string")
-    plan2 = (
-        line_strip(sdf2, broadcast_boiler=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "LeftAnti" in plan2
+    with _broadcast_threshold(spark, "-1"):
+        _, plan = _strip_plan(spark, DOCS)
+    assert "LeftAnti" in plan and "BroadcastHashJoin" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -16,6 +16,7 @@ import gc
 import hashlib
 import os
 import sys
+import tempfile
 import time
 
 TABLES = [
@@ -79,16 +80,22 @@ def run(
     import duckdb
 
     import __spark_entry__ as entrymod
-    from ocr_spark.session import get_spark
+    from ocr_spark.session import get_spark, visible_memory_bytes
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
-    # bound the oracle's buffer pool: DuckDB's default limit is 80% of
-    # RAM, and at the sf1 tier its HUGEINT joins grow the shared
-    # process's RSS until the NEXT Spark query's executors stall in page
-    # faults — measured 38x inflation (bloom_decontaminate 125 s in the
-    # sweep vs 3.3 s isolated). The oracles all fit comfortably in 24 GB.
-    con.execute("SET memory_limit='24GB'")
+    # DuckDB shares the process with the Spark driver, whose heap takes a
+    # third of the visible memory; a third more for DuckDB's buffer pool
+    # lets both fit. A pool sized past the machine lets one large oracle
+    # grow the process until the kernel OOM-kills it, and a swollen pool
+    # stalls the next Spark query's executors in page faults. Larger
+    # intermediates spill to a temporary directory, not to DuckDB's
+    # default ``.tmp`` under the working directory.
+    mem = visible_memory_bytes()
+    limit = f"{mem // 3 >> 20}MiB" if mem else "24GB"
+    spill = tempfile.TemporaryDirectory(prefix="oracle-spill-")
+    con.execute(f"SET memory_limit='{limit}'")
+    con.execute(f"SET temp_directory='{spill.name}'")
     for t in TABLES:
         # partial tiers (data/sf1 ships documents+embeddings only) register
         # what exists; queries over missing tables fail loudly at run time
@@ -182,6 +189,8 @@ def run(
                     print(f"     oracle: {b[:200]}")
                     break
     spark.stop()
+    con.close()
+    spill.cleanup()
     return results
 
 
