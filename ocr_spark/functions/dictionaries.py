@@ -413,3 +413,35 @@ SYMBOL_SPLIT = re.compile(r"([^\w\-\']+)")
 WORD_CORE = re.compile(r"^[\w\-\']+$")
 #: >=3-letter runs, the unit of scoring and unknown-word tracking.
 LETTER_RUN = re.compile(r"[a-zA-Z]{3,}")
+
+#: One RE2 pattern (``pyarrow.compute.match_substring_regex``) that matches
+#: a text's ``textops._probe_fold`` whenever T1, non-fuzzy T3 or T4 can
+#: change the text: a necessary condition for all three, built from the
+#: probes above. RE2 is a DFA, so a batch pays one scan for all five arms,
+#: however many alternatives they hold. The arms:
+#:
+#: - every ``MULTI_WORD_RULES`` probe (``MULTI_WORD_PROBE``);
+#: - a ``PHRASE_MAP`` key between ``PHRASE_KEY_PROBE``'s boundaries, with
+#:   RE2's ASCII ``[0-9A-Za-z_]`` for sre's Unicode ``\w``: a character
+#:   outside the Unicode class is outside the ASCII one too, so the arm
+#:   passes wherever the probe does;
+#: - ``\p{Nd}``, sre's Unicode ``\d`` (``HAS_DIGIT``): ``DIGIT_GLUE_PROBE``
+#:   and every currency rule whose probe needs a digit, a ``25``, ``19``,
+#:   ``1g`` or ``20``;
+#: - the literals the other currency probes test on the fold: ``rp`` (the
+#:   case-sensitive ``Rp``), the month names, ``ribu``/``ratus``, ``kasm``,
+#:   ``sukati`` and ``maineh``;
+#: - ``_P1H_LOW``.
+#:
+#: When it misses, T1 and T3 return their text as it is, so T4 probes the
+#: same fold, and misses too.
+CORRECTION_GATE: str = "|".join(
+    "(?:" + arm + ")"
+    for arm in (
+        MULTI_WORD_PROBE.pattern,
+        r"(?:^|[^0-9A-Za-z_])(?:" + trie_pattern(PHRASE_MAP) + r")(?:$|[^0-9A-Za-z_\-'])",
+        r"\p{Nd}",
+        trie_pattern(("rp", *MONTH_NAMES, "ribu", "ratus", "kasm", "sukati", "maineh")),
+        _P1H_LOW.pattern,
+    )
+)

@@ -5,7 +5,8 @@ Spark-independent single-row semantics for the reference's text pipeline
 token-level dictionary correction -> currency/number normalization ->
 old-spelling (EYD) normalization -> quality scoring -> unknown-word
 extraction. These functions are the vectorization unit: ``ocr_spark.
-functions.udfs`` maps them over Arrow record batches inside a pandas UDF.
+functions.udfs`` hands each Arrow batch to ``extract_batch`` inside an
+Arrow UDF.
 
 Everything here matches the reference's observable output byte-for-byte
 (golden tests in ``tests/test_golden.py`` pin this against fixtures produced
@@ -28,6 +29,9 @@ import re
 import sys
 from bisect import bisect_right
 from typing import Optional
+
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ocr_spark.functions import dictionaries as D
 
@@ -732,14 +736,23 @@ def extract_turn(
     text when the final text is empty — the reference's exact fallback).
     """
     raw = text or ""
-    corrected = raw
-    n_corr = 0
-    spans: list[Span] = []
-
     if use_dictionary and raw:
         corrected, n_corr, spans = correct_with_stats(raw, fuzzy=fuzzy, extra_kamus=extra_kamus)
         corrected, spans = normalize_currency(corrected, spans)
+        return _finish(raw, corrected, n_corr, spans, use_spelling, confidences, extra_kamus)
+    return _finish(raw, raw, 0, [], use_spelling, confidences, extra_kamus)
 
+
+def _finish(
+    raw: str,
+    corrected: str,
+    n_corr: int,
+    spans: list[Span],
+    use_spelling: bool,
+    confidences: Optional[list[float]],
+    extra_kamus: Optional[frozenset],
+) -> dict:
+    """T5, A6 and T7 on the dictionary stages' output ``corrected``."""
     if use_spelling and corrected:
         normalized, n_spell, spans = normalize_spelling(corrected, spans)
     else:
@@ -759,3 +772,52 @@ def extract_turn(
         "unknown_words": _unknown(words, kamus),
         "spans": spans,
     }
+
+
+def _gate(folds: list[str]) -> Optional[list[bool]]:
+    """Whether ``D.CORRECTION_GATE`` matches each of ``folds``: one RE2 scan
+    of the batch. None when a fold does not encode to UTF-8 (a lone
+    surrogate), so no turn can be skipped."""
+    try:
+        folded = pa.array(folds, pa.string())
+    except UnicodeEncodeError:
+        return None
+    return pc.match_substring_regex(folded, D.CORRECTION_GATE).to_pylist()
+
+
+def extract_batch(
+    texts: list[Optional[str]],
+    confidences: Optional[list[Optional[list[float]]]] = None,
+    use_dictionary: bool = True,
+    use_spelling: bool = True,
+    fuzzy: bool = False,
+    extra_kamus: Optional[frozenset] = None,
+) -> list[dict]:
+    """``[extract_turn(t, ..., c, ...) for t, c in zip(texts, confidences)]``.
+
+    One scan of the batch's folds for ``D.CORRECTION_GATE`` finds the turns
+    that T1, T3 or T4 may change. The rest skip the three stages: for them
+    the stages return the text as it is, with no correction and no span.
+    Fuzzy matching can change any unknown word, so then every turn runs
+    every stage.
+    """
+    global _fold_memo
+    raws = [t or "" for t in texts]
+    confs = [None] * len(raws) if confidences is None else confidences
+    gate = None
+    if use_dictionary and not fuzzy:
+        folds = [_probe_fold(r) for r in raws]
+        gate = _gate(folds)
+    if gate is None:
+        return [
+            extract_turn(r, use_dictionary, use_spelling, c, fuzzy, extra_kamus)
+            for r, c in zip(raws, confs)
+        ]
+    out = []
+    for raw, fold, hit, conf in zip(raws, folds, gate, confs):
+        _fold_memo = (raw, fold)  # the stages take this fold, not a new one
+        if hit:
+            out.append(extract_turn(raw, use_dictionary, use_spelling, conf, fuzzy, extra_kamus))
+        else:
+            out.append(_finish(raw, raw, 0, [], use_spelling, conf, extra_kamus))
+    return out

@@ -1,27 +1,26 @@
-"""Vectorized (Arrow-batched) pandas UDFs wrapping the extraction core.
+"""Arrow UDFs wrapping the extraction core.
 
-One fused scalar pandas UDF carries the whole per-turn pipeline
+One fused iterator ``arrow_udf`` carries the whole per-turn pipeline
 (SURVEY.md §2.7): T1 multi-word -> T2/T3 word correction -> T4 currency ->
 T5 spelling -> A6 scoring -> T7 unknown words, returning a single struct so
-each turn crosses the JVM<->Python boundary exactly once. Iterator-of-series
-form amortizes per-task setup (the compiled rule tables import once per
-Python worker process, not per batch), and the workers come from
+each turn crosses the JVM<->Python boundary exactly once. The iterator form
+amortizes per-task setup (the compiled rule tables import once per Python
+worker process, not per batch), and the workers come from
 ``ocr_spark._daemon``, which imports pyspark from site-packages, so a task's
 setup does not re-read ``pyspark.zip``.
 
-No per-row Python crosses the boundary — batches arrive as Arrow record
-batches and the struct result returns as one Arrow array (input_hint: "no
-per-row Python" refers to this boundary; inside the batch, string-mutation
-work is inherently per-string, exactly like Spark's own codegen'd string
-kernels are per-value).
+Each Arrow batch goes to ``textops.extract_batch`` as one list, which gates
+the batch's dictionary stages with one RE2 scan, and each output column
+returns as one Arrow array built from Python lists: no pandas frame sits
+between the Arrow batch and the core.
 """
 from __future__ import annotations
 
-from itertools import repeat
 from typing import Iterator
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -115,44 +114,38 @@ def make_extract_udf(
     deterministic scalar UDF. ``extra_kamus`` is the epoch snapshot of
     approved learned words (SURVEY.md §7.4): vocab-sized, so closure
     capture ships it once per task via the serialized UDF — the same cost
-    profile as an explicit broadcast variable. The batch result is
-    assembled column-wise (dict-of-lists) — ``DataFrame.from_records``
-    over per-row dicts costs ~15% of the whole UDF at steady state.
+    profile as an explicit broadcast variable. Each batch is read with
+    ``pa.array(...).to_pylist()``, which also takes the pandas Series a
+    caller of ``.func`` may pass, and the result is one ``pa.StructArray``
+    of columns built by ``pa.array`` (spans as tuples, quality as dicts).
     """
     schema = CONTENT_EXTRACT_SCHEMA if content else EXTRACT_SCHEMA
-    names = schema.fieldNames()
+    fields = list(to_arrow_type(schema))
 
-    @pandas_udf(schema)
-    def extract(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    @arrow_udf(schema)
+    def extract(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         # import inside the worker: rule tables compile once per process
         from ocr_spark.functions.blocks import extract_main_content
-        from ocr_spark.functions.textops import extract_turn
+        from ocr_spark.functions.textops import extract_batch
 
         for batch in batches:
-            # two input columns arrive as a tuple of series
-            texts, confs = batch if isinstance(batch, tuple) else (batch, repeat(None))
-            cols: dict[str, list] = {name: [] for name in names}
-            for t, c in zip(texts, confs):
-                t = t if isinstance(t, str) else None
-                if content:
-                    block = extract_main_content(t)
-                    t = block["content_text"]
-                out = extract_turn(
-                    t,
-                    use_dictionary=use_dictionary,
-                    use_spelling=use_spelling,
-                    confidences=list(c) if c is not None and len(c) else None,
-                    fuzzy=fuzzy,
-                    extra_kamus=extra_kamus,
-                )
-                out["spans"] = [{"start": s, "end": e, "kind": k} for s, e, k in out["spans"]]
-                if content:
-                    out.update(block)
-                    out["content_spans"] = [
-                        {"start": s, "end": e} for s, e in block["content_spans"]
-                    ]
-                for name in names:
-                    cols[name].append(out[name])
-            yield pd.DataFrame(cols, columns=names)
+            # two input columns arrive as a tuple of arrays
+            texts, confs = batch if isinstance(batch, tuple) else (batch, None)
+            texts = pa.array(texts).to_pylist()
+            if confs is not None:
+                confs = [c or None for c in pa.array(confs).to_pylist()]
+            if content:
+                blocks = [extract_main_content(t) for t in texts]
+                texts = [block["content_text"] for block in blocks]
+            rows = extract_batch(
+                texts, confs, use_dictionary, use_spelling, fuzzy, extra_kamus
+            )
+            if content:
+                for row, block in zip(rows, blocks):
+                    row.update(block)
+            yield pa.StructArray.from_arrays(
+                [pa.array([row[f.name] for row in rows], type=f.type) for f in fields],
+                fields=fields,
+            )
 
     return extract

@@ -1315,22 +1315,32 @@ def simhash_near_duplicates(
 
 def _free_checkpoint(df: DataFrame) -> None:
     """Release the executor blocks behind an eager checkpoint the
-    computation has FINISHED with. ``localCheckpoint`` truncates lineage,
-    so this is only safe on intermediates that are never read again —
-    here, the superseded label generations and the pair materialization
-    of the connected-components loop. Spark's ContextCleaner would free
-    these eventually (weak refs + driver GC), but "eventually" is what
-    let every iterative query leak one pinned generation per pass: in a
-    long-lived session the leaked blocks shrink execution memory and
-    degrade every later query (measured on the bench suite: curate_corpus
-    8.1 → 19.2 → 29.1 s over three consecutive reps, with persistent-RDD
-    count climbing 0 → 10). Best-effort: reliable checkpoints keep their
-    files and merely drop any block copies; non-LogicalRDD plans are a
+    computation has FINISHED with, and delete a reliable checkpoint's
+    files. Both truncate lineage, so this is only safe on intermediates
+    that are never read again — here, the superseded label generations
+    and the pair materialization of the connected-components loop.
+    Spark's ContextCleaner would free the blocks eventually (weak refs +
+    driver GC), but "eventually" is what let every iterative query leak
+    one pinned generation per pass: in a long-lived session the leaked
+    blocks shrink execution memory and degrade every later query
+    (measured on the bench suite: curate_corpus 8.1 → 19.2 → 29.1 s over
+    three consecutive reps, with persistent-RDD count climbing 0 → 10).
+    The cleaner deletes no checkpoint files unless
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set, so each
+    superseded generation would stay under the checkpoint directory until
+    the directory itself goes. Best-effort: non-LogicalRDD plans are a
     no-op."""
     try:
         plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return
+        rdd = plan.rdd()
+        rdd.unpersist(False)
+        ckfile = rdd.getCheckpointFile()  # defined for a reliable checkpoint
+        if ckfile.isDefined():
+            sc = df.sparkSession.sparkContext
+            path = sc._jvm.org.apache.hadoop.fs.Path(ckfile.get())
+            path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
     except Exception:
         pass  # cleanup must never fail the query
 

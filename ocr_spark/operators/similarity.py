@@ -919,7 +919,25 @@ def _grouped_bucket_pairs(
     max_bucket_size: int | None,
 ) -> DataFrame:
     """Score one LSH bucket's pair block per Arrow group (see
-    :func:`embedding_near_duplicates`).
+    :func:`embedding_near_duplicates`), then round, filter and deduplicate
+    JVM-side: (id_a, id_b, cos)."""
+    return (
+        _bucket_pair_blocks(bucketed, id_type, threshold - 1e-6, max_bucket_size)
+        .select("id_a", "id_b", F.round(F.col("cos_raw"), 6).alias("cos"))
+        .filter(F.col("cos") >= threshold)
+        .distinct()
+    )
+
+
+def _bucket_pair_blocks(
+    bucketed: DataFrame,
+    id_type,
+    guard: float,
+    cap: int | None,
+) -> DataFrame:
+    """(id_a, id_b, cos_raw) of each within-bucket pair whose raw cosine is
+    at least ``guard``, scored one bucket's pair block per Arrow group;
+    buckets of more than ``cap`` members score nothing.
 
     Bit-identity contract: every float op replicates the scalar sequence
     of a bucket self-join scored with :func:`dot`/:func:`norm` — norms
@@ -929,7 +947,8 @@ def _grouped_bucket_pairs(
     one div. numpy float64 elementwise ops are IEEE-754 correctly rounded,
     so raw cosines equal the JVM higher-order-fold bit-for-bit; the exact
     HALF_UP ``round(·, 6)`` + threshold + distinct run JVM-side on the
-    survivor superset (raw ≥ threshold − 1e-6). Pair ordering: rows are
+    survivor superset (``guard`` = threshold − 1e-6, see
+    :func:`_grouped_bucket_pairs`). Pair ordering: rows are
     sorted by id inside the group (UTF-8/codepoint order agree, and
     numeric order is numeric), so upper-triangle ⇔ ``id_a < id_b``, the
     self-join's predicate."""
@@ -942,8 +961,6 @@ def _grouped_bucket_pairs(
             StructField("cos_raw", DoubleType()),
         ]
     )
-    guard = threshold - 1e-6
-    cap = max_bucket_size
 
     def score(pdf):
         import numpy as np
@@ -999,13 +1016,7 @@ def _grouped_bucket_pairs(
             }
         )
 
-    return (
-        bucketed.groupBy("bucket")
-        .applyInPandas(score, out_schema)
-        .select("id_a", "id_b", F.round(F.col("cos_raw"), 6).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-        .distinct()
-    )
+    return bucketed.groupBy("bucket").applyInPandas(score, out_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -583,6 +583,25 @@ def test_connected_components_reliable_checkpoint_path(
     assert any(session_checkpoint_dir.rglob("*"))  # reliable files written
 
 
+def test_connected_components_deletes_superseded_checkpoints(
+    spark, session_checkpoint_dir
+):
+    """Under a session checkpoint directory, the pair materialization and
+    every superseded label generation are deleted as the loop moves on:
+    only the returned labels' checkpoint stays on disk."""
+    from ocr_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "id_a long, id_b long"
+    )
+    labels = connected_components(pairs)
+    kept = sorted(p for p in session_checkpoint_dir.rglob("rdd-*") if p.is_dir())
+    own = labels._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+    assert [p.name for p in kept] == [own.get().rsplit("/", 1)[-1]]
+    got = labels.collect()  # its own files are still there to read
+    assert len(got) == 201 and {r["cluster"] for r in got} == {0}
+
+
 def test_shared_session_has_no_checkpoint_dir(spark):
     """Runs after the reliable-checkpoint test: its fixture must leave
     the shared session on localCheckpoint."""

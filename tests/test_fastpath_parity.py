@@ -15,6 +15,9 @@ from __future__ import annotations
 import re
 from unittest import mock
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -581,3 +584,147 @@ def test_currency_rules_carry_probes_in_order():
         assert callable(rule.probe)
         assert rule.repl is not None
     assert not hasattr(D, "CURRENCY_PROBE")
+
+
+# ---------------------------------------------------------------------------
+# The batch gate: one RE2 scan stands for the T1, T3 and T4 probes.
+# ---------------------------------------------------------------------------
+
+
+def _gate_hits(texts):
+    folds = pa.array([T._probe_fold(t) for t in texts], pa.string())
+    return pc.match_substring_regex(folds, D.CORRECTION_GATE).to_pylist()
+
+
+def _dictionary_probes_pass(text):
+    """Whether any probe of T1, non-fuzzy T3 or T4 passes ``text``."""
+    low = T._probe_fold(text)
+    digit = D.HAS_DIGIT.search(text) is not None
+    return (
+        D.MULTI_WORD_PROBE.search(low) is not None
+        or D.PHRASE_KEY_PROBE.search(low) is not None
+        or D.DIGIT_GLUE_PROBE.search(low) is not None
+        or any(rule.probe(text, low, digit) for rule in D.CURRENCY_RULES)
+    )
+
+
+def test_gate_digit_arm_covers_every_sre_digit():
+    code_points = [chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    digits = [x for x in code_points if D.HAS_DIGIT.match(x)]
+    assert "\u0663" in digits and "\uff11" in digits
+    assert all(pc.match_substring_regex(pa.array(digits), r"\p{Nd}").to_pylist())
+    assert all(_gate_hits(digits))
+
+
+#: characters, ASCII and not, that may stand next to a phrase key
+_KEY_SIDES = ["", " ", "x", "_", "1", "-", "'", ".", "\u00e9", "\u00df", "\u0130", "\u0131",
+              "\u017f", "\u212a", "\u0663", "\uff11"]
+
+
+def _gate_corpus():
+    from test_core_digest import core_inputs
+
+    texts = _fold_corpus() + core_inputs() + [
+        "\u0130\u0131\u017f\u212a", "\u0663\u0664\u0665", "\uff11\uff19\uff17\uff11",
+        "x\u0663abc", "abc\uff12", "\u212aasm , nem", "\u017fukati\u0131",
+        "ma\u0130neh", "R\u0131bu", "\u0131I maret", "P\u0131H",
+    ]
+    # every rule fragment alone, so the digit-free probes are each tried
+    texts += [_mutate(f, bits) for f in _FRAGMENTS for bits in (0, 0x5555, 0xAAAA, 0xFFFF)]
+    for key in D.PHRASE_MAP:
+        for before in _KEY_SIDES:
+            texts += [before + key + after for after in _KEY_SIDES]
+            texts.append(before + key.upper())
+    return texts
+
+
+def test_gate_passes_wherever_a_dictionary_probe_does():
+    texts = _gate_corpus()
+    hits = _gate_hits(texts)
+    probed = [_dictionary_probes_pass(t) for t in texts]
+    assert [t for t, hit, p in zip(texts, hits, probed) if p and not hit] == []
+    # and it does skip text: most clean documents hold no probe hit
+    assert 0 < hits.count(False) < len(texts)
+
+
+# ---------------------------------------------------------------------------
+# extract_batch is extract_turn over a batch.
+# ---------------------------------------------------------------------------
+
+_BATCH_TEXTS = [None, "", "   ", "Dokumen arsip nasional tahun anggaran berjalan.",
+                "The quick brown fox jumps over the lazy dog."] + _ADVERSARIAL + _golden_inputs()
+_CONFIDENCES = [None, [], [0.91, 0.8], [85.0, 70.5, 99.0]]
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {},
+        {"use_spelling": False},
+        {"use_dictionary": False},
+        {"use_dictionary": False, "use_spelling": False},
+        {"fuzzy": True},
+        {"extra_kamus": frozenset({"arsip", "dokumen", "hasil", "the"})},
+    ],
+)
+@pytest.mark.parametrize("with_confidences", [False, True])
+def test_extract_batch_matches_extract_turn(kwargs, with_confidences):
+    texts = _BATCH_TEXTS
+    confs = [_CONFIDENCES[i % 4] for i in range(len(texts))] if with_confidences else None
+    got = T.extract_batch(texts, confs, **kwargs)
+    want = [
+        T.extract_turn(t, confidences=confs[i] if confs else None, **kwargs)
+        for i, t in enumerate(texts)
+    ]
+    assert got == want
+    # the batch holds turns the gate skips and turns it passes
+    hits = _gate_hits([t or "" for t in texts])
+    assert True in hits and False in hits
+
+
+def test_extract_batch_without_utf8_runs_every_turn():
+    texts = ["a\ud800 Rp.5OO,-- djalan", "Dokumen arsip", "\udfff"]
+    assert T._gate([T._probe_fold(t) for t in texts]) is None
+    assert T.extract_batch(texts) == [T.extract_turn(t) for t in texts]
+
+
+def _udf_rows(udf, *columns):
+    """The rows the UDF body returns for one batch of ``columns``."""
+    batch = columns[0] if len(columns) == 1 else columns
+    out = list(udf.func(iter([batch])))
+    assert len(out) == 1 and isinstance(out[0], pa.StructArray)
+    return out[0].to_pylist()
+
+
+def _as_rows(out):
+    return {**out, "spans": [dict(zip(("start", "end", "kind"), s)) for s in out["spans"]]}
+
+
+def test_udf_body_matches_extract_turn():
+    from ocr_spark.functions.udfs import make_extract_udf
+
+    texts = _BATCH_TEXTS
+    confs = [_CONFIDENCES[i % 4] for i in range(len(texts))]
+    want = [_as_rows(T.extract_turn(t)) for t in texts]
+    udf = make_extract_udf()
+    assert _udf_rows(udf, pa.array(texts, pa.string())) == want
+    # a pandas Series, as in-process profiling passes it
+    assert _udf_rows(udf, pd.Series(texts, dtype=object)) == want
+    want = [_as_rows(T.extract_turn(t, confidences=c or None)) for t, c in zip(texts, confs)]
+    got = _udf_rows(udf, pa.array(texts, pa.string()), pa.array(confs, pa.list_(pa.float64())))
+    assert got == want
+
+
+def test_content_udf_body_gates_the_stripped_content():
+    from ocr_spark.functions.blocks import extract_main_content
+    from ocr_spark.functions.udfs import make_extract_udf
+
+    nav = "Home | About | Contact\n\nCopyright 2024 All rights reserved\n\n"
+    texts = _BATCH_TEXTS + [nav + (t or "") for t in _BATCH_TEXTS]
+    want = []
+    for t in texts:
+        block = extract_main_content(t)
+        row = _as_rows(T.extract_turn(block["content_text"]))
+        row.update(block, content_spans=[{"start": s, "end": e} for s, e in block["content_spans"]])
+        want.append(row)
+    assert _udf_rows(make_extract_udf(content=True), pa.array(texts, pa.string())) == want

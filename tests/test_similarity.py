@@ -181,10 +181,10 @@ def test_embedding_near_dup_explicit_dim_matches_probed(vectors):
 
 def _self_join_pairs(bucketed, key, threshold, cap=None):
     """Reference near-dup pairs: a bucket SELF-JOIN on ``key`` over
-    (key, id, vd) rows, cosine from the package's JVM folds
-    (``dot``/``norm``, norms hoisted per row) rounded HALF_UP to 6 dp,
-    then the threshold and a distinct across buckets. Buckets with more
-    than ``cap`` members are dropped before the join."""
+    (key, id, vd) rows, raw cosine ``cos_raw`` from the package's JVM folds
+    (``dot``/``norm``, norms hoisted per row) and ``cos`` rounded HALF_UP
+    to 6 dp, then the threshold on ``cos`` and a distinct across buckets.
+    Buckets with more than ``cap`` members are dropped before the join."""
     from pyspark.sql import Window
 
     from ocr_spark.operators.similarity import dot, norm
@@ -199,19 +199,43 @@ def _self_join_pairs(bucketed, key, threshold, cap=None):
             .drop("_bs")
         )
     a, b = withn.alias("a"), withn.alias("b")
-    cos = F.round(
-        dot(F.col("a.vd"), F.col("b.vd")) / (F.col("a.n") * F.col("b.n")), 6
-    )
+    raw = dot(F.col("a.vd"), F.col("b.vd")) / (F.col("a.n") * F.col("b.n"))
     return (
         a.join(b, key)
         .filter(F.col("a.id") < F.col("b.id"))
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            cos.alias("cos"),
+            raw.alias("cos_raw"),
+            F.round(raw, 6).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
         .distinct()
+    )
+
+
+def _raw_pairs(pairs) -> list:
+    return sorted((r["id_a"], r["id_b"], r["cos_raw"]) for r in pairs.collect())
+
+
+def _cos_pairs(pairs) -> list:
+    return sorted((r["id_a"], r["id_b"], r["cos"]) for r in pairs.collect())
+
+
+def _grouped_raw_pairs(bucketed, key, threshold, cap=None):
+    """The grouped engine's raw cosines for the pairs ``_self_join_pairs``
+    keeps: its pair blocks before the 6-dp round, then that round's
+    threshold and a distinct."""
+    from ocr_spark.operators.similarity import _bucket_pair_blocks
+
+    blocks = _bucket_pair_blocks(
+        bucketed.withColumnRenamed(key, "bucket"),
+        bucketed.schema["id"].dataType,
+        threshold - 1e-6,
+        cap,
+    )
+    return _raw_pairs(
+        blocks.filter(F.round(F.col("cos_raw"), 6) >= threshold).distinct()
     )
 
 
@@ -220,7 +244,9 @@ def test_embedding_near_dup_grouped_matches_streamed_bitwise(vectors):
     self-join (:func:`_self_join_pairs`) BIT-for-bit — same pairs AND same
     cos doubles — including when the hot-bucket cap partially fires and
     across multiple tables (the sequential-over-dims numpy fold is the
-    same IEEE op sequence as the JVM zip_with/aggregate fold)."""
+    same IEEE op sequence as the JVM zip_with/aggregate fold). The raw
+    cosines are compared before the 6-dp round, which would hide an
+    ulp-level difference."""
     from ocr_spark.operators.similarity import sign_bucket
 
     df, byid = vectors
@@ -246,17 +272,11 @@ def test_embedding_near_dup_grouped_matches_streamed_bitwise(vectors):
             F.col("embedding").cast("array<double>").alias("vd"),
             F.explode(buckets).alias("bucket"),
         )
-        streamed = sorted(
-            (r["id_a"], r["id_b"], r["cos"])
-            for r in _self_join_pairs(
-                bucketed, "bucket", kw["threshold"], kw.get("max_bucket_size")
-            ).collect()
-        )
-        grouped = sorted(
-            (r["id_a"], r["id_b"], r["cos"])
-            for r in embedding_near_duplicates(df, **kw).collect()
-        )
-        assert grouped == streamed
+        cap = kw.get("max_bucket_size")
+        joined = _self_join_pairs(bucketed, "bucket", kw["threshold"], cap)
+        streamed = _raw_pairs(joined)
+        assert _grouped_raw_pairs(bucketed, "bucket", kw["threshold"], cap) == streamed
+        assert _cos_pairs(embedding_near_duplicates(df, **kw)) == _cos_pairs(joined)
         assert streamed  # the case must actually produce pairs
 
 
@@ -639,13 +659,11 @@ def test_semantic_dedup_grouped_matches_streamed(vectors, sem_centroids):
         (r.id_a, r.id_b, r.cos)
         for r in semantic_dedup_pairs(assigned, 0.5).collect()
     )
-    s = sorted(
-        (r.id_a, r.id_b, r.cos)
-        for r in _self_join_pairs(
-            assigned.filter(F.col("cell").isNotNull()), "cell", 0.5
-        ).collect()
-    )
-    assert g == s and len(g) > 0
+    cells = assigned.filter(F.col("cell").isNotNull()).select("cell", "id", "vd")
+    joined = _self_join_pairs(cells, "cell", 0.5)
+    assert g == _cos_pairs(joined) and len(g) > 0
+    # bit-identical before the 6-dp round too
+    assert _grouped_raw_pairs(cells, "cell", 0.5) == _raw_pairs(joined)
 
 
 def test_semantic_dedup_keep_far_rule(vectors, sem_centroids):

@@ -72,10 +72,12 @@ def run(
     """Check the gate queries (plus the extras when ``extended``) named in
     ``names`` (all when None) at ``sf``, printing one line per query.
 
-    Returns ``{name: {"rows", "hash", "sec", "engine_sec", "oracle",
-    "failure"}}``: ``hash`` is None for a rows-only query, ``sec`` times
-    the comparison collect(), ``engine_sec`` a count() of the same plan
-    (None unless ``engine_time``), and ``failure`` is None on a pass.
+    Returns ``{name: {"rows", "hash", "sec", "engine_sec", "oracle_sec",
+    "oracle", "failure"}}``: ``hash`` is None for a rows-only query,
+    ``sec`` times the comparison collect(), ``engine_sec`` a count() of the
+    same plan (None unless ``engine_time``), ``oracle_sec`` the DuckDB
+    oracle's execute and fetch (None for a rows-only query or when it
+    raised), and ``failure`` is None on a pass.
     """
     import duckdb
 
@@ -115,7 +117,7 @@ def run(
             continue
         res = results[name] = {
             "rows": None, "hash": None, "sec": None, "engine_sec": None,
-            "oracle": name in oracles, "failure": None,
+            "oracle_sec": None, "oracle": name in oracles, "failure": None,
         }
         t0 = time.monotonic()
         try:
@@ -158,6 +160,7 @@ def run(
                 print(f"     WARNING {name} returned 0 rows")
             continue
         try:
+            to = time.monotonic()
             out = con.execute(oracles[name])
             ocols = [d[0] for d in out.description]
             orows = out.fetchall()
@@ -165,6 +168,8 @@ def run(
             res["failure"] = f"duckdb error: {_describe(e)}"
             print(f"FAIL {name}: {res['failure']}")
             continue
+        res["oracle_sec"] = time.monotonic() - to
+        suffix += f", oracle {res['oracle_sec']:.1f}s"
         sh, oh = value_hash(cols, rows), value_hash(ocols, orows)
         res["hash"] = sh
         if sorted(cols) != sorted(ocols):
@@ -177,7 +182,7 @@ def run(
             print(f"PASS {name}: {len(rows)} rows, hash {sh} "
                   f"({res['sec']:.1f}s{suffix})")
             continue
-        print(f"FAIL {name}: {res['failure']}")
+        print(f"FAIL {name}: {res['failure']} ({res['sec']:.1f}s{suffix})")
         if res["failure"].startswith("value hash"):
             o = sorted(range(len(cols)), key=lambda i: cols[i])
             srepr = sorted("\x1f".join(_canon(r[i]) for i in o) for r in rows)
