@@ -52,7 +52,7 @@ def _force(df) -> int:
 
 def main() -> int:
     import __spark_entry__ as entrymod
-    from ocr_spark.session import DEFAULT_CPUS, get_spark
+    from ocr_spark.session import DEFAULT_CPUS, get_spark, read_parquet
 
     spark = get_spark("ocr-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -132,7 +132,7 @@ def main() -> int:
     times["flagship_extract"] = round(statistics.median(flag[-3:]), 3)
 
     # the north metric: end-to-end turns/sec of the flagship extraction
-    n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
+    n_docs = read_parquet(spark, f"{SF_DIR}/documents.parquet").count()
     turns_per_sec = round(n_docs / times["flagship_extract"], 1)
 
     # cap-drop counters: the hot-key caps trade recall for bounded fan-out

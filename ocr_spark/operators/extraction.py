@@ -34,6 +34,32 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 1
     return df.repartition(num_partitions, F.col("conv_id"), salt)
 
 
+def _with_fields(df: DataFrame, tmp: str, struct: Column, names: list[str]) -> DataFrame:
+    """``df`` with the fields ``names`` of ``struct`` as columns, projected
+    in one ``select`` over ``struct`` held in the column ``tmp``: the
+    columns and order that ``withColumn(tmp, struct)``, a ``withColumn``
+    per field and ``drop(tmp)`` give. A field that shares its name with
+    input columns (by the session's name resolution) takes their places;
+    the others follow in order; an input column named ``tmp`` is
+    dropped."""
+    if df.sparkSession.conf.get("spark.sql.caseSensitive") == "true":
+        key = str
+    else:
+        key = str.lower
+    fields = {key(n): n for n in names}
+    inputs = df.columns
+    cols = []
+    for c in inputs:
+        name = fields.get(key(c))
+        if name is not None:
+            cols.append(F.col(f"{tmp}.{name}").alias(name))
+        elif key(c) != key(tmp):
+            cols.append(F.col("`" + c.replace("`", "``") + "`"))
+    taken = {key(c) for c in inputs}
+    cols += [F.col(f"{tmp}.{n}").alias(n) for n in names if key(n) not in taken]
+    return df.withColumn(tmp, struct).select(cols)
+
+
 def extract_turns(
     df: DataFrame,
     text_col: str = "text",
@@ -47,10 +73,7 @@ def extract_turns(
     the epoch snapshot of approved learned words (affects unknown-word
     tracking, dictionary-match scoring, and the fuzzy candidate set)."""
     udf = make_extract_udf(use_dictionary, use_spelling, fuzzy, extra_kamus)
-    out = df.withColumn("_x", udf(F.col(text_col)))
-    for name in OUTPUT_COLUMNS:
-        out = out.withColumn(name, F.col(f"_x.{name}"))
-    return out.drop("_x")
+    return _with_fields(df, "_x", udf(F.col(text_col)), OUTPUT_COLUMNS)
 
 
 #: columns added by extract_content_turns (fused pipeline)
@@ -72,10 +95,7 @@ def extract_content_turns(
     JVM). Narrow, no shuffle; equals strip_boilerplate→extract_turns
     column-for-column (tested)."""
     udf = make_extract_udf(use_dictionary, use_spelling, fuzzy, extra_kamus, content=True)
-    out = df.withColumn("_cx", udf(F.col(text_col)))
-    for name in CONTENT_EXTRACT_COLUMNS:
-        out = out.withColumn(name, F.col(f"_cx.{name}"))
-    return out.drop("_cx")
+    return _with_fields(df, "_cx", udf(F.col(text_col)), CONTENT_EXTRACT_COLUMNS)
 
 
 def page_header(idx: Column) -> Column:

@@ -24,6 +24,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.session import read_parquet
+
 
 def _as_double(col: Column | str) -> Column:
     return F.col(col).cast("array<double>") if isinstance(col, str) else col.cast(
@@ -803,7 +805,7 @@ def ivf_topk_indexed(
     PartitionFilters), so non-probed cells are never opened. Identical
     results to the on-the-fly variant with the same centroids."""
     probes = ivf_probe_cells(query_vec, centroids, nprobe)
-    pruned = spark.read.parquet(path).filter(F.col("cell").isin(probes))
+    pruned = read_parquet(spark, path).filter(F.col("cell").isin(probes))
     return cosine_topk(pruned, query_vec, k, id_col, vec_col)
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.extraction import extract_turns, salted_repartition
+from ocr_spark.session import read_parquet
 
 INPUT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
@@ -85,7 +86,7 @@ class ExtractionJob:
         path = str(live_snapshot(path, what) or require_local_path(path, what))
         try:
             rows = (
-                self.spark.read.parquet(path)
+                read_parquet(self.spark, path)
                 .filter("is_approved")
                 .select("word")
                 .collect()
@@ -160,7 +161,7 @@ class ExtractionJob:
 
     def run_group(self, k: int, files: list[str]) -> dict:
         t0 = time.monotonic()
-        df = self.spark.read.parquet(*files).select(*self.columns)
+        df = read_parquet(self.spark, *files).select(*self.columns)
         if self.salt_buckets > 0:
             df = salted_repartition(
                 df, self.partitions_per_group, self.salt_buckets

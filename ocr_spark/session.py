@@ -12,13 +12,18 @@ A local session is sized to the machine it starts on: one task slot per CPU
 this process may run on, and a driver heap of a third of the memory it can
 see, at most 8 GB, so that two sessions fit beside each other.
 ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY`` override the two.
+
+Plain parquet reads in the package go through :func:`read_parquet`, which
+infers a file's schema once and hands it to later reads of the same file.
 """
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark import SparkConf, SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ocr_spark._daemon import VERSION_ENV
 
@@ -124,6 +129,13 @@ def get_spark(
             "-Xms" + heap + " -XX:+AlwaysPreTouch",
         )
         .set("spark.ui.enabled", "false")
+        # no Python call-site capture: with it on, every Column function
+        # records its caller's file:line in the JVM (about five py4j round
+        # trips each), which slows every plan the driver builds. A DataFrame
+        # error then lacks that file:line in its context; the error itself
+        # is unchanged. PySpark reads this once, at the first Column call,
+        # so it must be in the conf the session starts with
+        .set("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         conf.set(k, v)
@@ -141,3 +153,51 @@ def get_spark(
         conf.set("spark.python.daemon.module", "ocr_spark._daemon")
         conf.set(f"spark.executorEnv.{VERSION_ENV}", jvm.org.apache.spark.package.SPARK_VERSION())
     return SparkSession.builder.config(conf=conf).getOrCreate()
+
+
+#: the session settings Spark 4.1's parquet schema inference reads
+#: (``ParquetFileFormat.inferSchema`` and ``ParquetToSparkSchemaConverter``)
+SCHEMA_SETTINGS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.variant.allowReadingShredded",
+)
+
+_schemas: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)``, without a Spark job on a re-read.
+
+    Spark infers a parquet schema with a job that reads the footers. When
+    every path is a regular file, the inferred schema is kept under the
+    files' resolved paths, device, inode, size and mtime, and the
+    session's values of :data:`SCHEMA_SETTINGS`; a later read with the
+    same key passes it to ``spark.read.schema``. A rewritten file or a
+    changed setting misses and is inferred again. Directories and
+    anything else pass straight through."""
+    files = []
+    for p in paths:
+        real = os.path.realpath(p)
+        try:
+            st = os.stat(real)
+        except OSError:
+            return spark.read.parquet(*paths)
+        if not stat.S_ISREG(st.st_mode):
+            return spark.read.parquet(*paths)
+        files.append((real, st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns))
+    key = (tuple(files), tuple(spark.conf.get(k) for k in SCHEMA_SETTINGS))
+    schema = _schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    _schemas[key] = df.schema
+    return df

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ocr_spark.plans.job import INPUT_COLUMNS
+from ocr_spark.session import read_parquet
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -296,7 +297,7 @@ def read_learned_table(spark: SparkSession, learned_table_path: str) -> DataFram
     """The live snapshot of a versioned learned table; None when no
     snapshot has been committed yet."""
     snapshot = live_snapshot(learned_table_path, "learned table root")
-    return None if snapshot is None else spark.read.parquet(str(snapshot))
+    return None if snapshot is None else read_parquet(spark, str(snapshot))
 
 
 def commit_snapshot(
@@ -374,7 +375,7 @@ def update_learned_table(
     executors (no collect)."""
 
     def build(snapshot, version, tmp):
-        live = spark.read.parquet(str(snapshot)) if snapshot else None
+        live = read_parquet(spark, str(snapshot)) if snapshot else None
         derive(live).write.mode("overwrite").parquet(str(tmp))
 
     return commit_snapshot(path, build, batch_id)

@@ -47,10 +47,10 @@ def main() -> int:
         derive_ivf_params,
         train_ivf_centroids,
     )
-    from ocr_spark.session import get_spark
+    from ocr_spark.session import get_spark, read_parquet
 
     spark = get_spark(app_name="train_ivf")
-    emb = spark.read.parquet(f"{args.sf}/embeddings.parquet")
+    emb = read_parquet(spark, f"{args.sf}/embeddings.parquet")
     n_rows = emb.count()
     derived = derive_ivf_params(n_rows)
     n_cells = args.cells if args.cells is not None else derived["n_cells"]
